@@ -591,23 +591,23 @@ def _q_kg_edges_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_kg_edges_resumed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S5/P2/P3/W6 — kill the checkpointed pipeline after its mentions stage,
+    """S5/P2/P3/W6 — kill the checkpointed pipeline after its edges stage,
     then resume into the same catalog; the persisted edge table after the
     resumed run must hash-match the batch kg_edges oracle, and the resume
-    must be a true skip (zero mentions buckets recomputed), not a re-run
+    must be a true skip (zero edges buckets recomputed), not a re-run
     (ref resume gate: indexer/indexer.go:161-164 mod-time + content-hash)."""
 
     def go(base: str) -> DataFrame:
         t = load_transcripts(spark, sf_dir)
         d = alias_dict_df(spark)
         try:
-            pipeline.run(spark, t, d, base, fail_after="mentions")
+            pipeline.run(spark, t, d, base, fail_after="edges")
         except pipeline.InjectedFailure:
             pass
         res = pipeline.run(spark, t, d, base)
-        if res.counters["mentions_buckets_pending"] != 0:
+        if res.counters["edges_buckets_pending"] != 0:
             raise AssertionError(
-                "resume recomputed mentions buckets instead of skipping them"
+                "resume recomputed edges buckets instead of skipping them"
             )
         return res.edges.select(
             "subj", "pred", "obj", "conv_id", "turn_idx", "weight"

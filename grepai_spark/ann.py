@@ -176,8 +176,8 @@ def cosine_vs_query_sql(
     partition-pruned row counts where a second ~190-node unrolled tree cost
     more per call than the interpreted fold did per row (measured 0.194 s
     unroll-both vs 0.130 s mixed vs 0.112 s fold-both on the sf0.1 LSH
-    store). Pair-join paths, whose row counts are quadratic, unroll both
-    sides (pair_dot_sql)."""
+    store). Pair-join paths fold both sides too: pair_dot_sql's
+    zip_with/aggregate form (its docstring has the F5 rationale)."""
     d = dot_sql(vec_col, query_vec, dialect)
     qn = sum(x * x for x in query_vec) ** 0.5
     sq = dot_sql_self(vec_col, dialect)
@@ -207,7 +207,7 @@ def dot_sql_self(
     return f"list_dot_product(CAST({vec_col} AS DOUBLE[]), CAST({vec_col} AS DOUBLE[]))"
 
 
-def pair_dot_sql(a: str, b: str, dim: int) -> str:
+def pair_dot_sql(a: str, b: str) -> str:
     """Dot product of two array columns as the zip_with/aggregate fold.
 
     This site was unrolled to a dim-term codegen chain earlier in r7
@@ -218,9 +218,8 @@ def pair_dot_sql(a: str, b: str, dim: int) -> str:
     isolated), while the unroll's ~10x larger generated source is exactly
     the C2 JIT-warmup surface F5 diagnosed — with it, 2 of 4 certified
     bench sessions drew the verify at 5-6 s; fold-only drew 2.2-2.5 s in
-    every session. `dim` stays in the signature for call-site stability.
+    every session.
     """
-    del dim
     return (
         f"aggregate(zip_with(CAST({a} AS array<double>),"
         f" CAST({b} AS array<double>),"
@@ -433,9 +432,9 @@ def near_dup_cosine_pairs(
         F.col(id_col).alias("b_id"),
         F.col(vec_col).alias("vb"),
     )
-    # unrolled pair dot (r7): the per-candidate fold was the dominant cost —
-    # O(candidate pairs x dim) interpreted lambda steps; this stays in codegen
-    dot = F.expr(pair_dot_sql("va", "vb", EMBED_TABLE_DIM))
+    # pair dot as the zip_with/aggregate fold; why not the unrolled chain
+    # (F5 JIT warmup) is in pair_dot_sql's docstring
+    dot = F.expr(pair_dot_sql("va", "vb"))
     na = F.sqrt(F.expr(dot_sql_self("va", dim=EMBED_TABLE_DIM)))
     nb = F.sqrt(F.expr(dot_sql_self("vb", dim=EMBED_TABLE_DIM)))
     cos = dot / (na * nb)
@@ -537,9 +536,9 @@ def near_dup_lsh_pairs(
         F.col("v").alias("vb"),
         F.col("nv").alias("nb"),
     )
-    # unrolled pair dot (r7): ~2M candidate pairs x 64 interpreted fold steps
-    # was ~3.0 s of the sf0.1 wall; the codegen chain is the same arithmetic
-    dot = F.expr(pair_dot_sql("va", "vb", EMBED_TABLE_DIM))
+    # pair dot as the zip_with/aggregate fold; why not the unrolled chain
+    # (F5 JIT warmup) is in pair_dot_sql's docstring
+    dot = F.expr(pair_dot_sql("va", "vb"))
     cos = dot / (F.col("na") * F.col("nb"))
     return (
         a.join(c, ["set_id", "bkt"])

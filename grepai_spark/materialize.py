@@ -1,56 +1,16 @@
-"""Stage 4 — MATERIALIZE: canonical vertices + (subj, pred, obj) edges.
+"""Stage 4 — MATERIALIZE: canonical vertices + derived graph edges.
 
-Analog of the reference's save-time CallEdge construction
-(/root/reference/trace/store.go:194-204) and RPG node/edge persist
-(/root/reference/rpg/indexer.go:78-240), re-expressed as two DataFrames
-written to partitioned tables.
+Analog of the reference's RPG node/edge persist (rpg/indexer.go:78-240):
+one vertex row per canonical entity, plus the conversation- and tool-level
+edges derived from the per-turn triples. The per-turn (subj, pred, obj)
+triples themselves come from the fused edge map
+(pipeline.kg_edges_from_map).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def mention_triples(
-    linked_mentions: DataFrame, canonical_map: DataFrame
-) -> DataFrame:
-    """(role)-[:mentions]->(entity) per linked in-text entity mention;
-    (role)-[:does]->(action) for action-kind mentions (agent actions).
-
-    canonical_map is tiny (dictionary-sized) -> broadcast join; the big
-    mentions side never shuffles.
-    """
-    cmap = F.broadcast(canonical_map)
-    return (
-        linked_mentions.where(F.col("canonical_id").isNotNull())
-        .join(cmap, "canonical_id")
-        .select(
-            F.col("role").alias("subj"),
-            F.when(F.col("kind") == "action", "does")
-            .otherwise("mentions")
-            .alias("pred"),
-            F.col("entity_id").alias("obj"),
-            "conv_id",
-            "turn_idx",
-            F.lit(1.0).cast("float").alias("weight"),
-        )
-        .dropDuplicates(["subj", "pred", "obj", "conv_id", "turn_idx"])
-    )
-
-
-def build_edges(
-    call_triples: DataFrame, mention_triples: DataFrame
-) -> DataFrame:
-    """Union of the two branches WITHOUT a final dropDuplicates: the key set
-    (subj, pred, obj, conv_id, turn_idx) is already unique — call triples are
-    one-per-turn by construction (transcripts are keyed by (conv_id,
-    turn_idx)), mention triples dedup internally, and the branches cannot
-    collide because their pred domains are disjoint (calls vs mentions/does).
-    A final dedup would shuffle the ENTIRE edge set again for nothing — at
-    10^12 turns that is the single largest avoidable shuffle in the pipeline.
-    """
-    return call_triples.unionByName(mention_triples)
 
 
 def build_vertices(
@@ -75,7 +35,7 @@ CONV_COMENTION_CAP_FACTOR = 2.0  # hub = fan-out above 2x the median fan-out
 
 
 def conv_comention_edges(
-    mention_triples: DataFrame,
+    edges: DataFrame,
     hub_cap_min: int = CONV_COMENTION_CAP_MIN,
     hub_cap_factor: float = CONV_COMENTION_CAP_FACTOR,
 ) -> DataFrame:
@@ -97,7 +57,7 @@ def conv_comention_edges(
     back as a scalar).
     """
     per_conv = (
-        mention_triples.where(F.col("pred") == "mentions")
+        edges.where(F.col("pred") == "mentions")
         .select(F.col("obj").alias("entity"), "conv_id")
         .distinct()
     )

@@ -6,9 +6,14 @@ analog of the reference's full index build
 (Indexer.IndexAll -> trace extract -> RPG BuildFull,
 /root/reference/cli/watch.go:750-860, indexer/indexer.go:94).
 
-Stage boundaries = shuffle boundaries; every stage's output merges into a
-bucket-partitioned table so re-running overwrites exactly the recomputed
-buckets (Iceberg: overwritePartitions).
+There is ONE edge derivation. LINK + CANON are dictionary-scale and collapse
+to an alias -> (pred, entity_id) map on the driver (:func:`alias_entity_map`,
+memoized per dictionary version); EXTRACT + MATERIALIZE are then one narrow
+map over transcripts (:func:`kg_edges_from_map`). The flagship query
+(:func:`kg_edges_df`), the streaming sink and the resumable :func:`run` all
+use it; :func:`run` applies it to the pending buckets only and merges the
+result into a bucket-partitioned table, so re-running overwrites exactly the
+recomputed buckets (Iceberg: overwritePartitions).
 """
 
 from __future__ import annotations
@@ -19,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from grepai_spark import cc, extract, link, lineage, materialize
+from grepai_spark.dimcache import attach_rows, attached_rows, cached_rows
 from grepai_spark.storage import Catalog
 
 
@@ -43,9 +49,9 @@ def kg_edges_df(
     edges from the UDF (per-turn distinct inside the batch), one explode —
     no shuffle anywhere and a single scan. The only exchange the previous
     shape had (dropDuplicates over all mention triples) was a within-turn
-    dedup in disguise; fusing it into the UDF removes it entirely. The
-    bucketed, lineage-checkpointed variant of the same stages lives in
-    :func:`run` (the resumable path).
+    dedup in disguise; fusing it into the UDF removes it entirely.
+    :func:`run` writes the same map over its pending buckets, so the
+    resumable path and this query emit identical rows.
     """
     return kg_edges_from_map(
         transcripts, alias_entity_map(alias_dict, use_lsh)
@@ -60,98 +66,63 @@ def kg_edges_df(
 # fraction. The reference equivalently LOADS its persisted symbol maps
 # instead of re-indexing (rpg/persistence.go). Values are plain dicts (no
 # Spark handles), so entries stay valid across sessions in one process.
-_AMAP_MEMO: dict[tuple[int, int, bool], dict[str, tuple[str, str]]] = {}
+_AMAP_MEMO: dict[tuple[int, str, bool], dict[str, tuple[str, str]]] = {}
 
 
-# dictionaries up to this size resolve the map fully on the driver (the
-# dictionary is a collectable broadcast-side dimension by design; the old
-# path collected it wholesale anyway for the detector broadcast)
-_SMALL_DICT_ROWS = 100_000
+def _canonical_map(alias_dict: DataFrame, use_lsh: bool) -> DataFrame:
+    """LINK + CANON: similarity edges (blocked or LSH Jaccard) ->
+    cc.canonical_map. The one canonicalization every derivation shares."""
+    sim = (
+        link.alias_similarity_edges_lsh(alias_dict)
+        if use_lsh
+        else link.alias_similarity_edges(alias_dict)
+    )
+    return cc.canonical_map(alias_dict, sim)
+
+
+def _entity_map(
+    alias_dict: DataFrame, cmap: DataFrame
+) -> dict[str, tuple[str, str]]:
+    """alias -> (pred, entity_id) for entity/action aliases: the dictionary
+    joined to its canonical map on the driver (both sides are
+    dictionary-scale; the result is broadcast to the edge detector anyway).
+    Job-free when the canonical map's rows are attached (dimcache)."""
+    entity = dict(cached_rows(cmap))
+    return {
+        r["alias"]: (
+            "does" if r["kind"] == "action" else "mentions",
+            entity[r["canonical_id"]],
+        )
+        for r in cached_rows(alias_dict)
+        if r["kind"] in ("entity", "action")
+    }
 
 
 def alias_entity_map(
     alias_dict: DataFrame, use_lsh: bool = False
 ) -> dict[str, tuple[str, str]]:
     """alias -> (pred, entity_id): the dictionary-scale product of linking +
-    canonicalization, computed ONCE per run/dictionary version (memoized on
-    a content signature across calls) and shipped to executors via
+    canonicalization, computed ONCE per dictionary version (memoized on a
+    content signature across calls) and shipped to executors via
     SparkContext.broadcast (inside make_edge_detector) — the reference's
     in-memory symbol maps (rpg/indexer.go:527).
 
-    r7: for collectable dictionaries the signature is hashed on the driver
-    from ONE limit-collect (the previous per-call signature was its own
-    aggregate job — pure serial overhead on every kg_edges derivation), and
-    on a memo miss the final alias->entity join happens driver-side too.
+    The dictionary is a collectable broadcast-side dimension (dimcache), so
+    the signature is a sha256 over the rows already in hand — no Spark job.
+    Linking and CC pick their own driver/distributed regime by size.
     """
     import hashlib
 
-    from grepai_spark.dimcache import cached_rows
-
     rows = cached_rows(alias_dict)
-    if len(rows) <= _SMALL_DICT_ROWS:
-        h = hashlib.sha256()
-        for r in sorted(
-            (r["alias"], r["canonical_id"], r["kind"]) for r in rows
-        ):
-            h.update("\x01".join(r).encode())
-            h.update(b"\x00")
-        key = (len(rows), h.hexdigest(), use_lsh)
-        cached = _AMAP_MEMO.get(key)
-        if cached is not None:
-            return cached
-        sim = (
-            link.alias_similarity_edges_lsh(alias_dict)
-            if use_lsh
-            else link.alias_similarity_edges(alias_dict)
-        )
-        cdict = {
-            r[0]: r[1]
-            for r in cached_rows(cc.canonical_map(alias_dict, sim))
-        }
-        amap = {
-            r["alias"]: (
-                "does" if r["kind"] == "action" else "mentions",
-                cdict[r["canonical_id"]],
-            )
-            for r in rows
-            if r["kind"] in ("entity", "action")
-        }
+    h = hashlib.sha256()
+    for r in sorted((r["alias"], r["canonical_id"], r["kind"]) for r in rows):
+        h.update("\x01".join(r).encode())
+        h.update(b"\x00")
+    key = (len(rows), h.hexdigest(), use_lsh)
+    amap = _AMAP_MEMO.get(key)
+    if amap is None:
+        amap = _entity_map(alias_dict, _canonical_map(alias_dict, use_lsh))
         _AMAP_MEMO[key] = amap
-        return amap
-
-    # large-dictionary regime: order-insensitive content signature; mod a
-    # prime keeps the ANSI-mode sum overflow-free (same discipline as
-    # lineage.bucket_content_hashes)
-    sig = alias_dict.agg(
-        F.count("*").alias("n"),
-        F.sum(
-            F.xxhash64("alias", "canonical_id", "kind") % F.lit(1_000_000_007)
-        ).alias("h"),
-    ).first()
-    key = (sig["n"], sig["h"], use_lsh)
-    cached = _AMAP_MEMO.get(key)
-    if cached is not None:
-        return cached
-    sim = (
-        link.alias_similarity_edges_lsh(alias_dict)
-        if use_lsh
-        else link.alias_similarity_edges(alias_dict)
-    )
-    cmap = cc.canonical_map(alias_dict, sim)
-    rows = (
-        alias_dict.where(F.col("kind").isin("entity", "action"))
-        .join(cmap, "canonical_id")
-        .select("alias", "kind", "entity_id")
-        .collect()
-    )
-    amap = {
-        r["alias"]: (
-            "does" if r["kind"] == "action" else "mentions",
-            r["entity_id"],
-        )
-        for r in rows
-    }
-    _AMAP_MEMO[key] = amap
     return amap
 
 
@@ -184,9 +155,9 @@ def kg_edges_from_map(
 def kg_vertices_df(
     spark: SparkSession, alias_dict: DataFrame
 ) -> DataFrame:
-    sim = link.alias_similarity_edges(alias_dict)
-    cmap = cc.canonical_map(alias_dict, sim)
-    return materialize.build_vertices(alias_dict, cmap)
+    return materialize.build_vertices(
+        alias_dict, _canonical_map(alias_dict, use_lsh=False)
+    )
 
 
 @dataclass
@@ -212,38 +183,7 @@ def run(
     tb = lineage.with_bucket(transcripts, n_buckets)
     hashes = lineage.bucket_content_hashes(tb).localCheckpoint(eager=True)
 
-    # ---- stage: mentions (extract + exact link), per-bucket resumable ------
-    pending = lineage.pending_buckets(catalog, "mentions", hashes)
-    pending_ids = [r["bucket"] for r in pending.select("bucket").collect()]
-    counters["mentions_buckets_pending"] = len(pending_ids)
-    if pending_ids:
-        sub = tb.where(F.col("bucket").isin(pending_ids))
-        mentions = extract.detect_mentions(sub, alias_dict)
-        linked = link.link_mentions_exact(mentions, alias_dict)
-        linked = lineage.with_bucket(linked, n_buckets)
-        catalog.merge_by_key(
-            "mentions_linked",
-            linked.select(
-                "bucket",
-                "conv_id",
-                "turn_idx",
-                "role",
-                "mention",
-                "pos",
-                "kind",
-                "canonical_id",
-            ),
-            ["bucket"],
-            partition_by=["bucket"],
-        )
-        out_counts = linked.groupBy("bucket").agg(
-            F.count("*").alias("rows_out")
-        )
-        lineage.mark_done(catalog, "mentions", pending, out_counts)
-    if fail_after == "mentions":
-        raise InjectedFailure("killed after mentions stage")
-
-    # ---- stage 1b: embeddings (content-hash cached), per-bucket resumable --
+    # ---- stage: embeddings (content-hash cached), per-bucket resumable -----
     if embed:
         from grepai_spark import embed as embed_mod
 
@@ -282,28 +222,24 @@ def run(
         raise InjectedFailure("killed after embed stage")
 
     # ---- stage: canonicalization (dictionary-level, cheap, global) ---------
-    sim = (
-        link.alias_similarity_edges_lsh(alias_dict)
-        if use_lsh
-        else link.alias_similarity_edges(alias_dict)
-    )
-    cmap = cc.canonical_map(alias_dict, sim).localCheckpoint(eager=True)
+    cmap = _canonical_map(alias_dict, use_lsh)
+    # the small regime attached its rows to this handle; carry them across
+    # the checkpoint so the edges stage builds its alias map with no job
+    cmap_rows = attached_rows(cmap)
+    cmap = cmap.localCheckpoint(eager=True)
+    if cmap_rows is not None:
+        attach_rows(cmap, cmap_rows)
     counters["canonical_entities"] = cmap.select("entity_id").distinct().count()
     if fail_after == "canonicalize":
         raise InjectedFailure("killed after canonicalize stage")
 
-    # ---- stage: edges (materialize), per-bucket resumable ------------------
+    # ---- stage: edges (extract + link + materialize, fused), per bucket ----
     pending_e = lineage.pending_buckets(catalog, "edges", hashes)
     pending_e_ids = [r["bucket"] for r in pending_e.select("bucket").collect()]
     counters["edges_buckets_pending"] = len(pending_e_ids)
     if pending_e_ids:
         sub = tb.where(F.col("bucket").isin(pending_e_ids))
-        calls = extract.call_triples(sub)
-        ml = catalog.read("mentions_linked").where(
-            F.col("bucket").isin(pending_e_ids)
-        )
-        ment = materialize.mention_triples(ml, cmap)
-        edges = materialize.build_edges(calls, ment)
+        edges = kg_edges_from_map(sub, _entity_map(alias_dict, cmap))
         edges_b = lineage.with_bucket(edges, n_buckets)
         catalog.merge_by_key(
             "edges",
@@ -326,6 +262,8 @@ def run(
         stores.build_graph_artifacts(
             catalog, catalog.read("edges").drop("bucket")
         )
+    if fail_after == "edges":
+        raise InjectedFailure("killed after edges stage")
 
     # ---- stage: vertices (global, dictionary-scale) -------------------------
     vertices = materialize.build_vertices(alias_dict, cmap)

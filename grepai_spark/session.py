@@ -63,9 +63,11 @@ def get_spark(
         # accumulated compiler time per 6 passes, class loading flat, GC
         # <14 s — so warmup, not caching or collection). Splitting at 256
         # restores compile-friendly method sizes: full frozen-bench A/B on
-        # that host read 257k/254k turns/sec vs 238k unmitigated, with
-        # EVERY per-query wall improved (near-dup LSH 18.9 -> 2.2/2.3 s).
-        # Scale-independent: bounds generated-code method size, not data.
+        # that host (Spark 4.1.2) read 257k/254k turns/sec vs 238k
+        # unmitigated, with EVERY per-query wall improved (near-dup LSH
+        # 18.9 -> 2.2/2.3 s). Scale-independent: bounds generated-code
+        # method size, not data. Both codegen confs are internal, so
+        # tests/test_session.py asserts the session reports them.
         .config("spark.sql.codegen.methodSplitThreshold", "256")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

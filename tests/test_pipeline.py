@@ -16,23 +16,31 @@ def _triple_set(edges_df):
     }
 
 
+def _edge_rows(edges_df):
+    return sorted(
+        (r.subj, r.pred, r.obj, r.conv_id, r.turn_idx, r.weight)
+        for r in edges_df.collect()
+    )
+
+
 def _golden(transcripts_df):
     rows = [r.asDict() for r in transcripts_df.collect()]
     return golden_triples(rows, ALIAS_ROWS)
 
 
 def test_pipeline_pr_on_sf0001(spark, sf_transcripts, tmp_path):
-    res = pipeline.run(
-        spark,
-        sf_transcripts,
-        alias_dict_df(spark),
-        str(tmp_path / "out"),
-    )
+    d = alias_dict_df(spark)
+    res = pipeline.run(spark, sf_transcripts, d, str(tmp_path / "out"))
     got = _triple_set(res.edges)
     want = _golden(sf_transcripts)
     p, r = precision_recall(got, want)
     assert p >= 0.95 and r >= 0.95, (p, r)
     assert p == 1.0 and r == 1.0  # clean fixture: must be exact
+    # one edge derivation: the resumable run writes exactly the rows of the
+    # fused flagship query, weight included
+    assert _edge_rows(res.edges) == _edge_rows(
+        pipeline.kg_edges_df(spark, sf_transcripts, d)
+    )
     # vertices: QueryParserFast merged away by CC
     v = {row.entity_id for row in res.vertices.collect()}
     assert "e_parse_query" in v and "e_query_parser_fast" not in v
@@ -46,10 +54,10 @@ def test_pipeline_resume_after_kill(spark, tiny_transcripts, tmp_path):
     want = _triple_set(clean.edges)
 
     with pytest.raises(pipeline.InjectedFailure):
-        pipeline.run(spark, tiny_transcripts, d, out, fail_after="mentions")
+        pipeline.run(spark, tiny_transcripts, d, out, fail_after="edges")
     res = pipeline.run(spark, tiny_transcripts, d, out)
-    # resume skipped the already-done mentions buckets
-    assert res.counters["mentions_buckets_pending"] == 0
+    # resume skipped the already-done edges buckets
+    assert res.counters["edges_buckets_pending"] == 0
     assert _triple_set(res.edges) == want
 
 
@@ -58,7 +66,6 @@ def test_pipeline_rerun_noop(spark, tiny_transcripts, tmp_path):
     d = alias_dict_df(spark)
     r1 = pipeline.run(spark, tiny_transcripts, d, out)
     r2 = pipeline.run(spark, tiny_transcripts, d, out)
-    assert r2.counters["mentions_buckets_pending"] == 0
     assert r2.counters["edges_buckets_pending"] == 0
     assert _triple_set(r1.edges) == _triple_set(r2.edges)
 
@@ -70,6 +77,47 @@ def test_pipeline_lsh_variant_same_output(spark, tiny_transcripts, tmp_path):
         spark, tiny_transcripts, d, str(tmp_path / "b"), use_lsh=True
     )
     assert _triple_set(a.edges) == _triple_set(b.edges)
+
+
+@pytest.mark.parametrize("use_lsh", [False, True])
+def test_alias_entity_map_same_in_distributed_regimes(
+    spark, monkeypatch, use_lsh
+):
+    """The one alias-map tail gives the same map whether linking and CC ran
+    on the driver (default for this dictionary) or distributed."""
+    from grepai_spark import cc, link
+
+    d = alias_dict_df(spark)
+    want = pipeline.alias_entity_map(d, use_lsh)
+    monkeypatch.setattr(link, "SMALL_DICT_ROWS", 0)
+    monkeypatch.setattr(cc, "SMALL_DICT_ROWS", 0)
+    monkeypatch.setattr(pipeline, "_AMAP_MEMO", {})
+    got = pipeline.alias_entity_map(d, use_lsh)
+    assert got == want
+    assert got is not want  # recomputed, not served from the memo
+
+
+def test_pipeline_null_text_and_tool(spark, tmp_path):
+    """Null or empty text/tool degrade to "no edge from that column": a
+    tool with null text is one calls edge, a null-tool turn still yields
+    its mentions, and turns with neither yield nothing."""
+    import datetime
+
+    from grepai_spark.schemas import TRANSCRIPTS
+
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        ("conv-n", 0, "assistant", None, "payments.charge", ts),
+        ("conv-n", 1, "user", "", None, ts),
+        ("conv-n", 2, "user", None, None, ts),
+        ("conv-n", 3, "user", "please run FetchData now", None, ts),
+    ]
+    t = spark.createDataFrame(rows, schema=TRANSCRIPTS)
+    res = pipeline.run(spark, t, alias_dict_df(spark), str(tmp_path / "out"))
+    assert _triple_set(res.edges) == {
+        Triple("assistant", "calls", "payments.charge", "conv-n", 0),
+        Triple("user", "mentions", "e_fetch_data", "conv-n", 3),
+    }
 
 
 def test_pipeline_parallelism_invariance(spark, sf_transcripts, tmp_path):
@@ -124,8 +172,9 @@ def test_pipeline_resume_after_embed_kill(spark, tiny_transcripts, tmp_path):
             spark, tiny_transcripts, d, out, embed=True, fail_after="embed"
         )
     res = pipeline.run(spark, tiny_transcripts, d, out, embed=True)
-    assert res.counters["mentions_buckets_pending"] == 0
+    # the kill came after embed and before edges: vectors skip, edges run
     assert res.counters["vectors_buckets_pending"] == 0
+    assert res.counters["edges_buckets_pending"] > 0
     clean = pipeline.run(
         spark, tiny_transcripts, d, str(tmp_path / "clean2"), embed=True
     )
