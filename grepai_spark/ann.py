@@ -25,8 +25,10 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from grepai_spark.skew import capped_block_pairs
 
 EMBED_TABLE_DIM = 64  # driver's embeddings.parquet vector width
 N_PLANES = 8
@@ -34,7 +36,8 @@ NEAR_DUP_COS = 0.4
 IVF_NPROBE = 2
 # per-cell membership cap for the near-dup pair join — the reference's
 # block-cap skew guard (/root/reference/rpg/indexer.go:20): one hot cell
-# must never go O(k^2) at corpus scale
+# must never go O(k^2) at corpus scale. skew.capped_block_pairs applies it,
+# per cell and per LSH bucket.
 NEAR_DUP_CELL_CAP = 1000
 
 
@@ -390,6 +393,21 @@ def ivf_topk(
     )
 
 
+def _pair_cos():
+    """cos of a capped_block_pairs row from its carried vectors (a_v, b_v)
+    and precomputed norms (a_nv, b_nv). The pair dot is the
+    zip_with/aggregate fold; why not the unrolled chain (F5 JIT warmup) is
+    in pair_dot_sql's docstring."""
+    return F.expr(pair_dot_sql("a_v", "b_v")) / (F.col("a_nv") * F.col("b_nv"))
+
+
+def _vec_norm(vec_col: str):
+    """Per-vector norm, computed ONCE per row before pairing — not per
+    candidate pair, where it would be the dominant redundant work (each
+    vector meets ~block-size partners)."""
+    return F.sqrt(F.expr(dot_sql_self(vec_col, dim=EMBED_TABLE_DIM)))
+
+
 def near_dup_cosine_pairs(
     emb: DataFrame,
     threshold: float = NEAR_DUP_COS,
@@ -400,52 +418,23 @@ def near_dup_cosine_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, blocked by coarse cell.
 
-    Pair generation is an equi-join on the cell id (never a cross join), and
-    cell membership is capped deterministically (first `cell_cap` ids per
-    cell) BEFORE pairing — the same block-cap guard every other pair
-    generator here carries (dedup._bucket_pairs, link block cap): without
-    it one hot cell goes O(k^2) no matter how well the join partitions.
+    Pair generation is skew.capped_block_pairs on the cell id — an
+    equi-join, never a cross join, with cell membership capped
+    deterministically (first `cell_cap` ids per cell) BEFORE pairing, the
+    block-cap guard every blocked pair generator here shares: without it
+    one hot cell goes O(k^2) no matter how well the join partitions.
     """
-    w = Window.partitionBy(cell_col).orderBy(id_col)
-    emb = (
-        emb.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= cell_cap)
-        .drop("_rn")
-    )
-    # Parallelism floor (r7): same guard as near_dup_lsh_pairs — the capped
-    # cell table is small enough that AQE coalesces the window's shuffle
-    # output to ~1 partition, serializing the pair join's O(candidate x dim)
-    # cosine verify into one task. The keyed repartition is exempt from AQE
-    # coalescing and a no-op at corpus scale (guard: input already wider
-    # than 2x cores).
-    spark = emb.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < 2 * cores:
-        emb = emb.repartition(2 * cores, cell_col)
-    a = emb.select(
+    rows = emb.select(
         F.col(cell_col).alias("cell"),
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("va"),
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        _vec_norm(vec_col).alias("nv"),
     )
-    b = emb.select(
-        F.col(cell_col).alias("cell"),
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("vb"),
-    )
-    # pair dot as the zip_with/aggregate fold; why not the unrolled chain
-    # (F5 JIT warmup) is in pair_dot_sql's docstring
-    dot = F.expr(pair_dot_sql("va", "vb"))
-    na = F.sqrt(F.expr(dot_sql_self("va", dim=EMBED_TABLE_DIM)))
-    nb = F.sqrt(F.expr(dot_sql_self("vb", dim=EMBED_TABLE_DIM)))
-    cos = dot / (na * nb)
+    pairs = capped_block_pairs(rows, "cell", "id", cell_cap)
     return (
-        a.join(b, "cell")
-        .where(F.col("a_id") < F.col("b_id"))
-        .withColumn("_cos", cos)
+        pairs.withColumn("_cos", _pair_cos())
         .where(F.col("_cos") >= F.lit(threshold))
-        .select(
-            "a_id", "b_id", F.col("cell"), F.round("_cos", 6).alias("cos")
-        )
+        .select("a_id", "b_id", "cell", F.round("_cos", 6).alias("cos"))
     )
 
 
@@ -461,7 +450,6 @@ def near_dup_lsh_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     bucket_cap: int = NEAR_DUP_CELL_CAP,
-    materialize: bool = True,
 ) -> DataFrame:
     """Embedding near-dup pairs WITHOUT a precomputed coarse-cell column:
     bucket = sign-LSH signature of the vector, OR-amplified across `n_sets`
@@ -474,76 +462,31 @@ def near_dup_lsh_pairs(
 
     Plan shape (one pass, not n_sets unioned self-joins): every vector's
     n_sets bucket signatures are computed in ONE projection and posexploded
-    to (set_id, bkt) rows, so candidate generation is a single window cap +
-    a single equi-join on (set_id, bkt) — one shuffle each regardless of
-    n_sets. Vectors ride along into the join and the exact cosine check runs
-    INSIDE the join stage (no further shuffle); only the ~threshold-passing
-    survivors reach the final distinct. A pair colliding in r sets pays r
-    cosine folds, but cross-set duplicate collisions are rare (~q x n_sets
-    with q = per-set collision prob), and deduping candidates first would
-    cost two extra id-joins over the full candidate volume — measured 4x
-    slower at sf0.1. Each (set, bucket) carries the same deterministic cap
-    guard as every other pair generator here.
+    to (set_id, bkt) rows, so candidate generation is a single
+    skew.capped_block_pairs call on (set_id, bkt) — one window cap and one
+    equi-join regardless of n_sets, over a table materialized once (an
+    unshared subtree would compute the n_sets x n_planes bucket signatures
+    twice per vector). Vectors ride along into the join and the exact
+    cosine check runs INSIDE the join stage (no further shuffle); only the
+    ~threshold-passing survivors reach the final distinct. A pair colliding
+    in r sets pays r cosine folds, but cross-set duplicate collisions are
+    rare (~q x n_sets with q = per-set collision prob), and deduping
+    candidates first would cost two extra id-joins over the full candidate
+    volume — measured 4x slower at sf0.1. Each (set, bucket) carries the
+    same deterministic cap guard as every other pair generator here.
     """
     sigs = F.array(
         *[F.expr(bucket_sql(vec_col, n_planes, seed=s)) for s in range(n_sets)]
     )
-    # the vector's norm is computed ONCE per (vector, set) row here — not
-    # per candidate pair in the join below, where it would be the dominant
-    # redundant work (each vector meets ~bucket_size partners)
-    b = emb.select(
-        F.col(id_col).alias("the_id"),
+    rows = emb.select(
+        F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        F.sqrt(F.expr(dot_sql_self(vec_col, dim=EMBED_TABLE_DIM))).alias("nv"),
+        _vec_norm(vec_col).alias("nv"),
         F.posexplode(sigs).alias("set_id", "bkt"),
     )
-    w = Window.partitionBy("set_id", "bkt").orderBy("the_id")
-    # Materialized ONCE: both join sides below consume this table, and an
-    # unshared subtree would compute the n_sets x n_planes bucket
-    # signatures (each a dim-length fold per plane) TWICE per vector —
-    # the dominant cost of candidate generation. localCheckpoint is the
-    # repo's materialize-once idiom (blocks release with the plan).
-    b = (
-        b.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= bucket_cap)
-        .drop("_rn")
-    )
-    # Parallelism floor (r7, guide §2.5/§2.6): the capped banded table is
-    # small, so AQE coalesces the window's shuffle output down to ~1
-    # partition — and every narrow op downstream inherits it, serializing
-    # the pair join's O(candidate x dim) cosine verify (measured: the whole
-    # 2M-pair verify ran as ONE task at sf0.1). An explicit keyed
-    # repartition is exempt from AQE coalescing; 2x cores smooths uneven
-    # bucket sizes. At corpus scale the banded table already has more
-    # partitions than cores and this is a no-op.
-    spark = emb.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < 2 * cores:
-        b = b.repartition(2 * cores, "set_id", "bkt")
-    if materialize:  # ADVICE r4: plan-only consumers can opt out
-        b = b.localCheckpoint(eager=True)
-    a = b.select(
-        "set_id",
-        "bkt",
-        F.col("the_id").alias("a_id"),
-        F.col("v").alias("va"),
-        F.col("nv").alias("na"),
-    )
-    c = b.select(
-        "set_id",
-        "bkt",
-        F.col("the_id").alias("b_id"),
-        F.col("v").alias("vb"),
-        F.col("nv").alias("nb"),
-    )
-    # pair dot as the zip_with/aggregate fold; why not the unrolled chain
-    # (F5 JIT warmup) is in pair_dot_sql's docstring
-    dot = F.expr(pair_dot_sql("va", "vb"))
-    cos = dot / (F.col("na") * F.col("nb"))
+    pairs = capped_block_pairs(rows, ["set_id", "bkt"], "id", bucket_cap)
     return (
-        a.join(c, ["set_id", "bkt"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .withColumn("_cos", cos)
+        pairs.withColumn("_cos", _pair_cos())
         .where(F.col("_cos") >= F.lit(threshold))
         .select("a_id", "b_id", F.round("_cos", 6).alias("cos"))
         .distinct()

@@ -37,15 +37,13 @@ def corpus_clean(
     docs: DataFrame,
     quality_min: float = QUALITY_MIN,
     threshold: float = JACCARD_THRESHOLD,
-    materialize: bool = True,
 ) -> DataFrame:
     """(doc_id, quality, status) for every document.
 
-    `materialize=False` skips the eager shared-subtree checkpoints
-    (ADVICE r4). Note construction still runs Spark jobs either way: the
+    Construction runs Spark jobs: the shared per-doc gates and the MinHash
+    candidate table are materialized once (localCheckpoint), and the
     near-dup component map comes from ITERATIVE connected components, whose
-    convergence loop is inherently eager (cc.py) — fully-lazy plan
-    construction is only available on the non-iterative dedup operators.
+    convergence loop is inherently eager (cc.py).
     """
     # ONE corpus scan computes both per-doc gates (quality score + content
     # hash), materialized once: `base` feeds the quality projection, the
@@ -62,18 +60,14 @@ def corpus_clean(
             F.expr(quality_score_sql("text", toks="_cc_toks")), 6
         ).alias("quality"),
         F.sha2(F.col("text"), 256).alias("h"),
-    )
-    if materialize:
-        base = base.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     q = base.select("doc_id", "quality")
     h = base.select("doc_id", "h")
     exact_min = h.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
     exact = h.join(exact_min, "h").select(
         "doc_id", (F.col("doc_id") != F.col("keep_id")).alias("is_exact_dup")
     )
-    pairs = minhash_lsh_pairs(
-        docs, threshold=threshold, materialize=materialize
-    ).select(
+    pairs = minhash_lsh_pairs(docs, threshold=threshold).select(
         F.lpad(F.col("a_id").cast("string"), _PAD, "0").alias("src"),
         F.lpad(F.col("b_id").cast("string"), _PAD, "0").alias("dst"),
     )

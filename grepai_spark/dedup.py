@@ -12,11 +12,15 @@ module generalizes those into the dedup family a 100 TB corpus pipeline needs:
 * SimHash pairs          — 32-bit signature, banded hamming<=k candidates
 
 Every candidate generator is an equi-join (shuffle on a well-distributed key:
-shingle, band key, or signature band) — never an O(n^2) cross join. Hub
-shingles are capped by document frequency (the reference's block-cap idea,
-rpg/indexer.go:20) so one ubiquitous shingle cannot create a quadratic pair
-explosion at scale; correctness is preserved because candidates are verified
-with the exact Jaccard afterwards.
+shingle, band key, or signature band) — never an O(n^2) cross join. The
+banded generators (MinHash, SimHash) take their candidates from
+skew.capped_block_pairs, the capped self-join every blocked pair generator
+in this repo shares (the reference's block cap, rpg/indexer.go:20), and keep
+only their own verify. The n-gram generator keeps its own self-join: it
+drops hub shingles (document frequency > DF_CAP) for EVERY document, which
+is a corpus-wide filter, not a per-block cap. Either way one ubiquitous key
+cannot create a quadratic pair explosion at scale, and correctness is
+preserved because candidates are verified exactly afterwards.
 
 Hash parity: md5/sha256 hex strings are bit-identical between Spark and
 DuckDB, so MinHash minima (lexicographic min over md5 hex) and SimHash bits
@@ -25,8 +29,10 @@ DuckDB, so MinHash minima (lexicographic min over md5 hex) and SimHash bits
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from grepai_spark.skew import capped_block_pairs
 
 SHINGLE_N = 3
 DF_CAP = 100  # max docs sharing a shingle before it is dropped as a hub
@@ -190,40 +196,6 @@ def with_shingles(
     )
 
 
-def _bucket_pairs(
-    banded: DataFrame,
-    key: str,
-    id_col: str,
-    cap: int = DF_CAP,
-) -> DataFrame:
-    """Candidate id pairs per bucket, in ONE pass over the bucketed rows.
-
-    groupBy(bucket) + in-bucket pair expansion replaces a self-join that
-    would re-execute the (hashing) producer plan twice. Bucket membership is
-    capped deterministically (sorted ids, first `cap`) — the reference's
-    block-cap skew guard (/root/reference/rpg/indexer.go:20) — so one hot
-    bucket can never go quadratic at corpus scale.
-    """
-    grp = (
-        banded.groupBy(key)
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_set(F.col(id_col))), 1, cap
-            ).alias("ids")
-        )
-        .where(F.size("ids") >= 2)
-    )
-    pairs = F.expr(
-        "filter(flatten(transform(ids, x -> transform(ids,"
-        " y -> named_struct('a_id', x, 'b_id', y)))), p -> p.a_id < p.b_id)"
-    )
-    return (
-        grp.select(F.explode(pairs).alias("p"))
-        .select("p.a_id", "p.b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-
-
 def _verified_pairs(
     cand: DataFrame, sh: DataFrame, threshold: float, id_col: str
 ) -> DataFrame:
@@ -251,9 +223,6 @@ def ngram_jaccard_pairs(
     df_cap: int = DF_CAP,
     id_col: str = "doc_id",
     text_col: str = "text",
-    catalog: "Catalog | None" = None,
-    posting_table: str = "ngram_posting",
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard >= threshold, computed over
     the STOP-SHINGLE-FILTERED sets (shingles in more than `df_cap` docs are
@@ -270,22 +239,12 @@ def ngram_jaccard_pairs(
     # hub-shingle DF census, the per-doc size census, and the pair counts),
     # and Spark re-executes an unshared subtree per consumer — at corpus
     # scale that is three full scans + re-shingling passes for one logical
-    # derivation. Two regimes (the cc.py broadcast-vs-shuffle pattern):
-    #
-    # * `catalog` given — the posting table is STAGED TO STORAGE and read
-    #   back (one write + three cheap scans). This is the 100 TB regime:
-    #   the posting list is O(total tokens) and must not be pinned in
-    #   executor memory/disk the way localCheckpoint blocks are (PERF §24).
-    # * default — localCheckpoint, this repo's in-session materialize-once
-    #   idiom (blocks release with the plan via ContextCleaner, unlike
-    #   CacheManager-pinned persist). `materialize=False` opts out entirely
-    #   for plan-only consumers (.explain() without paying a job).
-    posting = sh.select(F.col(id_col), F.explode("shingles").alias("g"))
-    if catalog is not None:
-        catalog.overwrite(posting_table, posting)
-        posting = catalog.read(posting_table)
-    elif materialize:
-        posting = posting.localCheckpoint(eager=True)
+    # derivation. localCheckpoint is this repo's in-session
+    # materialize-once idiom (blocks release with the plan via
+    # ContextCleaner, unlike CacheManager-pinned persist).
+    posting = sh.select(
+        F.col(id_col), F.explode("shingles").alias("g")
+    ).localCheckpoint(eager=True)
     non_hub = (
         posting.groupBy("g")
         .agg(F.count("*").alias("df"))
@@ -297,14 +256,8 @@ def ngram_jaccard_pairs(
     # consumers (pair counts + both sides of the size join), and an
     # unshared p2 subtree re-ran the non_hub census and the hub join per
     # consumer — the before-plan carried the non_hub aggregate and the
-    # filter join 3x each (24 exchanges total). Same two regimes as the
-    # posting list: staged to storage at corpus scale, localCheckpoint
-    # in-session.
-    if catalog is not None:
-        catalog.overwrite(posting_table + "_filtered", p2)
-        p2 = catalog.read(posting_table + "_filtered")
-    elif materialize:
-        p2 = p2.localCheckpoint(eager=True)
+    # filter join 3x each (24 exchanges total).
+    p2 = p2.localCheckpoint(eager=True)
     sizes = p2.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     # Pair counts via a plain self-equi-join on the MATERIALIZED filtered
     # posting (r7): the one-pass bucket expansion existed to avoid
@@ -345,7 +298,6 @@ def minhash_lsh_pairs(
     n: int = SHINGLE_N,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verify.
 
@@ -359,11 +311,12 @@ def minhash_lsh_pairs(
     # Materialized ONCE (same rationale as ngram_jaccard_pairs' posting):
     # the shingle sets feed the signature derivation AND both sides of the
     # exact-Jaccard verify join — unshared, that is three scans +
-    # re-shingling passes over the corpus. `materialize=False` keeps the
-    # plan lazy for plan-only consumers (ADVICE r4).
-    sh = with_shingles(docs, text_col, n).select(id_col, "shingles")
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    # re-shingling passes over the corpus.
+    sh = (
+        with_shingles(docs, text_col, n)
+        .select(id_col, "shingles")
+        .localCheckpoint(eager=True)
+    )
     # Hashing happens on the EXPLODED posting list in a flat projection —
     # md5 inside a higher-order-function lambda is interpreted row-at-a-time
     # (no codegen); explode + groupBy(min) keeps it in WholeStageCodegen and
@@ -391,10 +344,17 @@ def minhash_lsh_pairs(
         )
         for bnd in range(bands)
     ]
+    # (band_key, id) is unique (band tags partition the key space), so the
+    # per-bucket cap keeps the first DF_CAP distinct ids, as the oracle does
     banded = sigs.select(
-        F.col(id_col), F.explode(F.array(*band_keys)).alias("band_key")
+        F.col(id_col).alias("id"),
+        F.explode(F.array(*band_keys)).alias("band_key"),
     )
-    cand = _bucket_pairs(banded, "band_key", id_col, cap=DF_CAP)
+    cand = (
+        capped_block_pairs(banded, "band_key", "id", DF_CAP)
+        .select("a_id", "b_id")
+        .dropDuplicates()
+    )
     return _verified_pairs(cand, sh, threshold, id_col)
 
 
@@ -414,7 +374,11 @@ def simhash_pairs(
     per-block equi-join finds all candidates without a cross join. The exact
     hamming check then filters. Returns (a_id, b_id, hamming).
     """
-    assert max_hamming <= bands - 1, "pigeonhole requires max_hamming < bands"
+    if max_hamming > bands - 1:
+        raise ValueError(
+            f"pigeonhole banding needs max_hamming < bands, got "
+            f"max_hamming={max_hamming}, bands={bands}"
+        )
     sh = with_shingles(docs, text_col, n).select(id_col, "shingles")
     # Same codegen strategy as minhash_lsh_pairs: ONE md5 per shingle in a
     # flat projection, then 32 conditional sums in a map-side-combining agg —
@@ -465,34 +429,14 @@ def simhash_pairs(
         ).cast("bigint")
         for bnd in range(bands)
     ]
+    # (bk, id) is unique (band tags partition the key space) and docs carry
+    # one sig each, so the capped members are the oracle's
     banded = sig.select(
-        F.col(id_col), "sig", F.explode(F.array(*keys)).alias("bk")
+        F.col(id_col).alias("id"), "sig", F.explode(F.array(*keys)).alias("bk")
     )
-    # Capped-bucket pairs via window cap + codegen self-join (r7): the
-    # previous one-pass collect_set(struct) expansion paid an
-    # ObjectHashAggregate plus an interpreted nested transform() per bucket
-    # — the same HOF tax the ngram pair counts dropped. (bk, doc) is unique
-    # (band tags partition the key space) and docs carry one sig each, so
-    # row_number ordered by doc id keeps exactly the members the sorted
-    # struct slice kept. The capped table is materialized once for both
-    # join sides.
-    w = Window.partitionBy("bk").orderBy(id_col)
-    capped = (
-        banded.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= DF_CAP)
-        .drop("_rn")
-        .localCheckpoint(eager=True)
-    )
-    a = capped.select(
-        "bk", F.col(id_col).alias("a_id"), F.col("sig").alias("sig_a")
-    )
-    b = capped.select(
-        "bk", F.col(id_col).alias("b_id"), F.col("sig").alias("sig_b")
-    )
-    ham = F.expr(hamming_sql("sig_a", "sig_b"))
+    ham = F.expr(hamming_sql("a_sig", "b_sig"))
     return (
-        a.join(b, "bk")
-        .where(F.col("a_id") < F.col("b_id"))
+        capped_block_pairs(banded, "bk", "id", DF_CAP)
         .withColumn("hamming", ham.cast("int"))
         .where(F.col("hamming") <= max_hamming)
         .dropDuplicates(["a_id", "b_id"])

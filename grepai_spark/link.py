@@ -14,15 +14,20 @@ Two linking paths, mirroring the reference:
 
 A MinHash banding block key is provided as the scale path (LSH prefilter per
 the north rule): at 10^12 turns first-token blocks can still be huge; MinHash
-bands keep candidate sets sublinear. Both paths feed the same Jaccard verify.
+bands keep candidate sets sublinear. Both block keys feed the same tail: on
+the driver (small ASCII dictionaries) the Python twins in
+_py_pairs_from_buckets, otherwise _distributed_sim_edges — candidates from
+skew.capped_block_pairs (the capped self-join every blocked pair generator
+shares), then the same Jaccard verify.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grepai_spark.naming import first_token_sql, jaccard_sql, norm_tokens_sql
+from grepai_spark.skew import capped_block_pairs
 
 JACCARD_THRESHOLD = 0.5  # ref: rpg/indexer.go:19
 BLOCK_CAP = 100  # ref: maxFeatureGroupSize, rpg/indexer.go:20
@@ -81,6 +86,25 @@ def _py_pairs_from_buckets(
                 if py_jaccard(a_toks, b_toks) >= threshold:
                     out.add((a_cid, b_cid))
     return sorted(out)
+
+
+def _distributed_sim_edges(
+    d: DataFrame, key_col: str, cap: int, threshold: float
+) -> DataFrame:
+    """Distributed tail of both similarity paths: alias pairs sharing
+    `key_col` among the first `cap` aliases of each block (alias order),
+    with distinct canonical ids and Jaccard >= threshold, as (src, dst)."""
+    jac = F.expr(jaccard_sql("a_norm_tokens", "b_norm_tokens"))
+    return (
+        capped_block_pairs(d, key_col, "alias", cap)
+        .where(F.col("a_canonical_id") != F.col("b_canonical_id"))
+        .where(jac >= F.lit(threshold))
+        .select(
+            F.col("a_canonical_id").alias("src"),
+            F.col("b_canonical_id").alias("dst"),
+        )
+        .dropDuplicates(["src", "dst"])
+    )
 
 
 def link_mentions_exact(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
@@ -157,24 +181,7 @@ def alias_similarity_edges(
             F.expr(first_token_sql("alias")).alias("block"),
         )
     )
-    w = Window.partitionBy("block").orderBy("alias")
-    d = d.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= block_cap
-    )
-    a = d.alias("a")
-    b = d.alias("b")
-    jac = F.expr(jaccard_sql("a.norm_tokens", "b.norm_tokens"))
-    return (
-        a.join(b, on=F.col("a.block") == F.col("b.block"))
-        .where(F.col("a.alias") < F.col("b.alias"))
-        .where(F.col("a.canonical_id") != F.col("b.canonical_id"))
-        .where(jac >= F.lit(threshold))
-        .select(
-            F.col("a.canonical_id").alias("src"),
-            F.col("b.canonical_id").alias("dst"),
-        )
-        .dropDuplicates(["src", "dst"])
-    )
+    return _distributed_sim_edges(d, "block", block_cap, threshold)
 
 
 def mention_tool_overlap(
@@ -338,21 +345,4 @@ def alias_similarity_edges_lsh(
         .select("alias", "canonical_id", "norm_tokens")
     )
     banded = minhash_block_key(d, bands=bands, rows_per_band=rows_per_band)
-    w = Window.partitionBy("band_key").orderBy("alias")
-    banded = banded.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= bucket_cap
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    jac = F.expr(jaccard_sql("a.norm_tokens", "b.norm_tokens"))
-    return (
-        a.join(b, on=F.col("a.band_key") == F.col("b.band_key"))
-        .where(F.col("a.alias") < F.col("b.alias"))
-        .where(F.col("a.canonical_id") != F.col("b.canonical_id"))
-        .where(jac >= F.lit(threshold))
-        .select(
-            F.col("a.canonical_id").alias("src"),
-            F.col("b.canonical_id").alias("dst"),
-        )
-        .dropDuplicates(["src", "dst"])
-    )
+    return _distributed_sim_edges(banded, "band_key", bucket_cap, threshold)

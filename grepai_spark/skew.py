@@ -1,9 +1,12 @@
-"""Explicit skew handling — salting for hot keys.
+"""Explicit skew handling — capped block pairs, salting for hot keys.
 
 The reference caps hot groups outright (block cap 100
 /root/reference/rpg/indexer.go:20, hub cap 50 rpg/indexer.go:26). Caps are
-kept where they mirror reference semantics (link.py, materialize.py,
-dedup.py); this module adds the other standard tool: SALTING, for exact
+kept where they mirror reference semantics, and the block cap of every
+blocked pair generator (dedup SimHash/MinHash, ann near-dup cosine/LSH,
+link's distributed similarity tails) lives here: :func:`capped_block_pairs`
+is their one candidate step, and each caller keeps only its block key and
+exact verify predicate. The other standard tool is SALTING, for exact
 aggregations that must not drop data when one key is huge (the mega-thread:
 one conv_id holding ~25% of all turns in the fixture, millions of turns in
 production).
@@ -26,10 +29,57 @@ because a group must end on one reducer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 N_SALT = 16
+
+
+def capped_block_pairs(
+    rows: DataFrame, key: str | list[str], order: str, cap: int
+) -> DataFrame:
+    """Candidate pairs of `rows` that share a block `key`: the filter half
+    of filter-and-verify, common to every blocked pair generator.
+
+    Each block keeps only its first `cap` rows by `order` (row_number — a
+    deterministic cap, so one hot block never goes O(k^2) and re-runs pick
+    the same members). The capped table is materialized ONCE
+    (localCheckpoint) because both join sides read it; an unshared subtree
+    would run the caller's block-key derivation (signatures, hashes) twice.
+
+    Parallelism floor: the window's shuffle is an explicit keyed
+    repartition to at least 2x cores (the session's shuffle width when that
+    is wider). AQE would coalesce a plain window shuffle of a small table
+    to ~1 partition, and the pair join's verify would inherit it and run as
+    one task; an explicit repartition is exempt from coalescing. It is the
+    window's only exchange, the materialized table keeps its hash
+    partitioning, and the self-join on `key` adds no exchange. Nothing is
+    probed: asking an unmaterialized plan for its partition count runs its
+    shuffle stages.
+
+    Returns the equi self-join on `key` with a_<order> < b_<order>; every
+    non-key column appears twice, prefixed a_ and b_.
+    """
+    keys = [key] if isinstance(key, str) else list(key)
+    spark = rows.sparkSession
+    width = max(
+        2 * spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    w = Window.partitionBy(*keys).orderBy(order)
+    capped = (
+        rows.repartition(width, *keys)
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= cap)
+        .drop("_rn")
+        .localCheckpoint(eager=True)
+    )
+    rest = [c for c in capped.columns if c not in keys]
+    a, b = (
+        capped.select(*keys, *[F.col(c).alias(f"{p}_{c}") for c in rest])
+        for p in ("a", "b")
+    )
+    return a.join(b, keys).where(F.col(f"a_{order}") < F.col(f"b_{order}"))
 
 
 def with_salt(df: DataFrame, n_salt: int = N_SALT) -> DataFrame:

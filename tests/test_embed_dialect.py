@@ -6,9 +6,9 @@
   turn_vector_stats_oracle recomputing from raw text in DuckDB) — hashing,
   first-occurrence context prefix, 2048-char truncation, tokenization,
   slot/sign placement, all exercised past the fixture's ASCII blandness;
-* the MinHash-LSH linking path (alias_similarity_edges_lsh vs the DuckDB
-  banding replay) on a hostile dictionary that actually exercises the
-  per-bucket cap.
+* both similarity-linking paths (alias_similarity_edges and
+  alias_similarity_edges_lsh vs the DuckDB block / banding replay) on a
+  hostile dictionary that actually exercises the per-block cap.
 
 Same discipline as test_naming_dialect / test_mentions_dialect (round 5
 found two real dialect bugs this way): the driver's oracle gate only ever
@@ -23,6 +23,7 @@ import sys
 
 import duckdb
 import pandas as pd
+import pytest
 
 sys.path.insert(0, "/root/repo")
 
@@ -138,11 +139,15 @@ def test_embed_plane_matches_duckdb_on_hostile_corpus(spark, tmp_path):
     assert got == want
 
 
-def test_lsh_linking_matches_duckdb_on_hostile_dict(spark):
-    """alias_similarity_edges_lsh vs the DuckDB banding replay on a dict
-    with near-dup token sets, zero-token names, unicode, and one shared
-    token set wide enough (> LSH_BUCKET_CAP aliases) that the per-bucket
-    cap decides the candidate set."""
+@pytest.mark.parametrize("lsh", [False, True], ids=["blocked", "lsh"])
+def test_lsh_linking_matches_duckdb_on_hostile_dict(spark, lsh):
+    """alias_similarity_edges (first-token blocks) and
+    alias_similarity_edges_lsh (MinHash bands) vs the DuckDB replay on a
+    dict with near-dup token sets, zero-token names, unicode, and one hub
+    wide enough (> LSH_BUCKET_CAP and > BLOCK_CAP aliases) that the
+    per-block cap decides the candidate set. The non-ASCII aliases keep
+    both paths off the driver regime, so this checks the distributed tail
+    (skew.capped_block_pairs + Jaccard verify)."""
     from grepai_spark.schemas import ALIAS_DICT
 
     rows = [
@@ -166,10 +171,8 @@ def test_lsh_linking_matches_duckdb_on_hostile_dict(spark):
         rows.append((f"sharedTokenSet{i}", f"s{i}", "entity"))
 
     d = spark.createDataFrame(rows, schema=ALIAS_DICT)
-    got = sorted(
-        (r["src"], r["dst"])
-        for r in link.alias_similarity_edges_lsh(d).collect()
-    )
+    edges = link.alias_similarity_edges_lsh if lsh else link.alias_similarity_edges
+    got = sorted((r["src"], r["dst"]) for r in edges(d).collect())
 
     con = duckdb.connect()
     con.register(
@@ -178,7 +181,7 @@ def test_lsh_linking_matches_duckdb_on_hostile_dict(spark):
     want = sorted(
         tuple(r)
         for r in con.execute(
-            oracles.alias_sim_edges_oracle(lsh=True, dict_rel="hd")
+            oracles.alias_sim_edges_oracle(lsh=lsh, dict_rel="hd")
         ).fetchall()
     )
     assert got == want

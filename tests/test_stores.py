@@ -1,12 +1,11 @@
-"""Stored index artifacts (stores.py) + the staged-posting dedup regime."""
+"""Stored index artifacts (stores.py)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from grepai_spark import dedup, stores
-from grepai_spark.storage import Catalog
+from grepai_spark import stores
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -77,43 +76,3 @@ def test_graph_adjacency_matches_per_query_derivation(spark):
         assert sorted(map(tuple, sd.collect())) == sorted(
             map(tuple, dd.collect())
         ), (direction, preds)
-
-
-def test_ngram_posting_staged_to_storage_identical(spark, tmp_path):
-    """The storage-staged posting regime (the 100 TB path PERF §24 calls
-    for) produces byte-identical pairs to the localCheckpoint regime, and
-    the posting table lands in the catalog."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    default = dedup.ngram_jaccard_pairs(docs)
-    cat = Catalog(spark, str(tmp_path / "dedup_cat"))
-    staged = dedup.ngram_jaccard_pairs(docs, catalog=cat)
-    assert cat.exists("ngram_posting")
-    assert cat.read("ngram_posting").count() > 0
-    assert sorted(map(tuple, default.collect())) == sorted(
-        map(tuple, staged.collect())
-    )
-
-
-def test_materialize_false_builds_plan_without_jobs(spark):
-    """ADVICE r4: plan-only consumers can construct the dedup DataFrames
-    without triggering Spark jobs at construction time. (corpus_clean is
-    excluded: its connected-components step is inherently iterative/eager —
-    documented in its docstring.)"""
-    from grepai_spark import ann
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    sc = spark.sparkContext
-    sc.setJobGroup("lazy-test", "plan-only construction")
-    try:
-        dfs = [
-            dedup.ngram_jaccard_pairs(docs, materialize=False),
-            dedup.minhash_lsh_pairs(docs, materialize=False),
-            ann.near_dup_lsh_pairs(emb, materialize=False),
-        ]
-        jobs = sc.statusTracker().getJobIdsForGroup("lazy-test")
-        assert not jobs, "plan construction must not launch jobs"
-    finally:
-        sc.setJobGroup("", "")
-    for df in dfs:
-        df.explain()  # plan-only consumption works

@@ -104,6 +104,41 @@ def test_simhash_pairs_are_near_dups(spark, docs):
     assert len(sim) > 0
 
 
+def _rows6(rows):
+    return sorted(
+        tuple(round(v, 6) if isinstance(v, float) else v for v in r)
+        for r in rows
+    )
+
+
+@pytest.mark.parametrize(
+    "op, oracle, table",
+    [
+        (dedup.minhash_lsh_pairs, dedup.minhash_lsh_pairs_oracle, "docs"),
+        (dedup.simhash_pairs, dedup.simhash_pairs_oracle, "docs"),
+        (ann.near_dup_lsh_pairs, ann.near_dup_lsh_pairs_oracle, "emb"),
+    ],
+    ids=["minhash_lsh_pairs", "simhash_pairs", "near_dup_lsh_pairs"],
+)
+def test_capped_pair_generators_match_oracle(request, con, op, oracle, table):
+    """The banded pair generators built on skew.capped_block_pairs return
+    exactly their DuckDB oracle's rows (ids and verified score) on the
+    sf0.001 tables. near_dup_cosine_pairs has its own oracle test below;
+    the link tails are checked in test_embed_dialect."""
+    got = _rows6(op(request.getfixturevalue(table)).collect())
+    want = _rows6(con.execute(oracle()).fetchall())
+    assert got == want
+    assert got, "sf0.001 should contain planted near-dups"
+
+
+def test_simhash_rejects_hamming_beyond_pigeonhole(spark, docs):
+    """max_hamming >= bands breaks the pigeonhole guarantee (a pair could
+    differ in every band and never become a candidate), so it is refused
+    outright rather than answered incompletely."""
+    with pytest.raises(ValueError, match="pigeonhole"):
+        dedup.simhash_pairs(docs, max_hamming=dedup.SIMHASH_BANDS)
+
+
 def test_shingles_short_text_edge_cases(spark):
     df = spark.createDataFrame(
         [(1, "one two"), (2, ""), (3, "a b c d")], ["doc_id", "text"]

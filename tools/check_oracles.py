@@ -3,6 +3,9 @@ Spark and its oracle on DuckDB at a given sf, compare row count + schema +
 order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+The session runs on local[SPARK_GRAFT_CPUS] (see session.get_spark); set it
+to the host's core count, e.g. SPARK_GRAFT_CPUS=$(nproc).
 """
 
 from __future__ import annotations
@@ -49,7 +52,9 @@ def main():
     import __spark_entry__ as e
     from grepai_spark.session import get_spark
 
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=16)
+    # same core count as the tests: local[SPARK_GRAFT_CPUS], named up front
+    spark = get_spark("oracle-check")
+    print(f"master={spark.sparkContext.master}")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
