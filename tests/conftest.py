@@ -55,3 +55,31 @@ def sf_transcripts(spark):
     from grepai_spark.synth import load_transcripts
 
     return load_transcripts(spark, SF_DIR)
+
+
+@pytest.fixture
+def regimes(monkeypatch):
+    """Run a two-regime path in both size regimes inside one test:
+    iterate ``regimes()`` and the body runs once as "driver" (the default
+    cutoffs) and once as "distributed" (every size cutoff 0, and the
+    alias-map and graph-adjacency memos emptied so no earlier result is
+    served). The patches are undone when the loop ends."""
+
+    def each():
+        yield "driver"
+        from grepai_spark import cc, graphq, link, pipeline, stores
+
+        with monkeypatch.context() as m:
+            m.setattr(cc, "SMALL_GRAPH_EDGES", 0)
+            m.setattr(cc, "SMALL_DICT_ROWS", 0)
+            m.setattr(
+                cc.connected_components, "__defaults__", (50, 3, 0)
+            )
+            m.setattr(graphq, "SMALL_ADJ_EDGES", 0)
+            m.setattr(stores, "_ADJ_SMALL_EDGES", 0)
+            m.setattr(link, "SMALL_DICT_ROWS", 0)
+            m.setattr(pipeline, "_AMAP_MEMO", {})
+            m.setattr(stores, "_ADJ_MEMO", {})
+            yield "distributed"
+
+    return each

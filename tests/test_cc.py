@@ -27,9 +27,9 @@ def _uf_components(edges, nodes):
     return {n: find(n) for n in nodes}
 
 
-def test_cc_random_graphs(spark):
-    """Both regimes — driver union-find fast path (small_cutoff default) and
-    the distributed star loop (small_cutoff=0) — must agree with the oracle."""
+def test_cc_random_graphs(spark, regimes):
+    """Both regimes — driver union-find fast path and the distributed star
+    loop — must agree with the oracle."""
     rng = random.Random(42)
     for trial in range(3):
         n = 60
@@ -41,27 +41,26 @@ def test_cc_random_graphs(spark):
         df = spark.createDataFrame(edges, ["src", "dst"])
         touched = {x for e in edges for x in e}
         want = _uf_components(edges, sorted(touched))
-        for cutoff in (None, 0):
-            kw = {} if cutoff is None else {"small_cutoff": 0}
+        for regime in regimes():
             got = {
                 r["node"]: r["component"]
-                for r in connected_components(df, **kw).collect()
+                for r in connected_components(df).collect()
             }
-            assert got == want, f"trial {trial} cutoff {cutoff}"
+            assert got == want, f"trial {trial} {regime}"
 
 
-def test_cc_chain_and_cycle(spark):
+def test_cc_chain_and_cycle(spark, regimes):
     # long chain (worst case for naive propagation) + a cycle
     chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(20)]
     cycle = [("z1", "z2"), ("z2", "z3"), ("z3", "z1")]
     df = spark.createDataFrame(chain + cycle, ["src", "dst"])
-    for cutoff in ({}, {"small_cutoff": 0}):
+    for regime in regimes():
         got = {
             r["node"]: r["component"]
-            for r in connected_components(df, **cutoff).collect()
+            for r in connected_components(df).collect()
         }
-        assert all(got[f"c{i:02d}"] == "c00" for i in range(21))
-        assert got["z1"] == got["z2"] == got["z3"] == "z1"
+        assert all(got[f"c{i:02d}"] == "c00" for i in range(21)), regime
+        assert got["z1"] == got["z2"] == got["z3"] == "z1", regime
 
 
 def test_canonical_map_merges_query_parser(spark):

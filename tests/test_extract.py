@@ -53,6 +53,26 @@ def test_mentions_udf_vs_sql_oracle(spark, sf_transcripts):
     assert len(udf_rows) > 500  # sanity: corpus is mention-dense
 
 
+def test_link_exact_vs_duckdb_oracle(spark, sf_transcripts, regimes):
+    """Exact linking equals its DuckDB oracle with the dictionary deduped on
+    the driver and with the distributed distinct() dimension."""
+    from grepai_spark import link, oracles
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'"
+    )
+    want = sorted(con.execute(oracles.link_exact_oracle()).fetchall())
+    d = alias_dict_df(spark)
+    m = extract.detect_mentions(sf_transcripts, d)
+    for regime in regimes():
+        got = sorted(
+            tuple(r) for r in link.link_mentions_exact(m, d).collect()
+        )
+        assert got == want, regime
+    assert len(want) > 500
+
+
 def test_oracle_golden_triples_tiny():
     from grepai_spark.oracle import golden_triples
 

@@ -29,26 +29,42 @@ def test_callers_callees(spark):
     assert got == {("t1", 1), ("t2", 1)}
 
 
-def test_bfs_depths_and_early_stop(spark):
+def test_bfs_depths_and_early_stop(spark, regimes):
     e = _edges(spark)
-    got = {(r.node, r.depth) for r in graphq.bfs(e, "t3", depth=3).collect()}
-    # t3 <- t2 <- a <- {t1} <- {b}
-    assert got == {
-        ("t3", 0),
-        ("t2", 1),
-        ("a", 2),
-        ("t1", 3),
-    }
+    for regime in regimes():
+        got = {
+            (r.node, r.depth) for r in graphq.bfs(e, "t3", depth=3).collect()
+        }
+        # t3 <- t2 <- a <- {t1} <- {b}
+        assert got == {
+            ("t3", 0),
+            ("t2", 1),
+            ("a", 2),
+            ("t1", 3),
+        }, regime
+        # the frontier empties after depth 1: the depth cap is not reached
+        got = {
+            (r.node, r.depth) for r in graphq.bfs(e, "x1", depth=5).collect()
+        }
+        assert got == {
+            ("x1", 0), ("hub", 1), ("x2", 2), ("x3", 2)
+        }, regime
 
 
-def test_bfs_hub_guard(spark):
+def test_bfs_hub_guard(spark, regimes):
     e = _edges(spark)
-    # hub has degree 3; with hub_cap=2 it is reported but not expanded
-    got = {(r.node, r.depth) for r in graphq.bfs(e, "x1", depth=2, hub_cap=2).collect()}
-    assert got == {("x1", 0), ("hub", 1)}
-    # without the guard the other spokes appear at depth 2
-    got2 = {(r.node, r.depth) for r in graphq.bfs(e, "x1", depth=2).collect()}
-    assert got2 == {("x1", 0), ("hub", 1), ("x2", 2), ("x3", 2)}
+    for regime in regimes():
+        # hub has degree 3; with hub_cap=2 it is reported but not expanded
+        got = {
+            (r.node, r.depth)
+            for r in graphq.bfs(e, "x1", depth=2, hub_cap=2).collect()
+        }
+        assert got == {("x1", 0), ("hub", 1)}, regime
+        # without the guard the other spokes appear at depth 2
+        got2 = {
+            (r.node, r.depth) for r in graphq.bfs(e, "x1", depth=2).collect()
+        }
+        assert got2 == {("x1", 0), ("hub", 1), ("x2", 2), ("x3", 2)}, regime
 
 
 def test_feature_freq_deterministic_ties(spark):

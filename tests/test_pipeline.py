@@ -81,20 +81,15 @@ def test_pipeline_lsh_variant_same_output(spark, tiny_transcripts, tmp_path):
 
 @pytest.mark.parametrize("use_lsh", [False, True])
 def test_alias_entity_map_same_in_distributed_regimes(
-    spark, monkeypatch, use_lsh
+    spark, regimes, use_lsh
 ):
     """The one alias-map tail gives the same map whether linking and CC ran
     on the driver (default for this dictionary) or distributed."""
-    from grepai_spark import cc, link
-
     d = alias_dict_df(spark)
-    want = pipeline.alias_entity_map(d, use_lsh)
-    monkeypatch.setattr(link, "SMALL_DICT_ROWS", 0)
-    monkeypatch.setattr(cc, "SMALL_DICT_ROWS", 0)
-    monkeypatch.setattr(pipeline, "_AMAP_MEMO", {})
-    got = pipeline.alias_entity_map(d, use_lsh)
-    assert got == want
-    assert got is not want  # recomputed, not served from the memo
+    got = {r: pipeline.alias_entity_map(d, use_lsh) for r in regimes()}
+    assert got["distributed"] == got["driver"]
+    # recomputed, not served from the memo
+    assert got["distributed"] is not got["driver"]
 
 
 def test_pipeline_null_text_and_tool(spark, tmp_path):
@@ -220,7 +215,9 @@ def test_embed_cache_consistent_after_kill_between_merges(
     assert got == want
 
 
-def test_run_maintains_graph_artifacts(spark, tiny_transcripts, tmp_path):
+def test_run_maintains_graph_artifacts(
+    spark, tiny_transcripts, tmp_path, regimes
+):
     """pipeline.run writes the graph-query plane's stored adjacency +
     degree census alongside the edge table (stores.build_graph_artifacts);
     a BFS over the artifacts equals a BFS that derives adjacency from the
@@ -244,11 +241,12 @@ def test_run_maintains_graph_artifacts(spark, tiny_transcripts, tmp_path):
         .select("a", "deg")
     )
     seed = "payments.charge"
-    via_store = graphq.bfs(res.edges, seed, depth=2, adj=adj, deg=deg)
-    via_derive = graphq.bfs(res.edges, seed, depth=2)
-    assert sorted(map(tuple, via_store.collect())) == sorted(
-        map(tuple, via_derive.collect())
-    )
+    for regime in regimes():
+        via_store = graphq.bfs(res.edges, seed, depth=2, adj=adj, deg=deg)
+        via_derive = graphq.bfs(res.edges, seed, depth=2)
+        assert sorted(map(tuple, via_store.collect())) == sorted(
+            map(tuple, via_derive.collect())
+        ), regime
 
 
 def test_merge_rewrites_only_dirty_buckets(spark, tmp_path):
