@@ -69,14 +69,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-# Below this many edges the graph fits comfortably on the driver; a
-# collect + union-find beats ~10 shuffle jobs of star-iteration overhead.
-# Same two-regime logic as broadcast-vs-shuffle join selection: the
-# distributed large-star/small-star loop is the corpus-scale path, this is
-# the dictionary-scale path. Results are identical (component = min id).
-SMALL_GRAPH_EDGES = 100_000
-
-
 def _union_find(rows: list) -> list[tuple[str, str]]:
     """Pure driver-side union-find: edge rows -> sorted (node, component)
     pairs with component = min member id (the distributed fixpoint's id
@@ -117,22 +109,21 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     checkpoint_every: int = 3,
-    small_cutoff: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) for every node appearing in edges.
 
     Isolated nodes don't appear; callers union them back (component = self).
+    A graph small enough to collect (dimcache.collect_if_small) runs
+    union-find on the driver instead of ~10 shuffle jobs of star
+    iterations; both regimes give component = min member id.
     """
-    if small_cutoff:
-        # self-loops included: their nodes must appear in the output
-        # (component = self), same as the distributed path below
-        head = (
-            edges.select("src", "dst")
-            .limit(small_cutoff + 1)
-            .collect()
-        )
-        if len(head) <= small_cutoff:
-            return _union_find_components(head, edges.sparkSession)
+    from grepai_spark.dimcache import collect_if_small
+
+    # self-loops included: their nodes must appear in the output
+    # (component = self), same as the distributed path below
+    head = collect_if_small(edges)
+    if head is not None:
+        return _union_find_components(head, edges.sparkSession)
 
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -173,34 +164,25 @@ def connected_components(
     return comp.union(missing)
 
 
-# Below this many dictionary rows the whole canonical map is computed on
-# the driver (one limit-collect each for dict and edges, union-find, one
-# LocalRelation out) — r7: the distributed shape paid a distinct shuffle +
-# broadcast join job per call for a dictionary-scale product. Same
-# two-regime pattern (and the same Python string-min convention) as
-# connected_components' small-graph path.
-SMALL_DICT_ROWS = 100_000
-
-
 def canonical_map(
     alias_dict: DataFrame, link_edges: DataFrame
 ) -> DataFrame:
     """canonical_id -> entity_id (component min) for EVERY dictionary entity,
-    including singletons."""
-    from grepai_spark.dimcache import attach_rows, attached_rows, cached_rows
+    including singletons.
 
-    head = cached_rows(alias_dict)
-    if len(head) <= SMALL_DICT_ROWS:
-        # prefer edge rows a driver-side producer already holds (the small
-        # similarity regime attaches them); otherwise one bounded probe
-        edges = attached_rows(link_edges)
-        if edges is None:
-            edges = (
-                link_edges.select("src", "dst")
-                .limit(SMALL_GRAPH_EDGES + 1)
-                .collect()
-            )
-        if len(edges) <= SMALL_GRAPH_EDGES:
+    When the dictionary and its link edges are both small enough to collect
+    (dimcache.collect_if_small), the whole map is built on the driver —
+    union-find, one LocalRelation out, its rows attached — instead of a
+    distinct shuffle + broadcast join job per call for a dictionary-scale
+    product."""
+    from grepai_spark.dimcache import attach_rows, collect_if_small
+
+    head = collect_if_small(alias_dict)
+    if head is not None:
+        # link_edges(src, dst); the small similarity regime attached its
+        # rows, so they come back with no job
+        edges = collect_if_small(link_edges)
+        if edges is not None:
             comp = dict(_union_find(edges))
             rows = [
                 (c, comp.get(c, c))

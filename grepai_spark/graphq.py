@@ -20,11 +20,6 @@ from pyspark.sql import functions as F
 
 from grepai_spark.naming import jaccard_sql, norm_tokens_sql
 
-# adjacency sizes up to this run BFS on the driver (see bfs); mirrors
-# cc.SMALL_GRAPH_EDGES
-SMALL_ADJ_EDGES = 100_000
-
-
 def _seg(expr_sql: str) -> "F.Column":
     """NULL-safe feature-path segment: a degenerate name whose first_token /
     norm_key comes out NULL (or '' on only one engine) must serialize the
@@ -95,24 +90,18 @@ def bfs(
         # hub guard: degree pre-computation, expansion skips heavy nodes
         deg = adj.groupBy("a").agg(F.count("*").alias("deg"))
 
-    # r7 small-graph driver regime (the cc.py two-regime pattern): a
-    # collectable adjacency runs the whole traversal on the driver — the
-    # distributed loop costs ~3 jobs per hop (join, checkpoint, isEmpty)
-    # of pure scheduling overhead on a graph that fits in one hand. Rows
-    # already loaded by the graph model (stores.graph_adjacency attaches
-    # them via dimcache) are reused; otherwise one limit-collect probes the
-    # size — at graph scale it reads cutoff+1 rows and the iterative path
-    # below is untouched.
-    from grepai_spark.dimcache import attached_rows
+    # small-graph driver regime: a collectable adjacency runs the whole
+    # traversal on the driver — the distributed loop costs ~3 jobs per hop
+    # (join, checkpoint, isEmpty) of pure scheduling overhead on a graph
+    # that fits in one hand. The stored selections (stores.graph_adjacency)
+    # are memoized handles, so their rows, or their "too large" verdict,
+    # load on the first traversal and serve every later one.
+    from grepai_spark.dimcache import cached_rows, collect_if_small
 
-    head = attached_rows(adj)
-    if head is None:
-        head = adj.limit(SMALL_ADJ_EDGES + 1).collect()
+    head = collect_if_small(adj)
     spark = edges.sparkSession
-    if len(head) <= SMALL_ADJ_EDGES:
-        deg_rows = attached_rows(deg)
-        if deg_rows is None:
-            deg_rows = deg.collect()
+    if head is not None:
+        deg_rows = cached_rows(deg)
         expandable_s = {
             r["a"] for r in deg_rows if r["deg"] <= hub_cap
         }
@@ -146,7 +135,6 @@ def bfs(
     # re-executed per depth level.
     adj_ok = adj.join(expandable, "a").localCheckpoint(eager=True)
 
-    spark = edges.sparkSession
     visited = spark.createDataFrame([(seed, 0)], ["node", "depth"])
     frontier = visited
     for d in range(1, depth + 1):

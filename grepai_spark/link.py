@@ -38,8 +38,11 @@ def with_norm_tokens(alias_dict: DataFrame) -> DataFrame:
 
 
 # Below this many dictionary rows the similarity linking runs on the driver
-# (collect + pure-Python twins) instead of as ~5 tiny shuffle jobs — the same
-# two-regime shape as cc.SMALL_GRAPH_EDGES. The Python twins
+# (collect + pure-Python twins) instead of as ~5 tiny shuffle jobs. Lower
+# than dimcache.DRIVER_ROWS because the Python banding is per-alias work,
+# not a collect: measured on 4 cores, the driver regime took 4.74 s vs
+# 2.39 s for the distributed LSH tail at 50k aliases and 9.57 s vs 3.08 s
+# at 100k, with equal edge sets. The Python twins
 # (py_first_token / py_norm_tokens / py_jaccard) are lockstep-tested against
 # the SQL expressions (tests/test_naming_dialect), so regime choice cannot
 # change the edge set; non-ASCII aliases fall back to the distributed path
@@ -49,16 +52,13 @@ SMALL_DICT_ROWS = 10_000
 
 
 def _collect_small_dict(alias_dict: DataFrame) -> list | None:
-    """The dict's rows if it is small and ASCII-only, else None. Goes
-    through the loaded-dimension cache (dimcache): the dictionary
-    is a collectable broadcast-side dimension by design (the detectors
-    collect it wholesale for their broadcast payloads), so one collect per
-    handle serves every linking call in the session — a limit-probe here
-    measured SLOWER than a plain collect (executeTake runs multiple jobs)."""
-    from grepai_spark.dimcache import cached_rows
+    """The dict's rows if it is small and ASCII-only, else None. The size
+    decision and the rows go through dimcache, so one probe per handle
+    serves every linking call in the session."""
+    from grepai_spark.dimcache import collect_if_small
 
-    rows = cached_rows(alias_dict)
-    if len(rows) > SMALL_DICT_ROWS:
+    rows = collect_if_small(alias_dict, SMALL_DICT_ROWS)
+    if rows is None:
         return None
     if any(max(r["alias"]) >= "\x80" for r in rows if r["alias"]):
         return None
@@ -113,10 +113,10 @@ def link_mentions_exact(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame
     r7: for a collectable dictionary the (alias, canonical_id) dim is
     deduped on the driver from the loaded-dimension rows — the .distinct()
     was a shuffle job on every call just to dedupe the broadcast side."""
-    from grepai_spark.dimcache import cached_rows
+    from grepai_spark.dimcache import collect_if_small
 
-    rows = cached_rows(alias_dict)
-    if len(rows) <= SMALL_DICT_ROWS:
+    rows = collect_if_small(alias_dict, SMALL_DICT_ROWS)
+    if rows is not None:
         pairs = sorted({(r["alias"], r["canonical_id"]) for r in rows})
         dim_df = mentions.sparkSession.createDataFrame(
             pairs, "alias string, canonical_id string"
@@ -145,7 +145,7 @@ def alias_similarity_edges(
 
     r7: small ASCII dictionaries (the common serving case — the reference
     holds the whole dictionary in RAM) run entirely on the driver via the
-    lockstep-tested Python twins: one limit-collect, zero shuffle jobs.
+    lockstep-tested Python twins: one bounded probe, zero shuffle jobs.
     """
     head = _collect_small_dict(alias_dict)
     if head is not None:

@@ -71,7 +71,12 @@ _AMAP_MEMO: dict[tuple[int, str, bool], dict[str, tuple[str, str]]] = {}
 
 def _canonical_map(alias_dict: DataFrame, use_lsh: bool) -> DataFrame:
     """LINK + CANON: similarity edges (blocked or LSH Jaccard) ->
-    cc.canonical_map. The one canonicalization every derivation shares."""
+    cc.canonical_map. The one canonicalization every derivation shares.
+
+    The dictionary is a broadcast-side dimension whose rows the entity map
+    needs anyway, so it is loaded first, in one job; link's and CC's size
+    probes then answer from those rows instead of probing it once each."""
+    cached_rows(alias_dict)
     sim = (
         link.alias_similarity_edges_lsh(alias_dict)
         if use_lsh
@@ -229,7 +234,10 @@ def run(
     cmap = cmap.localCheckpoint(eager=True)
     if cmap_rows is not None:
         attach_rows(cmap, cmap_rows)
-    counters["canonical_entities"] = cmap.select("entity_id").distinct().count()
+    # the edges stage collects cmap for its entity map anyway (the driver
+    # regime attached its rows above), so count over its (canonical_id,
+    # entity_id) rows
+    counters["canonical_entities"] = len({r[1] for r in cached_rows(cmap)})
     if fail_after == "canonicalize":
         raise InjectedFailure("killed after canonicalize stage")
 

@@ -197,13 +197,13 @@ def open_store(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
 
 # loaded graph model (r7): the reference holds adjForward/adjReverse in RAM
 # once per loaded model (rpg/model.go:70-80); this memo is that load for a
-# traversal selection — the selection DataFrames (and, when the slice is
-# small, their collected rows via dimcache) are built once per (session,
-# sf_dir, selection) instead of paying filter analysis + a size probe on
-# every BFS. Store artifacts are immutable per session (module contract),
+# traversal selection — the selection DataFrames are built once per
+# (session, sf_dir, selection), and because the handles are stable, the
+# size probe graphq.bfs makes through dimcache runs once per selection: a
+# small slice's rows, or a large one's "too large" verdict, serve every
+# later BFS. Store artifacts are immutable per session (module contract),
 # so the memo can never serve stale rows.
 _ADJ_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_ADJ_SMALL_EDGES = 100_000  # mirrors graphq.SMALL_ADJ_EDGES
 
 
 def graph_adjacency(
@@ -233,14 +233,6 @@ def graph_adjacency(
     if memo is not None:
         return memo
     adj, deg = _graph_adjacency_dfs(spark, sf_dir, direction, preds)
-    from grepai_spark.dimcache import attach_rows
-
-    head = adj.limit(_ADJ_SMALL_EDGES + 1).collect()
-    if len(head) <= _ADJ_SMALL_EDGES:
-        # small slice: load the model into driver RAM once; BFS then runs
-        # its driver regime with zero per-query jobs
-        attach_rows(adj, head)
-        attach_rows(deg, deg.collect())
     if len(_ADJ_MEMO) > 64:
         _ADJ_MEMO.clear()
     _ADJ_MEMO[key] = (adj, deg)

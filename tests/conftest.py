@@ -58,28 +58,26 @@ def sf_transcripts(spark):
 
 
 @pytest.fixture
-def regimes(monkeypatch):
+def regimes():
     """Run a two-regime path in both size regimes inside one test:
     iterate ``regimes()`` and the body runs once as "driver" (the default
     cutoffs) and once as "distributed" (every size cutoff 0, and the
     alias-map and graph-adjacency memos emptied so no earlier result is
-    served). The patches are undone when the loop ends."""
+    served). Each iteration starts from the default cutoffs, and the
+    patches are undone when the loop ends and at teardown."""
+    from grepai_spark import dimcache, link, pipeline, stores
+
+    mp = pytest.MonkeyPatch()
 
     def each():
+        mp.undo()
         yield "driver"
-        from grepai_spark import cc, graphq, link, pipeline, stores
+        mp.setattr(dimcache, "DRIVER_ROWS", 0)
+        mp.setattr(link, "SMALL_DICT_ROWS", 0)
+        mp.setattr(pipeline, "_AMAP_MEMO", {})
+        mp.setattr(stores, "_ADJ_MEMO", {})
+        yield "distributed"
+        mp.undo()
 
-        with monkeypatch.context() as m:
-            m.setattr(cc, "SMALL_GRAPH_EDGES", 0)
-            m.setattr(cc, "SMALL_DICT_ROWS", 0)
-            m.setattr(
-                cc.connected_components, "__defaults__", (50, 3, 0)
-            )
-            m.setattr(graphq, "SMALL_ADJ_EDGES", 0)
-            m.setattr(stores, "_ADJ_SMALL_EDGES", 0)
-            m.setattr(link, "SMALL_DICT_ROWS", 0)
-            m.setattr(pipeline, "_AMAP_MEMO", {})
-            m.setattr(stores, "_ADJ_MEMO", {})
-            yield "distributed"
-
-    return each
+    yield each
+    mp.undo()

@@ -44,6 +44,8 @@ def test_pipeline_pr_on_sf0001(spark, sf_transcripts, tmp_path):
     # vertices: QueryParserFast merged away by CC
     v = {row.entity_id for row in res.vertices.collect()}
     assert "e_parse_query" in v and "e_query_parser_fast" not in v
+    # build_vertices emits one row per canonical entity
+    assert res.counters["canonical_entities"] == res.counters["vertices"]
 
 
 def test_pipeline_resume_after_kill(spark, tiny_transcripts, tmp_path):

@@ -110,6 +110,35 @@ def test_streaming_kg_edges_match_batch(spark, tiny_transcripts, tmp_path):
     }
     assert got == want
 
+    # null or empty text/tool reach the drain too: a tool with null text is
+    # one calls edge, a null-tool turn keeps its mention, and turns with
+    # neither add nothing
+    import datetime
+
+    from grepai_spark.schemas import TRANSCRIPTS
+
+    ts = datetime.datetime(2024, 1, 1)
+    nulls = spark.createDataFrame(
+        [
+            ("conv-n", 0, "assistant", None, "payments.charge", ts),
+            ("conv-n", 1, "user", "", None, ts),
+            ("conv-n", 2, "user", None, None, ts),
+            ("conv-n", 3, "user", "please run FetchData now", None, ts),
+        ],
+        schema=TRANSCRIPTS,
+    )
+    _write_slice(nulls, f"{src}/slice4")
+    streaming.incremental_kg_edges(spark, f"{src}/slice*", out, ck, d)
+    got = {
+        (r["subj"], r["pred"], r["obj"], r["conv_id"], r["turn_idx"])
+        for r in cat.read(streaming.KG_EDGES_TABLE).collect()
+    }
+    assert got - want == {
+        ("assistant", "calls", "payments.charge", "conv-n", 0),
+        ("user", "mentions", "e_fetch_data", "conv-n", 3),
+    }
+    assert want <= got
+
 
 def test_stateful_conversation_stats(spark, tiny_transcripts, tmp_path):
     """applyInPandasWithState counters persist across micro-batches and
