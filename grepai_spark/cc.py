@@ -100,9 +100,9 @@ def _union_find(rows: list) -> list[tuple[str, str]]:
 
 
 def _union_find_components(rows: list, spark) -> DataFrame:
-    return spark.createDataFrame(
-        _union_find(rows), "node string, component string"
-    )
+    from grepai_spark.dimcache import local_df
+
+    return local_df(spark, _union_find(rows), "node string, component string")
 
 
 def connected_components(
@@ -172,10 +172,10 @@ def canonical_map(
 
     When the dictionary and its link edges are both small enough to collect
     (dimcache.collect_if_small), the whole map is built on the driver —
-    union-find, one LocalRelation out, its rows attached — instead of a
-    distinct shuffle + broadcast join job per call for a dictionary-scale
-    product."""
-    from grepai_spark.dimcache import attach_rows, collect_if_small
+    union-find, one Arrow LocalRelation out (dimcache.local_df, rows
+    attached) — instead of a distinct shuffle + broadcast join job per call
+    for a dictionary-scale product."""
+    from grepai_spark.dimcache import collect_if_small, local_df
 
     head = collect_if_small(alias_dict)
     if head is not None:
@@ -188,11 +188,10 @@ def canonical_map(
                 (c, comp.get(c, c))
                 for c in sorted({r["canonical_id"] for r in head})
             ]
-            return attach_rows(
-                alias_dict.sparkSession.createDataFrame(
-                    rows, "canonical_id string, entity_id string"
-                ),
+            return local_df(
+                alias_dict.sparkSession,
                 rows,
+                "canonical_id string, entity_id string",
             )
     cc = connected_components(link_edges)
     all_canon = alias_dict.select(

@@ -96,7 +96,7 @@ def bfs(
     # that fits in one hand. The stored selections (stores.graph_adjacency)
     # are memoized handles, so their rows, or their "too large" verdict,
     # load on the first traversal and serve every later one.
-    from grepai_spark.dimcache import cached_rows, collect_if_small
+    from grepai_spark.dimcache import cached_rows, collect_if_small, local_df
 
     head = collect_if_small(adj)
     spark = edges.sparkSession
@@ -123,8 +123,8 @@ def bfs(
             for b in nxt:
                 visited_m[b] = d
             frontier_s = nxt
-        out = spark.createDataFrame(
-            sorted(visited_m.items()), "node string, depth bigint"
+        out = local_df(
+            spark, sorted(visited_m.items()), "node string, depth bigint"
         )
         return out.orderBy("depth", "node")
 
@@ -135,7 +135,7 @@ def bfs(
     # re-executed per depth level.
     adj_ok = adj.join(expandable, "a").localCheckpoint(eager=True)
 
-    visited = spark.createDataFrame([(seed, 0)], ["node", "depth"])
+    visited = local_df(spark, [(seed, 0)], "node string, depth bigint")
     frontier = visited
     for d in range(1, depth + 1):
         nxt = (

@@ -13,17 +13,31 @@ content_hash (order-insensitive hash of the bucket's input rows). Anything
 else — missing, failed, or hash-changed — is recomputed and its output
 partition overwritten idempotently. This makes the whole pipeline resumable
 mid-run: killing between stages loses at most uncommitted buckets.
+
+The gate is decided from rows, on the driver: the run collects its
+``n_buckets`` hash rows (one aggregate), the lineage table is read once per
+Catalog handle with its declared schema (one scan, no inference job), and
+:func:`pending_buckets` compares the two in Python — no join job for a
+decision over a few dozen rows. :func:`mark_done` writes its update as a
+LocalRelation and keeps the held rows current, so a stage's output row count
+(:func:`stage_rows_out`) is known without another read.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from weakref import WeakKeyDictionary
 
+from pyspark.sql import DataFrame, Row
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from grepai_spark.dimcache import cached_rows, local_df
 from grepai_spark.schemas import LINEAGE
 from grepai_spark.storage import Catalog
 
 LINEAGE_TABLE = "lineage"
+# what mark_done builds on the driver; updated_ts is stamped in the plan
+_LINEAGE_UPDATE = StructType([f for f in LINEAGE if f.name != "updated_ts"])
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "conv_id") -> DataFrame:
@@ -58,49 +72,74 @@ def bucket_content_hashes(transcripts_b: DataFrame) -> DataFrame:
     )
 
 
-def done_buckets(catalog: Catalog, stage: str) -> DataFrame:
-    lin = catalog.read(LINEAGE_TABLE, schema=LINEAGE)
-    return (
-        lin.where((F.col("stage") == stage) & (F.col("status") == "done"))
-        .select("bucket", "content_hash")
-        .distinct()
-    )
+# Catalog handle -> its lineage rows by (stage, bucket): read once (the
+# first gate of a run) and kept current by mark_done, so a run's later gates
+# and its edges counter need no second read. pipeline.run opens one Catalog
+# per run, so the held rows live exactly one run.
+_HELD: "WeakKeyDictionary[Catalog, dict[tuple[str, int], Row]]" = (
+    WeakKeyDictionary()
+)
 
 
-def pending_buckets(
-    catalog: Catalog, stage: str, hashes: DataFrame
-) -> DataFrame:
-    """Buckets whose (bucket, content_hash) has no done lineage row."""
-    return hashes.join(
-        done_buckets(catalog, stage), ["bucket", "content_hash"], "left_anti"
-    )
+def _held(catalog: Catalog) -> dict[tuple[str, int], Row]:
+    held = _HELD.get(catalog)
+    if held is None:
+        # the LINEAGE schema: no inference job; a missing table reads as an
+        # empty LocalRelation, whose rows come back with no job
+        lin = cached_rows(catalog.read(LINEAGE_TABLE, schema=LINEAGE))
+        held = _HELD[catalog] = {(r["stage"], r["bucket"]): r for r in lin}
+    return held
+
+
+def pending_buckets(catalog: Catalog, stage: str, hash_rows: list) -> list:
+    """The rows of ``hash_rows`` (:func:`bucket_content_hashes`, collected)
+    whose (bucket, content_hash) has no done lineage row for ``stage``."""
+    held = _held(catalog)
+
+    def done(r) -> bool:
+        row = held.get((stage, r["bucket"]))
+        return (
+            row is not None
+            and row["status"] == "done"
+            and row["content_hash"] == r["content_hash"]
+        )
+
+    return [r for r in hash_rows if not done(r)]
 
 
 def mark_done(
-    catalog: Catalog,
-    stage: str,
-    hashes: DataFrame,
-    rows_out: DataFrame,
+    catalog: Catalog, stage: str, pending: list, rows_out: DataFrame
 ) -> None:
-    """Upsert done rows for the given (bucket, content_hash) set.
+    """Upsert done rows for the ``pending`` hash rows.
 
-    rows_out: (bucket, rows_out) counts for the stage's output.
+    rows_out: (bucket, rows_out) counts for the stage's output; collected
+    here (bucket-count rows), so the lineage update itself is a LocalRelation.
     """
-    rows = (
-        hashes.join(rows_out, "bucket", "left")
-        .select(
-            F.lit(stage).alias("stage"),
-            F.col("bucket").cast("int"),
-            "content_hash",
-            F.lit("done").alias("status"),
-            F.col("rows_in").cast("long"),
-            F.coalesce(F.col("rows_out"), F.lit(0)).cast("long").alias("rows_out"),
-            F.current_timestamp().alias("updated_ts"),
-        )
-    )
+    counts = dict(rows_out.collect())
+    rows = [
+        (stage, r["bucket"], r["content_hash"], "done", r["rows_in"],
+         counts.get(r["bucket"], 0))
+        for r in pending
+    ]
+    update = local_df(catalog.spark, rows, _LINEAGE_UPDATE)
     # partitioned by stage: marking one stage's buckets done reads back and
     # rewrites only that stage's partition (O(stage), not O(table)) — the
     # contract's O(dirty) promise applies to the lineage table itself too
     catalog.merge_by_key(
-        LINEAGE_TABLE, rows, ["stage", "bucket"], partition_by=["stage"]
+        LINEAGE_TABLE,
+        update.withColumn("updated_ts", F.current_timestamp()),
+        ["stage", "bucket"],
+        partition_by=["stage"],
+    )
+    held = _HELD.get(catalog)
+    if held is not None:
+        held.update(((r["stage"], r["bucket"]), r) for r in cached_rows(update))
+
+
+def stage_rows_out(catalog: Catalog, stage: str) -> int:
+    """Sum of ``rows_out`` over ``stage``'s lineage rows. Every output
+    partition a stage writes is marked with its own count, so for a
+    bucket-partitioned stage table this is the table's row count."""
+    return sum(
+        r["rows_out"] for (s, _), r in _held(catalog).items() if s == stage
     )

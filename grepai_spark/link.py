@@ -113,13 +113,13 @@ def link_mentions_exact(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame
     r7: for a collectable dictionary the (alias, canonical_id) dim is
     deduped on the driver from the loaded-dimension rows — the .distinct()
     was a shuffle job on every call just to dedupe the broadcast side."""
-    from grepai_spark.dimcache import collect_if_small
+    from grepai_spark.dimcache import collect_if_small, local_df
 
     rows = collect_if_small(alias_dict, SMALL_DICT_ROWS)
     if rows is not None:
         pairs = sorted({(r["alias"], r["canonical_id"]) for r in rows})
-        dim_df = mentions.sparkSession.createDataFrame(
-            pairs, "alias string, canonical_id string"
+        dim_df = local_df(
+            mentions.sparkSession, pairs, "alias string, canonical_id string"
         )
     else:
         dim_df = alias_dict.select("alias", "canonical_id").distinct()
@@ -161,14 +161,9 @@ def alias_similarity_edges(
                 (r["alias"], r["canonical_id"], toks)
             )
         pairs = _py_pairs_from_buckets(buckets, threshold, block_cap)
-        from grepai_spark.dimcache import attach_rows
+        from grepai_spark.dimcache import local_df
 
-        return attach_rows(
-            alias_dict.sparkSession.createDataFrame(
-                pairs, "src string, dst string"
-            ),
-            pairs,
-        )
+        return local_df(alias_dict.sparkSession, pairs, "src string, dst string")
     d = (
         with_norm_tokens(alias_dict)
         .where(F.size("norm_tokens") > 0)
@@ -331,14 +326,9 @@ def alias_similarity_edges_lsh(
                     (r["alias"], r["canonical_id"], toks)
                 )
         pairs = _py_pairs_from_buckets(buckets, threshold, bucket_cap)
-        from grepai_spark.dimcache import attach_rows
+        from grepai_spark.dimcache import local_df
 
-        return attach_rows(
-            alias_dict.sparkSession.createDataFrame(
-                pairs, "src string, dst string"
-            ),
-            pairs,
-        )
+        return local_df(alias_dict.sparkSession, pairs, "src string, dst string")
     d = (
         with_norm_tokens(alias_dict)
         .where(F.size("norm_tokens") > 0)

@@ -22,10 +22,15 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from grepai_spark import cc, extract, link, lineage, materialize
-from grepai_spark.dimcache import attach_rows, attached_rows, cached_rows
+from grepai_spark.dimcache import cached_rows, local_df
+from grepai_spark.schemas import EDGES, VERTICES
 from grepai_spark.storage import Catalog
+
+# the bucket-partitioned edges table run() writes and reads back
+_EDGES_B = StructType([*EDGES, StructField("bucket", IntegerType())])
 
 
 class InjectedFailure(RuntimeError):
@@ -186,16 +191,15 @@ def run(
     counters: dict[str, int] = {}
 
     tb = lineage.with_bucket(transcripts, n_buckets)
-    hashes = lineage.bucket_content_hashes(tb).localCheckpoint(eager=True)
+    # n_buckets rows, one aggregate: every gate below is decided from them
+    hashes = lineage.bucket_content_hashes(tb).collect()
 
     # ---- stage: embeddings (content-hash cached), per-bucket resumable -----
     if embed:
         from grepai_spark import embed as embed_mod
 
         pending_v = lineage.pending_buckets(catalog, "vectors", hashes)
-        pending_v_ids = [
-            r["bucket"] for r in pending_v.select("bucket").collect()
-        ]
+        pending_v_ids = [r["bucket"] for r in pending_v]
         counters["vectors_buckets_pending"] = len(pending_v_ids)
         if pending_v_ids:
             sub = tb.where(F.col("bucket").isin(pending_v_ids))
@@ -227,23 +231,18 @@ def run(
         raise InjectedFailure("killed after embed stage")
 
     # ---- stage: canonicalization (dictionary-level, cheap, global) ---------
+    # held as rows, one LocalRelation with them attached: no job in the
+    # driver regime (its map is already one), and in the distributed regime
+    # the collect the edges stage's entity map needs anyway
     cmap = _canonical_map(alias_dict, use_lsh)
-    # the small regime attached its rows to this handle; carry them across
-    # the checkpoint so the edges stage builds its alias map with no job
-    cmap_rows = attached_rows(cmap)
-    cmap = cmap.localCheckpoint(eager=True)
-    if cmap_rows is not None:
-        attach_rows(cmap, cmap_rows)
-    # the edges stage collects cmap for its entity map anyway (the driver
-    # regime attached its rows above), so count over its (canonical_id,
-    # entity_id) rows
+    cmap = local_df(spark, cached_rows(cmap), cmap.schema)
     counters["canonical_entities"] = len({r[1] for r in cached_rows(cmap)})
     if fail_after == "canonicalize":
         raise InjectedFailure("killed after canonicalize stage")
 
     # ---- stage: edges (extract + link + materialize, fused), per bucket ----
     pending_e = lineage.pending_buckets(catalog, "edges", hashes)
-    pending_e_ids = [r["bucket"] for r in pending_e.select("bucket").collect()]
+    pending_e_ids = [r["bucket"] for r in pending_e]
     counters["edges_buckets_pending"] = len(pending_e_ids)
     if pending_e_ids:
         sub = tb.where(F.col("bucket").isin(pending_e_ids))
@@ -251,11 +250,15 @@ def run(
         edges_b = lineage.with_bucket(edges, n_buckets)
         catalog.merge_by_key(
             "edges",
+            # written with the declared types, so reads can declare them
             edges_b.select(
-                "bucket", "subj", "pred", "obj", "conv_id", "turn_idx", "weight"
+                "bucket", *(F.col(f.name).cast(f.dataType) for f in EDGES)
             ),
             ["bucket"],
             partition_by=["bucket"],
+            # a recomputed bucket whose new content yields no edge is
+            # swapped to empty, not left holding its old rows
+            ensure=[(b,) for b in pending_e_ids],
         )
         out_counts = edges_b.groupBy("bucket").agg(
             F.count("*").alias("rows_out")
@@ -268,7 +271,7 @@ def run(
         from grepai_spark import stores
 
         stores.build_graph_artifacts(
-            catalog, catalog.read("edges").drop("bucket")
+            catalog, catalog.read("edges", _EDGES_B).drop("bucket")
         )
     if fail_after == "edges":
         raise InjectedFailure("killed after edges stage")
@@ -277,16 +280,21 @@ def run(
     vertices = materialize.build_vertices(alias_dict, cmap)
     catalog.overwrite("vertices", vertices)
 
-    edges_out = catalog.read("edges").drop("bucket")
-    vertices_out = catalog.read("vertices")
-    counters["edges"] = edges_out.count()
-    counters["vertices"] = vertices_out.count()
+    edges_out = catalog.read("edges", _EDGES_B).drop("bucket")
+    vertices_out = catalog.read("vertices", VERTICES)
+    # counters from rows already held, no count() job: every edges bucket
+    # partition is written and then marked done with its own row count, so
+    # the lineage rows_out sum is the table's row count; build_vertices
+    # emits one row per canonical entity
+    counters["edges"] = lineage.stage_rows_out(catalog, "edges")
+    counters["vertices"] = counters["canonical_entities"]
 
     # ---- metrics sink (S8 analog: stats NDJSON -> a small metrics table) ---
     # append-only run log (the reference's stats recorder appends NDJSON,
     # stats/recorder.go): each run adds its counter snapshot — O(new rows),
     # never a table rewrite; readers take the latest run_ts per metric
-    metrics = spark.createDataFrame(
+    metrics = local_df(
+        spark,
         [(k, int(v)) for k, v in sorted(counters.items())],
         "metric string, value long",
     ).withColumn("run_ts", F.current_timestamp())

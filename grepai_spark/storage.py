@@ -107,12 +107,20 @@ class Catalog:
         return os.path.isdir(self.path(table))
 
     def read(self, table: str, schema: StructType | None = None) -> DataFrame:
+        """The table's rows. With `schema`, a missing table reads as empty
+        and an existing one is read with that schema (no inference job, which
+        parquet otherwise runs per read); without it, a missing table
+        raises."""
+        from grepai_spark.dimcache import local_df
+
         p = self.path(table)
         if not os.path.isdir(p):
             if schema is None:
                 raise FileNotFoundError(p)
-            return self.spark.createDataFrame([], schema=schema)
-        return self.spark.read.parquet(p)
+            return local_df(self.spark, [], schema)
+        if schema is None:
+            return self.spark.read.parquet(p)
+        return self.spark.read.schema(schema).parquet(p)
 
     def overwrite(
         self,
@@ -190,6 +198,7 @@ class Catalog:
         updates: DataFrame,
         keys: list[str],
         partition_by: list[str] | None = None,
+        ensure: list[tuple] | None = None,
     ) -> None:
         """Idempotent upsert (Iceberg: MERGE INTO ... WHEN MATCHED UPDATE).
 
@@ -198,7 +207,8 @@ class Catalog:
         * `partition_by == keys` (the pipeline's per-bucket stage merges):
           dynamic partition overwrite — ONLY the dirty partitions are
           swapped in, O(dirty buckets) not O(table), and untouched bucket
-          files are never rewritten.
+          files are never rewritten. `ensure` names partitions to swap even
+          when `updates` holds no rows for them (see _overwrite_partitions).
         * `partition_by` a strict subset of `keys` (streaming row-level
           merges into a bucketed table): the dirty partitions are READ back,
           anti-joined against the update keys, unioned with the updates and
@@ -215,7 +225,7 @@ class Catalog:
             self.overwrite(table, updates, partition_by=partition_by)
             return
         if partition_by and set(partition_by) == set(keys):
-            self._overwrite_partitions(table, updates, partition_by)
+            self._overwrite_partitions(table, updates, partition_by, ensure)
             return
         if (
             partition_by

@@ -154,19 +154,21 @@ def transcripts_duckdb_sql(sf_dir: str) -> str:
 
 
 # one DataFrame handle per session (r7): the dict is an immutable code
-# constant, and a fresh createDataFrame per call costs driver-side
-# conversion + analysis on every query; a stable handle also lets the
-# loaded-dimension cache (dimcache) reuse its collected rows
+# constant, and a fresh DataFrame per call costs driver-side conversion +
+# analysis on every query. It is an Arrow LocalRelation (dimcache.local_df):
+# its scans (the vertices overwrite, the distributed link/CC tails) run no
+# Python worker, and its rows are attached, so no consumer collects them
 _DICT_MEMO: dict[str, DataFrame] = {}
 
 
 def alias_dict_df(spark: SparkSession) -> DataFrame:
+    from grepai_spark.dimcache import local_df
     from grepai_spark.schemas import ALIAS_DICT
 
     key = spark.sparkContext.applicationId
     df = _DICT_MEMO.get(key)
     if df is None:
-        df = spark.createDataFrame(ALIAS_ROWS, schema=ALIAS_DICT)
+        df = local_df(spark, ALIAS_ROWS, ALIAS_DICT)
         if len(_DICT_MEMO) > 8:
             _DICT_MEMO.clear()
         _DICT_MEMO[key] = df

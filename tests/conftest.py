@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import datetime
+import itertools
 
 import pytest
 
@@ -55,6 +56,59 @@ def sf_transcripts(spark):
     from grepai_spark.synth import load_transcripts
 
     return load_transcripts(spark, SF_DIR)
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), number of Spark jobs fn ran)``, counted
+    by job group once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"count-jobs-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture
+def hostile_alias_rows():
+    """An adversarial alias dictionary: near-dup token sets, a zero-token
+    name, non-ASCII aliases (which keep linking off its driver regime) and
+    one hub wider than both per-block caps, so the cap decides the
+    candidate set."""
+    from grepai_spark import link
+
+    rows = [
+        ("FetchData", "c1", "entity"),
+        ("fetch_data", "c2", "entity"),
+        ("DataFetcher", "c3", "entity"),
+        ("fetchDataNow", "c4", "entity"),
+        ("__", "c5", "entity"),  # zero tokens -> filtered both sides
+        ("ParseQuery", "c6", "entity"),
+        ("query_parse", "c7", "entity"),
+        ("naïveRôle", "c8", "entity"),
+        ("role_naive", "c9", "entity"),
+    ]
+    # one hub: > cap aliases all sharing the identical token set, so every
+    # band bucket for that set overflows and the rn cap must agree exactly
+    for i in range(link.LSH_BUCKET_CAP + 30):
+        rows.append((f"hub_alias_{i:04d}", f"h{i:04d}", "entity"))
+    # 'hub_alias_NNNN' tokens differ per alias; to make a REAL shared set,
+    # add aliases that normalize identically (case variants)
+    for i in range(25):
+        rows.append((f"sharedTokenSet{i}", f"s{i}", "entity"))
+    return rows
 
 
 @pytest.fixture

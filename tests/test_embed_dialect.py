@@ -140,7 +140,9 @@ def test_embed_plane_matches_duckdb_on_hostile_corpus(spark, tmp_path):
 
 
 @pytest.mark.parametrize("lsh", [False, True], ids=["blocked", "lsh"])
-def test_lsh_linking_matches_duckdb_on_hostile_dict(spark, lsh):
+def test_lsh_linking_matches_duckdb_on_hostile_dict(
+    spark, hostile_alias_rows, lsh
+):
     """alias_similarity_edges (first-token blocks) and
     alias_similarity_edges_lsh (MinHash bands) vs the DuckDB replay on a
     dict with near-dup token sets, zero-token names, unicode, and one hub
@@ -150,26 +152,7 @@ def test_lsh_linking_matches_duckdb_on_hostile_dict(spark, lsh):
     (skew.capped_block_pairs + Jaccard verify)."""
     from grepai_spark.schemas import ALIAS_DICT
 
-    rows = [
-        ("FetchData", "c1", "entity"),
-        ("fetch_data", "c2", "entity"),
-        ("DataFetcher", "c3", "entity"),
-        ("fetchDataNow", "c4", "entity"),
-        ("__", "c5", "entity"),  # zero tokens -> filtered both sides
-        ("ParseQuery", "c6", "entity"),
-        ("query_parse", "c7", "entity"),
-        ("naïveRôle", "c8", "entity"),
-        ("role_naive", "c9", "entity"),
-    ]
-    # one hub: > cap aliases all sharing the identical token set, so every
-    # band bucket for that set overflows and the rn cap must agree exactly
-    for i in range(link.LSH_BUCKET_CAP + 30):
-        rows.append((f"hub_alias_{i:04d}", f"h{i:04d}", "entity"))
-    # 'hub_alias_NNNN' tokens differ per alias; to make a REAL shared set,
-    # add aliases that normalize identically (case variants)
-    for i in range(25):
-        rows.append((f"sharedTokenSet{i}", f"s{i}", "entity"))
-
+    rows = hostile_alias_rows
     d = spark.createDataFrame(rows, schema=ALIAS_DICT)
     edges = link.alias_similarity_edges_lsh if lsh else link.alias_similarity_edges
     got = sorted((r["src"], r["dst"]) for r in edges(d).collect())

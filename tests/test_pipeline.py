@@ -23,6 +23,16 @@ def _edge_rows(edges_df):
     )
 
 
+def _assert_counters_are_table_counts(spark, res, out):
+    """run()'s edges/vertices counters come from rows it holds, not from
+    count() jobs; they must still be the tables' row counts."""
+    from grepai_spark.storage import Catalog
+
+    catalog = Catalog(spark, out)
+    assert res.counters["edges"] == catalog.read("edges").count()
+    assert res.counters["vertices"] == catalog.read("vertices").count()
+
+
 def _golden(transcripts_df):
     rows = [r.asDict() for r in transcripts_df.collect()]
     return golden_triples(rows, ALIAS_ROWS)
@@ -61,15 +71,99 @@ def test_pipeline_resume_after_kill(spark, tiny_transcripts, tmp_path):
     # resume skipped the already-done edges buckets
     assert res.counters["edges_buckets_pending"] == 0
     assert _triple_set(res.edges) == want
+    _assert_counters_are_table_counts(spark, res, out)
 
 
 def test_pipeline_rerun_noop(spark, tiny_transcripts, tmp_path):
     out = str(tmp_path / "out")
     d = alias_dict_df(spark)
     r1 = pipeline.run(spark, tiny_transcripts, d, out)
+    _assert_counters_are_table_counts(spark, r1, out)
     r2 = pipeline.run(spark, tiny_transcripts, d, out)
     assert r2.counters["edges_buckets_pending"] == 0
     assert _triple_set(r1.edges) == _triple_set(r2.edges)
+    _assert_counters_are_table_counts(spark, r2, out)
+
+
+def test_pipeline_rerun_over_changed_input(spark, tiny_transcripts, tmp_path):
+    """A rerun recomputes only the buckets whose input changed and leaves
+    the tables equal to a clean run over the new input: one appended turn
+    re-derives its conversation's bucket; a bucket edited to yield no edge
+    at all is emptied, not left holding its old rows."""
+    import datetime
+
+    from grepai_spark.schemas import TRANSCRIPTS
+
+    out = str(tmp_path / "out")
+    d = alias_dict_df(spark)
+    pipeline.run(spark, tiny_transcripts, d, out)
+    ts = datetime.datetime(2024, 1, 2)
+    appended = tiny_transcripts.unionByName(
+        spark.createDataFrame(
+            [("conv-b", 2, "user", "now MergeSort it", "", ts)],
+            schema=TRANSCRIPTS,
+        )
+    )
+    silent = [
+        (c, i, role, "nothing to see" if c == "conv-d" else text, tool, t)
+        for c, i, role, text, tool, t in map(tuple, appended.collect())
+    ]
+    for n, step in enumerate(
+        [appended, spark.createDataFrame(silent, schema=TRANSCRIPTS)]
+    ):
+        res = pipeline.run(spark, step, d, out)
+        assert res.counters["edges_buckets_pending"] == 1
+        clean = pipeline.run(spark, step, d, str(tmp_path / f"clean{n}"))
+        assert _edge_rows(res.edges) == _edge_rows(clean.edges)
+        _assert_counters_are_table_counts(spark, res, out)
+
+
+def test_zero_pending_resume_job_budget(
+    spark, tiny_transcripts, tmp_path, count_jobs
+):
+    """A zero-pending resume runs only the jobs it cannot avoid: the
+    content-hash aggregate (2 jobs under AQE), one lineage read, the
+    vertices overwrite (3) and the metrics append. It ran 17 when the gates
+    were left-anti joins, the canonical map a checkpoint of a Python-list
+    DataFrame and the counters count() jobs; a reintroduced Python-RDD
+    scan, schema-inference job or gate join fails this."""
+    out = str(tmp_path / "out")
+    d = alias_dict_df(spark)
+    pipeline.run(spark, tiny_transcripts, d, out)
+    res, n = count_jobs(lambda: pipeline.run(spark, tiny_transcripts, d, out))
+    assert res.counters["edges_buckets_pending"] == 0
+    assert n <= 7, n
+
+
+def test_pipeline_on_hostile_dictionary(
+    spark, tmp_path, regimes, hostile_alias_rows
+):
+    """The non-ASCII hostile dictionary forces link's distributed tail;
+    run in both regimes, so the distributed CC result also goes through
+    run()'s rows-held canonical map. The written edges equal the flagship
+    query's on the same dictionary, and the counters the table counts."""
+    import datetime
+
+    from grepai_spark.schemas import ALIAS_DICT, TRANSCRIPTS
+
+    ts = datetime.datetime(2024, 1, 1)
+    t = spark.createDataFrame(
+        [
+            ("conv-h", 0, "user", "call naïveRôle then role_naive", "", ts),
+            ("conv-h", 1, "assistant", "FetchData and fetch_data", "x.y", ts),
+            ("conv-i", 0, "user", "sharedTokenSet3 hub_alias_0007 __", "", ts),
+            ("conv-i", 1, "user", "DataFetcher, ParseQuery", None, ts),
+        ],
+        schema=TRANSCRIPTS,
+    )
+    d = spark.createDataFrame(hostile_alias_rows, schema=ALIAS_DICT)
+    for regime in regimes():
+        out = str(tmp_path / regime)
+        res = pipeline.run(spark, t, d, out)
+        want = _edge_rows(pipeline.kg_edges_df(spark, t, d))
+        assert len(want) > 4, regime
+        assert _edge_rows(res.edges) == want, regime
+        _assert_counters_are_table_counts(spark, res, out)
 
 
 def test_pipeline_lsh_variant_same_output(spark, tiny_transcripts, tmp_path):
