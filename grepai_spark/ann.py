@@ -68,56 +68,25 @@ def _arr_lit(vals: list[float], dialect: str) -> str:
     return f"CAST([{body}] AS DOUBLE[])"
 
 
-def _unrolled_dot_terms(vec_col: str, vals: list[float]) -> str:
-    """Unrolled literal dot product: plain scalar arithmetic instead of a
-    higher-order-function fold. HOF lambdas (aggregate/zip_with) are
-    interpreted per element — never codegen'd — and allocate a zipped array
-    per row; this chain stays inside WholeStageCodegen. Bit-identical to the
-    fold by construction: the association is the fold's own left-to-right
-    ((0.0 + t1) + t2)..., x * 1.0 == x and acc + (-x) == acc - x exactly in
-    IEEE 754, and each element is the same float->double cast."""
-    parts = ["CAST(0.0 AS DOUBLE)"]
-    for i, v in enumerate(vals):
-        x = f"CAST(try_element_at({vec_col}, {i + 1}) AS DOUBLE)"
-        if v == 1.0:
-            parts.append(f" + {x}")
-        elif v == -1.0:
-            parts.append(f" - {x}")
-        else:
-            parts.append(f" + {x} * CAST('{v!r}' AS DOUBLE)")
-    return "(" + "".join(parts) + ")"
+def _fold_dot(a_sql: str, b_sql: str) -> str:
+    """Left-to-right dot of two array<double> expressions; NULL if either
+    side is NULL, holds a NULL or has another width (zip_with pads with
+    NULL). It is the one Spark dot form because the unrolled codegen chains
+    it replaced measured slower on 4 cores under C1 JIT (traced perfbench
+    curate: cosine_topk p50 0.32-0.33 -> 0.12-0.14 s)."""
+    return (
+        f"aggregate(zip_with({a_sql}, {b_sql}, (x, y) -> x * y),"
+        f" CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
 
 
 def dot_sql(vec_col: str, vals: list[float], dialect: str = "spark") -> str:
     """Dot product of an array column with a literal vector — same sequential
-    accumulation order in both engines -> same IEEE result.
-
-    Spark side is the unrolled codegen form (r7): the sequential fold it
-    replaces returns NULL whenever size(vec) != len(vals) (zip_with pads the
-    shorter side with NULL and NULL poisons the fold) and NULL for a NULL
-    vec, so the size guard reproduces the fold's semantics exactly while the
-    taken branch is pure codegen arithmetic."""
-    if dialect == "spark":
-        return (
-            f"IF(size({vec_col}) = {len(vals)},"
-            f" {_unrolled_dot_terms(vec_col, vals)}, CAST(NULL AS DOUBLE))"
-        )
+    accumulation order in both engines -> same IEEE result."""
     lit = _arr_lit(vals, dialect)
+    if dialect == "spark":
+        return _fold_dot(f"CAST({vec_col} AS array<double>)", lit)
     return f"list_dot_product(CAST({vec_col} AS DOUBLE[]), {lit})"
-
-
-def _fold_dot_sql(vec_col: str, vals: list[float]) -> str:
-    """The sequential-fold literal dot (Spark dialect). Kept for the plane
-    signatures: a bucket expression carries n_planes dots, and unrolling all
-    of them (r7 experiment) ballooned the expression tree ~64x — planning +
-    codegen per query call cost far more than the interpreted fold saves at
-    a handful of dots per row. Single-dot call sites use the unrolled
-    dot_sql instead."""
-    lit = _arr_lit(vals, "spark")
-    return (
-        f"aggregate(zip_with(CAST({vec_col} AS array<double>), {lit},"
-        f" (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
 
 
 def bucket_sql(
@@ -130,11 +99,7 @@ def bucket_sql(
     """Sign-LSH bucket id as an n_planes-char '01' string."""
     ps = planes(n_planes, dim, seed)
     bits = [
-        "CASE WHEN {} >= 0 THEN '1' ELSE '0' END".format(
-            _fold_dot_sql(vec_col, p)
-            if dialect == "spark"
-            else dot_sql(vec_col, p, dialect)
-        )
+        f"CASE WHEN {dot_sql(vec_col, p, dialect)} >= 0 THEN '1' ELSE '0' END"
         for p in ps
     ]
     if dialect == "spark":
@@ -172,61 +137,24 @@ def cosine_vs_query_sql(
     vec_col: str, query_vec: list[float], dialect: str = "spark"
 ) -> str:
     """cosine(vec, q) with the norms spelled out (corpus vectors are NOT
-    assumed normalized, unlike the turn encoder's output).
-
-    The query dot is unrolled; the self-norm keeps the fold (r7): per-query
-    expression ANALYSIS grows with tree size and the topk queries run over
-    partition-pruned row counts where a second ~190-node unrolled tree cost
-    more per call than the interpreted fold did per row (measured 0.194 s
-    unroll-both vs 0.130 s mixed vs 0.112 s fold-both on the sf0.1 LSH
-    store). Pair-join paths fold both sides too: pair_dot_sql's
-    zip_with/aggregate form (its docstring has the F5 rationale)."""
+    assumed normalized, unlike the turn encoder's output)."""
     d = dot_sql(vec_col, query_vec, dialect)
     qn = sum(x * x for x in query_vec) ** 0.5
     sq = dot_sql_self(vec_col, dialect)
     return f"({d}) / (sqrt({sq}) * CAST('{qn!r}' AS DOUBLE))"
 
 
-def dot_sql_self(
-    vec_col: str, dialect: str = "spark", dim: int | None = None
-) -> str:
-    """sum(x^2) over the array. With `dim` (the expected vector width) the
-    Spark form unrolls to codegen arithmetic for that width and keeps the
-    fold as the else-branch — unlike the literal dot, a self-dot of an
-    off-width vector is a VALID number, so the fold fallback must stay."""
-    fold = (
-        f"aggregate(transform(CAST({vec_col} AS array<double>),"
-        f" x -> x * x), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
+def dot_sql_self(vec_col: str, dialect: str = "spark") -> str:
+    """sum(x^2) over the array — a valid number at any width."""
     if dialect == "spark":
-        if dim is None:
-            return fold
-        parts = ["CAST(0.0 AS DOUBLE)"]
-        for i in range(dim):
-            x = f"CAST(try_element_at({vec_col}, {i + 1}) AS DOUBLE)"
-            parts.append(f" + {x} * {x}")
-        unrolled = "(" + "".join(parts) + ")"
-        return f"IF(size({vec_col}) = {dim}, {unrolled}, {fold})"
+        return pair_dot_sql(vec_col, vec_col)
     return f"list_dot_product(CAST({vec_col} AS DOUBLE[]), CAST({vec_col} AS DOUBLE[]))"
 
 
 def pair_dot_sql(a: str, b: str) -> str:
-    """Dot product of two array columns as the zip_with/aggregate fold.
-
-    This site was unrolled to a dim-term codegen chain earlier in r7
-    (bit-identical: same left-to-right association) because the fold's
-    per-element interpreted evaluation dominated the 2M-pair verify. The
-    F5 method-split fix inverted that trade: with generated methods capped
-    at 256 chars the fold's steady state matches the unroll (0.9 vs 0.8 s
-    isolated), while the unroll's ~10x larger generated source is exactly
-    the C2 JIT-warmup surface F5 diagnosed — with it, 2 of 4 certified
-    bench sessions drew the verify at 5-6 s; fold-only drew 2.2-2.5 s in
-    every session.
-    """
-    return (
-        f"aggregate(zip_with(CAST({a} AS array<double>),"
-        f" CAST({b} AS array<double>),"
-        f" (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    """Dot product of two array columns (Spark dialect)."""
+    return _fold_dot(
+        f"CAST({a} AS array<double>)", f"CAST({b} AS array<double>)"
     )
 
 
@@ -274,7 +202,7 @@ def write_lsh_bucketed(
     the batch job that turns ann_lsh_topk's per-row bucket expression into a
     physical partition column. One pass over the corpus, one write; queries
     then touch ~(1+n_planes)/2^n_planes of the files (multi-probe, see
-    ann_lsh_topk_bucketed). The repartition on bucket keeps file count =
+    ann_lsh_topk_store). The repartition on bucket keeps file count =
     O(buckets), not O(buckets x input-tasks) — without it every input task
     writes a sliver into every bucket directory and the store degenerates
     into 2^n_planes x tasks tiny files."""
@@ -310,24 +238,6 @@ def ann_lsh_topk_store(
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
         .select(id_col, "score")
-    )
-
-
-def ann_lsh_topk_bucketed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int,
-    n_planes: int = N_PLANES,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    hamming: int = 1,
-) -> DataFrame:
-    """ann_lsh_topk_store over a parquet path (opens the store per call —
-    fine for one-off queries; query services hold the store open)."""
-    return ann_lsh_topk_store(
-        spark.read.parquet(path), query_vec, k, n_planes, vec_col, id_col,
-        hamming,
     )
 
 
@@ -395,9 +305,7 @@ def ivf_topk(
 
 def _pair_cos():
     """cos of a capped_block_pairs row from its carried vectors (a_v, b_v)
-    and precomputed norms (a_nv, b_nv). The pair dot is the
-    zip_with/aggregate fold; why not the unrolled chain (F5 JIT warmup) is
-    in pair_dot_sql's docstring."""
+    and precomputed norms (a_nv, b_nv)."""
     return F.expr(pair_dot_sql("a_v", "b_v")) / (F.col("a_nv") * F.col("b_nv"))
 
 
@@ -405,7 +313,7 @@ def _vec_norm(vec_col: str):
     """Per-vector norm, computed ONCE per row before pairing — not per
     candidate pair, where it would be the dominant redundant work (each
     vector meets ~block-size partners)."""
-    return F.sqrt(F.expr(dot_sql_self(vec_col, dim=EMBED_TABLE_DIM)))
+    return F.sqrt(F.expr(dot_sql_self(vec_col)))
 
 
 def near_dup_cosine_pairs(

@@ -22,15 +22,9 @@ from pyspark.sql import functions as F
 
 
 def dot_score(vec_col: str, query_vec: list[float]) -> F.Column:
-    """Dot product of a float-array column with a literal query vector.
-
-    r7: the unrolled codegen form (ann.dot_sql) — the zip_with/aggregate
-    fold it replaces is interpreted per element (HOFs are never codegen'd).
-    Same sequential accumulation order as the fold and as DuckDB's
-    list_dot_product, so oracles agree bit-for-bit; off-width or NULL
-    vectors score NULL exactly like the fold (see ann.dot_sql). Inputs are
-    L2-normalized by the encoder, so dot == cosine.
-    """
+    """Dot product of a float-array column with a literal query vector
+    (ann.dot_sql); off-width or NULL vectors score NULL. Inputs are
+    L2-normalized by the encoder, so dot == cosine."""
     from grepai_spark.ann import dot_sql
 
     return F.expr(dot_sql(vec_col, query_vec))

@@ -44,9 +44,9 @@ def get_spark(
         # Generated-class cache (r7, guide §1/§4-adjacent: keep compiled
         # code warm): CodeGenerator's JVM-wide cache holds only 100
         # generated classes by default, and one pass over this engine's
-        # query mix compiles several hundred distinct sources (unrolled dot
-        # chains, per-query projections/predicates/orderings), so every
-        # repeated execution recompiled — and re-JIT-warmed — everything
+        # query mix compiles several hundred distinct sources (per-query
+        # projections/predicates/orderings), so every repeated execution
+        # recompiled — and re-JIT-warmed — everything
         # (measured A/B at sf0.1: interleaved 20-query passes run 21-25%
         # faster in total with the cache raised, near-dup LSH verify ~2x).
         # Scale-independent: a per-JVM compile cache of a few thousand

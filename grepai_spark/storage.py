@@ -221,46 +221,15 @@ class Catalog:
         Last-write-wins per key is safe for our tables: vectors are
         deterministic functions of the key and lineage is append-ish.
         """
-        if not self.exists(table):
-            self.overwrite(table, updates, partition_by=partition_by)
-            return
-        if partition_by and set(partition_by) == set(keys):
-            self._overwrite_partitions(table, updates, partition_by, ensure)
-            return
         if (
             partition_by
-            and set(partition_by) < set(keys)
-            and self._is_partitioned_by(table, partition_by[0])
+            and set(partition_by) == set(keys)
+            and self.exists(table)
         ):
-            dirty = [
-                tuple(r)
-                for r in updates.select(*partition_by).distinct().collect()
-            ]
-            existing = self.read(table)
-            cond = None
-            for vals in dirty:
-                c = F.lit(True)
-                for col, v in zip(partition_by, vals):
-                    c = c & (F.col(col) == F.lit(v))
-                cond = c if cond is None else (cond | c)
-            if cond is None:  # empty update batch
-                return
-            # partition-column filter -> directory pruning on the scan
-            existing_dirty = existing.where(cond)
-            kept = existing_dirty.join(
-                updates.select(*keys).distinct(), on=keys, how="left_anti"
-            )
-            merged = kept.unionByName(updates.select(*kept.columns))
-            self._overwrite_partitions(table, merged, partition_by)
+            self._overwrite_partitions(table, updates, partition_by, ensure)
             return
-        existing = self.read(table)
-        kept = existing.join(
-            updates.select(*keys).distinct(), on=keys, how="left_anti"
-        )
-        self.overwrite(
-            table,
-            kept.unionByName(updates.select(*kept.columns)),
-            partition_by=partition_by,
+        self._replace_scoped(
+            table, updates, updates.select(*keys), keys, partition_by
         )
 
     def replace_by_scope(
@@ -290,6 +259,19 @@ class Catalog:
         named by `scope` are read back and swapped — O(dirty buckets), never
         O(table).
         """
+        self._replace_scoped(table, updates, scope, scope_keys, partition_by)
+
+    def _replace_scoped(
+        self,
+        table: str,
+        updates: DataFrame,
+        scope: DataFrame,
+        scope_keys: list[str],
+        partition_by: list[str] | None,
+    ) -> None:
+        """The body both public merges share (each public name is wrapped by
+        the benchmark's spans, so neither calls the other): delete the rows
+        matching `scope` on `scope_keys`, insert `updates`."""
         if not self.exists(table):
             self.overwrite(table, updates, partition_by=partition_by)
             return
@@ -310,6 +292,7 @@ class Catalog:
                 for col, v in zip(partition_by, vals):
                     c = c & (F.col(col) == F.lit(v))
                 cond = c if cond is None else (cond | c)
+            # partition-column filter -> directory pruning on the scan
             existing_dirty = self.read(table).where(cond)
             kept = existing_dirty.join(scope, on=scope_keys, how="left_anti")
             merged = kept.unionByName(updates.select(*kept.columns))

@@ -8,8 +8,8 @@ directory (at production scale: Iceberg table commits / Kafka), and the
 incremental unit is the micro-batch:
 
     readStream(transcripts dir)
-      -> foreachBatch: extract call triples + merge idempotently by
-         (conv_id, turn_idx, obj) into the edges store
+      -> foreachBatch: derive the turns' KG edges + replace them by
+         (bucket, conv_id, turn_idx) scope in the edges store
 
 foreachBatch + scope-keyed MERGE gives exactly-once *effective* semantics on
 top of at-least-once delivery, INCLUDING redelivery with modified content:
@@ -44,11 +44,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from grepai_spark import extract, lineage
+from grepai_spark import lineage
 from grepai_spark.schemas import TRANSCRIPTS
 from grepai_spark.storage import Catalog
 
-EDGES_TABLE = "edges_stream"
 STREAM_BUCKETS = 16
 
 # modification stamps are second-granular in the fixtures; ties broken on
@@ -106,48 +105,6 @@ def _migrate_bucketed(
         table,
         lineage.with_bucket(existing, n_buckets, key=key),
         partition_by=["bucket"],
-    )
-
-
-def incremental_call_edges(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-):
-    """Drain transcript files from `source_dir` into the edges store, one
-    idempotent scope-replacing MERGE per micro-batch; availableNow stops
-    after the drain, processingTime keeps watching (daemon mode).
-
-    The streaming source tracks processed files in the checkpoint, so a
-    restarted job only reads NEW files — the resume gate the reference
-    implements with mod-time + content-hash checks.
-    """
-    catalog = Catalog(spark, out_dir)
-    _migrate_bucketed(catalog, EDGES_TABLE)
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        turns = _latest_version(batch)
-        scope = lineage.with_bucket(
-            turns.select("conv_id", "turn_idx"), STREAM_BUCKETS
-        )
-        calls = lineage.with_bucket(extract.call_triples(turns), STREAM_BUCKETS)
-        catalog.replace_by_scope(
-            EDGES_TABLE,
-            calls,
-            scope,
-            ["bucket", "conv_id", "turn_idx"],
-            partition_by=["bucket"],
-        )
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS)
-        .option("maxFilesPerTrigger", "4")  # debounce/batch-size analog
-        .parquet(source_dir)
-    )
-    return _start(
-        stream.writeStream.foreachBatch(merge_batch), checkpoint_dir, trigger
     )
 
 

@@ -8,7 +8,11 @@
   slot/sign placement, all exercised past the fixture's ASCII blandness;
 * both similarity-linking paths (alias_similarity_edges and
   alias_similarity_edges_lsh vs the DuckDB block / banding replay) on a
-  hostile dictionary that actually exercises the per-block cap.
+  hostile dictionary that actually exercises the per-block cap;
+* every dot-product form (ann.dot_sql / dot_sql_self / pair_dot_sql /
+  cosine_vs_query_sql / bucket_sql, search.dot_score) vs a Python twin and
+  DuckDB's list_dot_product on NULL, NULL-element, empty and off-width
+  vectors.
 
 Same discipline as test_naming_dialect / test_mentions_dialect (round 5
 found two real dialect bugs this way): the driver's oracle gate only ever
@@ -18,18 +22,21 @@ separately.
 
 from __future__ import annotations
 
+import math
 import random
 import sys
 
 import duckdb
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from grepai_spark import embed, link, oracles  # noqa: E402
+from grepai_spark import ann, embed, link, oracles, search  # noqa: E402
 
 
 def test_slot_hash_three_way_lockstep():
@@ -169,3 +176,106 @@ def test_lsh_linking_matches_duckdb_on_hostile_dict(
     )
     assert got == want
     assert got, "hostile dict must actually produce similarity edges"
+
+
+# The dot-product contract every vector query depends on. The vector
+# values are float32 (like embeddings.parquet), so the Python twin's
+# double arithmetic sees exactly what both engines see after their casts.
+_V64 = [float(np.float32(math.sin(i + 1))) for i in range(64)]
+_W64 = _V64[::-1]
+_Q64 = [
+    1.0 if i % 3 == 0 else -1.0 if i % 3 == 1 else (i % 7 - 3) / 10
+    for i in range(64)
+]
+_EDGE_VECS = {
+    "w64": _V64,
+    "w63": _V64[:63],
+    "null": None,
+    "null_elem": _V64[:5] + [None] + _V64[6:],
+    "empty": [],
+    "w65": _V64 + [0.5],
+}
+
+
+def _py_dot(a, b):
+    """Sequential left-to-right dot; NULL on a NULL side or element and on
+    a width mismatch."""
+    if a is None or b is None or len(a) != len(b) or None in a or None in b:
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _py_cosine(v, q):
+    d = _py_dot(v, q)
+    if d is None:
+        return None
+    return d / (math.sqrt(_py_dot(v, v)) * sum(x * x for x in q) ** 0.5)
+
+
+def _py_bucket_bits(v):
+    bits = []
+    for p in ann.planes():
+        d = _py_dot(v, p)
+        bits.append("1" if d is not None and d >= 0 else "0")
+    return "".join(bits)
+
+
+@pytest.mark.parametrize("name", list(_EDGE_VECS))
+def test_dot_forms_match_python_and_duckdb(spark, name):
+    """dot_sql, dot_sql_self, pair_dot_sql, cosine_vs_query_sql, bucket_sql
+    and search.dot_score on the vector shapes that break dot products: a
+    NULL or off-width vector gives a NULL literal or pair dot, and an
+    off-width self-dot is still a number."""
+    v = _EDGE_VECS[name]
+    sdf = spark.createDataFrame([(v, _W64)], "v array<float>, w array<float>")
+    row = sdf.select(
+        F.expr(ann.dot_sql("v", _Q64)),
+        F.expr(ann.dot_sql_self("v")),
+        F.expr(ann.pair_dot_sql("v", "w")),
+        F.expr(ann.cosine_vs_query_sql("v", _Q64)),
+        F.expr(ann.bucket_sql("v")),
+        search.dot_score("v", _Q64),
+    ).first()
+    want = (
+        _py_dot(v, _Q64),
+        _py_dot(v, v),
+        _py_dot(v, _W64),
+        _py_cosine(v, _Q64),
+        _py_bucket_bits(v),
+        _py_dot(v, _Q64),
+    )
+    assert tuple(row) == want
+
+    if v is not None and len(v) != 64:
+        assert row[0] is None and row[2] is None and row[3] is None
+        if None not in v:
+            assert isinstance(row[1], float)
+    if v is None or None in v:
+        return
+    # DuckDB's list_dot_product agrees value for value where widths match
+    con = duckdb.connect()
+    con.register(
+        "t",
+        pa.table(
+            {
+                "v": pa.array([v], pa.list_(pa.float32())),
+                "w": pa.array([_W64], pa.list_(pa.float32())),
+            }
+        ),
+    )
+    duck_self = con.execute(
+        f"SELECT {ann.dot_sql_self('v', 'duckdb')} FROM t"
+    ).fetchone()[0]
+    assert duck_self == want[1]
+    if len(v) == 64:
+        duck = con.execute(
+            f"SELECT {ann.dot_sql('v', _Q64, 'duckdb')},"
+            " list_dot_product(CAST(v AS DOUBLE[]), CAST(w AS DOUBLE[])),"
+            f" {ann.cosine_vs_query_sql('v', _Q64, 'duckdb')},"
+            f" {ann.bucket_sql('v', dialect='duckdb')} FROM t"
+        ).fetchone()
+        assert duck == (want[0], want[2], want[3], want[4])
+        assert want[4] == ann.py_bucket(v)

@@ -12,6 +12,33 @@ def _write_slice(df, path):
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
 
+def _drain(spark, src, out, ck):
+    """Drain `src` into the KG edge sink with the synthetic alias dictionary."""
+    from grepai_spark.synth import alias_dict_df
+
+    streaming.incremental_kg_edges(
+        spark, f"{src}/slice*", out, ck, alias_dict_df(spark)
+    )
+
+
+def _calls(cat):
+    """(conv_id, turn_idx, obj) of every calls row in the KG edge sink —
+    the slice extract.call_triples derives."""
+    return [
+        (r["conv_id"], r["turn_idx"], r["obj"])
+        for r in cat.read(streaming.KG_EDGES_TABLE)
+        .where("pred = 'calls'")
+        .collect()
+    ]
+
+
+def _call_triples(df):
+    return {
+        (r["conv_id"], r["turn_idx"], r["obj"])
+        for r in extract.call_triples(df).collect()
+    }
+
+
 def test_streaming_drains_and_resumes(spark, tiny_transcripts, tmp_path):
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
@@ -22,38 +49,19 @@ def test_streaming_drains_and_resumes(spark, tiny_transcripts, tmp_path):
     second = tiny_transcripts.where("conv_id in ('conv-c', 'conv-d')")
     _write_slice(first, f"{src}/slice1")
 
-    streaming.incremental_call_edges(spark, f"{src}/slice*", out, ck)
+    _drain(spark, src, out, ck)
     cat = Catalog(spark, out)
-    got1 = {
-        (r["conv_id"], r["turn_idx"], r["obj"])
-        for r in cat.read(streaming.EDGES_TABLE).collect()
-    }
-    want1 = {
-        (r["conv_id"], r["turn_idx"], r["obj"])
-        for r in extract.call_triples(first).collect()
-    }
-    assert got1 == want1
+    assert set(_calls(cat)) == _call_triples(first)
 
     # second drain picks up ONLY the new slice (checkpoint = resume gate)
     _write_slice(second, f"{src}/slice2")
-    streaming.incremental_call_edges(spark, f"{src}/slice*", out, ck)
-    got2 = {
-        (r["conv_id"], r["turn_idx"], r["obj"])
-        for r in cat.read(streaming.EDGES_TABLE).collect()
-    }
-    want2 = {
-        (r["conv_id"], r["turn_idx"], r["obj"])
-        for r in extract.call_triples(tiny_transcripts).collect()
-    }
-    assert got2 == want2
+    _drain(spark, src, out, ck)
+    got2 = set(_calls(cat))
+    assert got2 == _call_triples(tiny_transcripts)
 
     # idempotence: draining again with nothing new changes nothing
-    streaming.incremental_call_edges(spark, f"{src}/slice*", out, ck)
-    got3 = {
-        (r["conv_id"], r["turn_idx"], r["obj"])
-        for r in cat.read(streaming.EDGES_TABLE).collect()
-    }
-    assert got3 == got2
+    _drain(spark, src, out, ck)
+    assert set(_calls(cat)) == got2
 
 
 def test_streaming_merge_is_idempotent_on_redelivery(
@@ -66,16 +74,11 @@ def test_streaming_merge_is_idempotent_on_redelivery(
     os.makedirs(src, exist_ok=True)
     _write_slice(tiny_transcripts, f"{src}/slice1")
 
-    streaming.incremental_call_edges(spark, f"{src}/slice*", out, str(tmp_path / "ckA"))
-    streaming.incremental_call_edges(spark, f"{src}/slice*", out, str(tmp_path / "ckB"))
-    cat = Catalog(spark, out)
-    rows = cat.read(streaming.EDGES_TABLE).collect()
-    keys = [(r["conv_id"], r["turn_idx"], r["obj"]) for r in rows]
+    _drain(spark, src, out, str(tmp_path / "ckA"))
+    _drain(spark, src, out, str(tmp_path / "ckB"))
+    keys = _calls(Catalog(spark, out))
     assert len(keys) == len(set(keys))
-    assert set(keys) == {
-        (r["conv_id"], r["turn_idx"], r["obj"])
-        for r in extract.call_triples(tiny_transcripts).collect()
-    }
+    assert set(keys) == _call_triples(tiny_transcripts)
 
 
 def test_streaming_kg_edges_match_batch(spark, tiny_transcripts, tmp_path):
@@ -211,9 +214,9 @@ def test_streaming_merge_rewrites_only_dirty_buckets(
     first = tiny_transcripts.where("conv_id = 'conv-a'")
     second = tiny_transcripts.where("conv_id <> 'conv-a'")
     _write_slice(first, f"{src}/slice1")
-    streaming.incremental_call_edges(spark, f"{src}/slice*", out, ck)
+    _drain(spark, src, out, ck)
 
-    table_dir = os.path.join(out, streaming.EDGES_TABLE)
+    table_dir = os.path.join(out, streaming.KG_EDGES_TABLE)
     before = _bucket_file_mtimes(table_dir)
     assert before, "expected bucket=N partition layout"
 
@@ -227,7 +230,7 @@ def test_streaming_merge_rewrites_only_dirty_buckets(
     assert dirty, "fixture must deliver second-slice turns"
 
     _write_slice(second, f"{src}/slice2")
-    streaming.incremental_call_edges(spark, f"{src}/slice*", out, ck)
+    _drain(spark, src, out, ck)
 
     after = _bucket_file_mtimes(table_dir)
     clean_before = {
@@ -240,15 +243,7 @@ def test_streaming_merge_rewrites_only_dirty_buckets(
         assert after.get(k) == mtime, f"clean bucket file rewritten: {k}"
 
     # and the merged content is still exactly right
-    cat = Catalog(spark, out)
-    got = {
-        (r["conv_id"], r["turn_idx"], r["obj"])
-        for r in cat.read(streaming.EDGES_TABLE).collect()
-    }
-    assert got == {
-        (r["conv_id"], r["turn_idx"], r["obj"])
-        for r in extract.call_triples(tiny_transcripts).collect()
-    }
+    assert set(_calls(Catalog(spark, out))) == _call_triples(tiny_transcripts)
 
 
 def test_stream_resumes_over_unbucketed_legacy_table(
@@ -258,6 +253,9 @@ def test_stream_resumes_over_unbucketed_legacy_table(
     column) must migrate cleanly on the next drain instead of failing the
     bucket-keyed merge, and end up in the bucketed layout with the union of
     old + new edges."""
+    from grepai_spark import pipeline
+    from grepai_spark.synth import alias_dict_df
+
     src = str(tmp_path / "msrc")
     out = str(tmp_path / "mout")
     ck = str(tmp_path / "mck")
@@ -266,25 +264,22 @@ def test_stream_resumes_over_unbucketed_legacy_table(
     first = tiny_transcripts.where("conv_id in ('conv-a', 'conv-b')")
     second = tiny_transcripts.where("conv_id not in ('conv-a', 'conv-b')")
 
-    # legacy layout: call edges WITHOUT a bucket column, unpartitioned
+    # legacy layout: edges WITHOUT a bucket column, unpartitioned
     cat = Catalog(spark, out)
-    cat.overwrite(streaming.EDGES_TABLE, extract.call_triples(first))
-    assert "bucket" not in cat.read(streaming.EDGES_TABLE).columns
+    cat.overwrite(
+        streaming.KG_EDGES_TABLE,
+        pipeline.kg_edges_df(spark, first, alias_dict_df(spark)),
+    )
+    assert "bucket" not in cat.read(streaming.KG_EDGES_TABLE).columns
 
     _write_slice(second, f"{src}/slice1")
-    streaming.incremental_call_edges(spark, f"{src}/slice*", out, ck)
+    _drain(spark, src, out, ck)
 
-    migrated = cat.read(streaming.EDGES_TABLE)
+    migrated = cat.read(streaming.KG_EDGES_TABLE)
     assert "bucket" in migrated.columns
-    table_dir = os.path.join(out, streaming.EDGES_TABLE)
+    table_dir = os.path.join(out, streaming.KG_EDGES_TABLE)
     assert any(e.startswith("bucket=") for e in os.listdir(table_dir))
-    got = {
-        (r["conv_id"], r["turn_idx"], r["obj"]) for r in migrated.collect()
-    }
-    assert got == {
-        (r["conv_id"], r["turn_idx"], r["obj"])
-        for r in extract.call_triples(tiny_transcripts).collect()
-    }
+    assert set(_calls(cat)) == _call_triples(tiny_transcripts)
 
 
 def _edge_set(df):

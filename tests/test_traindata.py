@@ -476,7 +476,7 @@ def test_ann_lsh_bucketed_prunes_partitions(spark, tmp_path):
     ann.write_lsh_bucketed(emb, store)
 
     q = py_encode("scan filter join", dim=64)
-    got = ann.ann_lsh_topk_bucketed(spark, store, q, 10)
+    got = ann.ann_lsh_topk_store(spark.read.parquet(store), q, 10)
     want = ann.ann_lsh_topk(emb, q, 10)
     assert [tuple(r) for r in got.collect()] == [
         tuple(r) for r in want.collect()
