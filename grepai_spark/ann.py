@@ -18,7 +18,8 @@ this module adds the two scale paths a 100 TB embedding corpus needs:
                   near-duplicate detection for training-data dedup).
 
 Everything is built-in expressions (zip_with/aggregate) — JVM-side, inside
-whole-stage codegen; no Python in the hot path.
+whole-stage codegen; no Python in the hot path. The wide projections are
+built as SQL text, not Column calls (see the dedup module docstring).
 """
 
 from __future__ import annotations
@@ -96,15 +97,27 @@ def bucket_sql(
     dialect: str = "spark",
     seed: int = 0,
 ) -> str:
-    """Sign-LSH bucket id as an n_planes-char '01' string."""
+    """Sign-LSH bucket id as an n_planes-char '01' string.
+
+    Spark folds ONE array<array<double>> literal of the planes with one
+    transform, each plane's bit the same _fold_dot as dot_sql (same order,
+    same bits): Catalyst analyzes every array literal's cast on its own, and
+    one literal per plane cost 0.5 s of analysis per near_dup_lsh_pairs
+    call (16 sets x 4 planes)."""
     ps = planes(n_planes, dim, seed)
-    bits = [
+    if dialect == "spark":
+        rows = ", ".join(
+            "array(" + ", ".join(f"{v:.1f}" for v in p) + ")" for p in ps
+        )
+        dot = _fold_dot(f"CAST({vec_col} AS array<double>)", "p")
+        return (
+            f"array_join(transform(CAST(array({rows}) AS array<array<double>>),"
+            f" p -> IF({dot} >= 0, '1', '0')), '')"
+        )
+    return " || ".join(
         f"CASE WHEN {dot_sql(vec_col, p, dialect)} >= 0 THEN '1' ELSE '0' END"
         for p in ps
-    ]
-    if dialect == "spark":
-        return "concat(" + ", ".join(bits) + ")"
-    return " || ".join(bits)
+    )
 
 
 def py_bucket(vec: list[float], n_planes: int = N_PLANES) -> str:
@@ -306,14 +319,14 @@ def ivf_topk(
 def _pair_cos():
     """cos of a capped_block_pairs row from its carried vectors (a_v, b_v)
     and precomputed norms (a_nv, b_nv)."""
-    return F.expr(pair_dot_sql("a_v", "b_v")) / (F.col("a_nv") * F.col("b_nv"))
+    return F.expr(f"({pair_dot_sql('a_v', 'b_v')}) / (a_nv * b_nv)")
 
 
-def _vec_norm(vec_col: str):
+def _vec_norm_sql(vec_col: str) -> str:
     """Per-vector norm, computed ONCE per row before pairing — not per
     candidate pair, where it would be the dominant redundant work (each
     vector meets ~block-size partners)."""
-    return F.sqrt(F.expr(dot_sql_self(vec_col)))
+    return f"sqrt({dot_sql_self(vec_col)})"
 
 
 def near_dup_cosine_pairs(
@@ -332,11 +345,11 @@ def near_dup_cosine_pairs(
     block-cap guard every blocked pair generator here shares: without it
     one hot cell goes O(k^2) no matter how well the join partitions.
     """
-    rows = emb.select(
-        F.col(cell_col).alias("cell"),
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _vec_norm(vec_col).alias("nv"),
+    rows = emb.selectExpr(
+        f"{cell_col} AS cell",
+        f"{id_col} AS id",
+        f"{vec_col} AS v",
+        f"{_vec_norm_sql(vec_col)} AS nv",
     )
     pairs = capped_block_pairs(rows, "cell", "id", cell_cap)
     return (
@@ -383,14 +396,14 @@ def near_dup_lsh_pairs(
     volume — measured 4x slower at sf0.1. Each (set, bucket) carries the
     same deterministic cap guard as every other pair generator here.
     """
-    sigs = F.array(
-        *[F.expr(bucket_sql(vec_col, n_planes, seed=s)) for s in range(n_sets)]
+    sigs = ", ".join(
+        bucket_sql(vec_col, n_planes, seed=s) for s in range(n_sets)
     )
-    rows = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _vec_norm(vec_col).alias("nv"),
-        F.posexplode(sigs).alias("set_id", "bkt"),
+    rows = emb.selectExpr(
+        f"{id_col} AS id",
+        f"{vec_col} AS v",
+        f"{_vec_norm_sql(vec_col)} AS nv",
+        f"posexplode(array({sigs})) AS (set_id, bkt)",
     )
     pairs = capped_block_pairs(rows, ["set_id", "bkt"], "id", bucket_cap)
     return (

@@ -25,6 +25,14 @@ preserved because candidates are verified exactly afterwards.
 Hash parity: md5/sha256 hex strings are bit-identical between Spark and
 DuckDB, so MinHash minima (lexicographic min over md5 hex) and SimHash bits
 (hex-digit >= '8') replay exactly in the oracle SQL.
+
+Plan building: wide projections are SQL text. The per-row hashes, bit
+sums, signatures and band keys are written as one selectExpr (or one
+F.expr per aggregate), not as chains of Column calls: in PySpark classic
+every Column function call is its own py4j round trip to the JVM, and
+built that way simhash_pairs sent ~5,900 commands per call and spent most
+of its wall building its plan, not running it. The SQL spells the same
+expression trees, so plans and results are unchanged.
 """
 
 from __future__ import annotations
@@ -322,33 +330,25 @@ def minhash_lsh_pairs(
     # (no codegen); explode + groupBy(min) keeps it in WholeStageCodegen and
     # the min() agg combines map-side, so the shuffle carries only
     # n_docs x n_hashes tiny rows.
-    posting = sh.select(F.col(id_col), F.explode("shingles").alias("g"))
-    hashed = posting.select(
-        F.col(id_col),
-        *[
-            F.md5(F.concat(F.lit(f"{i}:"), F.col("g"))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ],
+    hashed = sh.selectExpr(id_col, "explode(shingles) AS g").selectExpr(
+        id_col, *[f"md5(concat('{i}:', g)) AS h{i}" for i in range(n_hashes)]
     )
     sigs = hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"mh{i}") for i in range(n_hashes)]
+        *[F.expr(f"min(h{i}) AS mh{i}") for i in range(n_hashes)]
     )
-    band_keys = [
-        F.concat_ws(
-            "|",
-            F.lit(str(bnd)),
-            *[
-                F.col(f"mh{bnd * rows_per_band + r}")
-                for r in range(rows_per_band)
-            ],
+    band_keys = ", ".join(
+        "concat_ws('|', '{}', {})".format(
+            bnd,
+            ", ".join(
+                f"mh{bnd * rows_per_band + r}" for r in range(rows_per_band)
+            ),
         )
         for bnd in range(bands)
-    ]
+    )
     # (band_key, id) is unique (band tags partition the key space), so the
     # per-bucket cap keeps the first DF_CAP distinct ids, as the oracle does
-    banded = sigs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array(*band_keys)).alias("band_key"),
+    banded = sigs.selectExpr(
+        f"{id_col} AS id", f"explode(array({band_keys})) AS band_key"
     )
     cand = (
         capped_block_pairs(banded, "band_key", "id", DF_CAP)
@@ -383,62 +383,55 @@ def simhash_pairs(
     # Same codegen strategy as minhash_lsh_pairs: ONE md5 per shingle in a
     # flat projection, then 32 conditional sums in a map-side-combining agg —
     # never a per-bit rescan of the shingle array in an interpreted lambda.
-    posting = sh.select(F.col(id_col), F.explode("shingles").alias("g"))
-    # r7: the hex digest is parsed ONCE into four staged 32-bit integer
-    # blocks; each bit count is then an integer shift/mask sum instead of a
-    # per-bit substring + string compare (32 string ops per posting row
-    # before). digit >= '8' over 0-9a-f is exactly the nibble's top bit, so
-    # (block >> (4*(7-pos)+3)) & 1 reproduces the predicate bit-for-bit.
-    hashed = posting.select(F.col(id_col), F.md5("g").alias("h"))
-    blocks = [
-        F.conv(F.substring("h", 1 + 8 * k, 8), 16, 10)
-        .cast("bigint")
-        .alias(f"b{k}")
-        for k in range(bits // 8)
-    ]
-    hb = hashed.select(F.col(id_col), *blocks)
-    def _bit(j: int):
-        k, pos = (j - 1) // 8, (j - 1) % 8
-        return F.shiftright(F.col(f"b{k}"), 4 * (7 - pos) + 3).bitwiseAND(
-            F.lit(1)
+    # The hex digest is parsed ONCE into four staged 32-bit integer blocks;
+    # each bit count is then an integer shift/mask sum instead of a per-bit
+    # substring + string compare. digit >= '8' over 0-9a-f is exactly the
+    # nibble's top bit, so (block >> (4*(7-pos)+3)) & 1 reproduces the
+    # predicate bit-for-bit.
+    hb = (
+        sh.selectExpr(id_col, "explode(shingles) AS g")
+        .selectExpr(id_col, "md5(g) AS h")
+        .selectExpr(
+            id_col,
+            *[
+                f"CAST(conv(substring(h, {1 + 8 * k}, 8), 16, 10) AS BIGINT)"
+                f" AS b{k}"
+                for k in range(bits // 8)
+            ],
         )
+    )
+
+    def _bit(j: int) -> str:
+        k, pos = (j - 1) // 8, (j - 1) % 8
+        return f"shiftright(b{k}, {4 * (7 - pos) + 3}) & 1"
+
     bit_sums = hb.groupBy(id_col).agg(
-        F.count("*").alias("n_sh"),
-        *[F.sum(_bit(j)).alias(f"c{j}") for j in range(1, bits + 1)],
+        F.expr("count(*) AS n_sh"),
+        *[F.expr(f"sum({_bit(j)}) AS c{j}") for j in range(1, bits + 1)],
     )
     # integer signature (bit 1 = MSB) — see simhash_sql for why not a string
-    bit_terms = [
-        F.when(
-            2 * F.col(f"c{j}") >= F.col("n_sh"), F.lit(1 << (bits - j))
-        ).otherwise(F.lit(0))
+    bit_terms = " + ".join(
+        f"CASE WHEN c{j} * 2 >= n_sh THEN {1 << (bits - j)} ELSE 0 END"
         for j in range(1, bits + 1)
-    ]
-    sig = bit_sums.select(
-        F.col(id_col),
-        sum(bit_terms[1:], bit_terms[0]).cast("bigint").alias("sig"),
     )
     block = bits // bands
     mask = (1 << block) - 1
     # band key = band index tag + the band's bit field (shift/mask)
-    keys = [
-        (
-            F.lit(bnd * (mask + 1))
-            + F.shiftright(F.col("sig"), bits - (bnd + 1) * block).bitwiseAND(
-                F.lit(mask)
-            )
-        ).cast("bigint")
+    keys = ", ".join(
+        f"CAST({bnd * (mask + 1)}"
+        f" + (shiftright(sig, {bits - (bnd + 1) * block}) & {mask}) AS BIGINT)"
         for bnd in range(bands)
-    ]
+    )
     # (bk, id) is unique (band tags partition the key space) and docs carry
     # one sig each, so the capped members are the oracle's
-    banded = sig.select(
-        F.col(id_col).alias("id"), "sig", F.explode(F.array(*keys)).alias("bk")
-    )
-    ham = F.expr(hamming_sql("a_sig", "b_sig"))
+    banded = bit_sums.selectExpr(
+        id_col, f"CAST({bit_terms} AS BIGINT) AS sig"
+    ).selectExpr(f"{id_col} AS id", "sig", f"explode(array({keys})) AS bk")
+    ham = hamming_sql("a_sig", "b_sig")
     return (
         capped_block_pairs(banded, "bk", "id", DF_CAP)
-        .withColumn("hamming", ham.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
+        .withColumn("hamming", F.expr(f"CAST({ham} AS INT)"))
+        .where(f"hamming <= {max_hamming}")
         .dropDuplicates(["a_id", "b_id"])
         .select("a_id", "b_id", "hamming")
     )

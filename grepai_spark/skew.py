@@ -58,7 +58,8 @@ def capped_block_pairs(
     shuffle stages.
 
     Returns the equi self-join on `key` with a_<order> < b_<order>; every
-    non-key column appears twice, prefixed a_ and b_.
+    non-key column appears twice, prefixed a_ and b_ by one selectExpr per
+    side.
     """
     keys = [key] if isinstance(key, str) else list(key)
     spark = rows.sparkSession
@@ -76,10 +77,10 @@ def capped_block_pairs(
     )
     rest = [c for c in capped.columns if c not in keys]
     a, b = (
-        capped.select(*keys, *[F.col(c).alias(f"{p}_{c}") for c in rest])
+        capped.selectExpr(*keys, *[f"{c} AS {p}_{c}" for c in rest])
         for p in ("a", "b")
     )
-    return a.join(b, keys).where(F.col(f"a_{order}") < F.col(f"b_{order}"))
+    return a.join(b, keys).where(f"a_{order} < b_{order}")
 
 
 def with_salt(df: DataFrame, n_salt: int = N_SALT) -> DataFrame:

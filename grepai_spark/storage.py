@@ -40,6 +40,27 @@ def _marker_base(name: str) -> tuple[str, str] | None:
     return None
 
 
+def _tmp_dir(final: str) -> str:
+    """A staging dir beside `final` for one write, named after the writing
+    process so recovery can tell a write in flight from a crashed one."""
+    return f"{final}{_TMP_MARK}{os.getpid()}-{uuid.uuid4().hex[:8]}"
+
+
+def _writer_alive(token: str) -> bool:
+    """True iff the process that named a staging dir `<pid>-<uuid>` is
+    still running (an unnamed or malformed token counts as dead)."""
+    pid, sep, _ = token.partition("-")
+    if not sep or not pid.isdigit():
+        return False
+    try:
+        os.kill(int(pid), 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        return True
+    return True
+
+
 def _swap_dir(src: str, dst: str) -> None:
     """Commit `src` over `dst` with a forward-recoverable three-rename
     protocol: stage the COMPLETE new data beside dst first (rename is
@@ -61,7 +82,10 @@ def _swap_dir(src: str, dst: str) -> None:
 def _recover_dir(parent: str) -> None:
     """Repair swap-protocol leftovers in `parent` from an interrupted run.
 
-    __tmp__ dirs are in-progress writes — always deleted. __new__ dirs are
+    __tmp__ dirs are in-progress writes — deleted once the process that
+    started them has exited. A live writer's staging dir stays: a Catalog
+    opened while another handle (a streaming daemon, say) is writing must
+    not delete the files that write is producing. __new__ dirs are
     COMPLETE staged data: promoted if the live dir is missing (finish the
     crashed commit forward), deleted otherwise. __old__ dirs are the
     displaced previous version: restored only if neither the live dir nor a
@@ -82,7 +106,8 @@ def _recover_dir(parent: str) -> None:
                 continue
             base = os.path.join(parent, bm[0])
             if mark_pass == _TMP_MARK:
-                shutil.rmtree(full, ignore_errors=True)
+                if not _writer_alive(entry[len(bm[0]) + len(_TMP_MARK):]):
+                    shutil.rmtree(full, ignore_errors=True)
             elif os.path.isdir(base):
                 shutil.rmtree(full, ignore_errors=True)
             else:
@@ -131,7 +156,7 @@ class Catalog:
         """Atomic replace: write beside, then swap (Iceberg: REPLACE TABLE /
         overwritePartitions)."""
         final = self.path(table)
-        tmp = f"{final}{_TMP_MARK}{uuid.uuid4().hex[:8]}"
+        tmp = _tmp_dir(final)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -177,7 +202,7 @@ class Catalog:
         only — all callers partition by the bucket.
         """
         final = self.path(table)
-        tmp = f"{final}{_TMP_MARK}{uuid.uuid4().hex[:8]}"
+        tmp = _tmp_dir(final)
         df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
         if ensure:
             assert len(partition_by) == 1, "ensure needs a 1-col spec"
@@ -271,7 +296,9 @@ class Catalog:
     ) -> None:
         """The body both public merges share (each public name is wrapped by
         the benchmark's spans, so neither calls the other): delete the rows
-        matching `scope` on `scope_keys`, insert `updates`."""
+        matching `scope` on `scope_keys`, insert `updates`. The live table
+        is read with `updates.schema`, the shape every caller writes it
+        from, so no read runs a parquet schema-inference job."""
         if not self.exists(table):
             self.overwrite(table, updates, partition_by=partition_by)
             return
@@ -293,7 +320,7 @@ class Catalog:
                     c = c & (F.col(col) == F.lit(v))
                 cond = c if cond is None else (cond | c)
             # partition-column filter -> directory pruning on the scan
-            existing_dirty = self.read(table).where(cond)
+            existing_dirty = self.read(table, updates.schema).where(cond)
             kept = existing_dirty.join(scope, on=scope_keys, how="left_anti")
             merged = kept.unionByName(updates.select(*kept.columns))
             # ensure=dirty: a partition whose rows ALL belonged to the
@@ -303,7 +330,7 @@ class Catalog:
                 table, merged, partition_by, ensure=dirty
             )
             return
-        existing = self.read(table)
+        existing = self.read(table, updates.schema)
         kept = existing.join(scope, on=scope_keys, how="left_anti")
         self.overwrite(
             table,

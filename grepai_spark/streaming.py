@@ -95,15 +95,16 @@ def _migrate_bucketed(
     bucket-keyed MERGE would fail its anti-join on the missing key. The
     bucket is derivable (xxhash64 of the conv key — lineage.with_bucket), so
     backfill it once and rewrite into the bucketed partition layout; every
-    later micro-batch then merges O(dirty-bucket)."""
-    if not catalog.exists(table):
-        return
-    existing = catalog.read(table)
-    if "bucket" in existing.columns:
+    later micro-batch then merges O(dirty-bucket). The bucketed layout is
+    recognized from its `bucket=` directories, so a stream start runs no
+    Spark job on an already-migrated table."""
+    if not catalog.exists(table) or catalog._is_partitioned_by(
+        table, "bucket"
+    ):
         return
     catalog.overwrite(
         table,
-        lineage.with_bucket(existing, n_buckets, key=key),
+        lineage.with_bucket(catalog.read(table), n_buckets, key=key),
         partition_by=["bucket"],
     )
 

@@ -82,6 +82,31 @@ def count_jobs(spark):
 
 
 @pytest.fixture
+def count_py4j(spark):
+    """``count_py4j(fn) -> (fn(), number of py4j commands fn sent to the
+    JVM)``: the driver's plan-building cost, which no Spark job shows."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def count(fn):
+        n = 0
+
+        def counting(*args, **kwargs):
+            nonlocal n
+            n += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            out = fn()
+        finally:
+            del client.send_command
+        return out, n
+
+    return count
+
+
+@pytest.fixture
 def hostile_alias_rows():
     """An adversarial alias dictionary: near-dup token sets, a zero-token
     name, non-ASCII aliases (which keep linking off its driver regime) and

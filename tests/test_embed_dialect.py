@@ -194,7 +194,11 @@ _EDGE_VECS = {
     "null_elem": _V64[:5] + [None] + _V64[6:],
     "empty": [],
     "w65": _V64 + [0.5],
+    "zero": [0.0] * 64,  # every dot is 0.0: the >= 0 boundary, all '1' bits
 }
+# near_dup_lsh_pairs' plane sets are seeds 0..NEAR_DUP_LSH_SETS-1; the last
+# one's planes come from other md5 keys than seed 0's
+_SEED = ann.NEAR_DUP_LSH_SETS - 1
 
 
 def _py_dot(a, b):
@@ -210,14 +214,14 @@ def _py_dot(a, b):
 
 def _py_cosine(v, q):
     d = _py_dot(v, q)
-    if d is None:
+    if d is None or _py_dot(v, v) == 0.0:
         return None
     return d / (math.sqrt(_py_dot(v, v)) * sum(x * x for x in q) ** 0.5)
 
 
-def _py_bucket_bits(v):
+def _py_bucket_bits(v, n_planes=ann.N_PLANES, seed=0):
     bits = []
-    for p in ann.planes():
+    for p in ann.planes(n_planes, seed=seed):
         d = _py_dot(v, p)
         bits.append("1" if d is not None and d >= 0 else "0")
     return "".join(bits)
@@ -226,18 +230,27 @@ def _py_bucket_bits(v):
 @pytest.mark.parametrize("name", list(_EDGE_VECS))
 def test_dot_forms_match_python_and_duckdb(spark, name):
     """dot_sql, dot_sql_self, pair_dot_sql, cosine_vs_query_sql, bucket_sql
-    and search.dot_score on the vector shapes that break dot products: a
-    NULL or off-width vector gives a NULL literal or pair dot, and an
-    off-width self-dot is still a number."""
+    (seed 0 and a near-dup seed) and search.dot_score on the vector shapes
+    that break dot products: a NULL or off-width vector gives a NULL
+    literal or pair dot, an off-width self-dot is still a number, and a
+    zero vector sits on every plane's >= 0 boundary."""
     v = _EDGE_VECS[name]
     sdf = spark.createDataFrame([(v, _W64)], "v array<float>, w array<float>")
+    # a zero vector's cosine divides by a zero norm, which Spark's ANSI
+    # division raises on (DuckDB gives NULL): only its dots and bits run
+    cos = (
+        "CAST(NULL AS DOUBLE)"
+        if name == "zero"
+        else ann.cosine_vs_query_sql("v", _Q64)
+    )
     row = sdf.select(
         F.expr(ann.dot_sql("v", _Q64)),
         F.expr(ann.dot_sql_self("v")),
         F.expr(ann.pair_dot_sql("v", "w")),
-        F.expr(ann.cosine_vs_query_sql("v", _Q64)),
+        F.expr(cos),
         F.expr(ann.bucket_sql("v")),
         search.dot_score("v", _Q64),
+        F.expr(ann.bucket_sql("v", ann.NEAR_DUP_LSH_PLANES, seed=_SEED)),
     ).first()
     want = (
         _py_dot(v, _Q64),
@@ -246,8 +259,11 @@ def test_dot_forms_match_python_and_duckdb(spark, name):
         _py_cosine(v, _Q64),
         _py_bucket_bits(v),
         _py_dot(v, _Q64),
+        _py_bucket_bits(v, ann.NEAR_DUP_LSH_PLANES, _SEED),
     )
     assert tuple(row) == want
+    if name == "zero":
+        assert row[4] == "1" * ann.N_PLANES
 
     if v is not None and len(v) != 64:
         assert row[0] is None and row[2] is None and row[3] is None
@@ -275,7 +291,9 @@ def test_dot_forms_match_python_and_duckdb(spark, name):
             f"SELECT {ann.dot_sql('v', _Q64, 'duckdb')},"
             " list_dot_product(CAST(v AS DOUBLE[]), CAST(w AS DOUBLE[])),"
             f" {ann.cosine_vs_query_sql('v', _Q64, 'duckdb')},"
-            f" {ann.bucket_sql('v', dialect='duckdb')} FROM t"
+            f" {ann.bucket_sql('v', dialect='duckdb')},"
+            f" {ann.bucket_sql('v', ann.NEAR_DUP_LSH_PLANES, dialect='duckdb', seed=_SEED)}"
+            " FROM t"
         ).fetchone()
-        assert duck == (want[0], want[2], want[3], want[4])
+        assert duck == (want[0], want[2], want[3], want[4], want[6])
         assert want[4] == ann.py_bucket(v)

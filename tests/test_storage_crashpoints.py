@@ -111,3 +111,30 @@ def test_recover_is_idempotent(tmp_path):
     assert _read_tag(parent, "part=1") == "NEW"  # promoted
     assert _read_tag(parent, "part=2") == "OLD"  # live wins over __old__
     assert state1 == ["part=1", "part=2"]  # tmp junk dropped
+
+
+def test_recover_keeps_a_live_writers_staging_dir(tmp_path):
+    """A Catalog opened while another handle is writing (a streaming daemon
+    polled by a reader) must not delete that write's staging dir; the
+    staging dir of a writer that has exited is debris and goes."""
+    import subprocess
+    import sys
+
+    from grepai_spark.storage import _tmp_dir
+
+    parent = str(tmp_path / "root")
+    os.makedirs(parent)
+    live = _tmp_dir(os.path.join(parent, "t"))
+    _mkdata(parent, os.path.basename(live), "IN FLIGHT")
+    gone = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip()
+    dead = f"t.__tmp__{gone}-0badf00d"
+    _mkdata(parent, dead, "CRASHED")
+
+    _recover_dir(parent)
+    assert sorted(os.listdir(parent)) == [os.path.basename(live)]
+    assert _read_tag(parent, os.path.basename(live)) == "IN FLIGHT"

@@ -95,6 +95,16 @@ def test_minhash_recall_vs_exact_ngram(spark, docs):
     assert len(lsh) >= 0.95 * len(exact)
 
 
+@pytest.mark.parametrize("op", ["simhash_pairs", "minhash_lsh_pairs"])
+def test_near_dup_plan_build_py4j_budget(docs, count_py4j, op):
+    """Building a near-dup operator stays under a py4j budget: its wide
+    projections are SQL text, parsed once on the JVM. Built from Columns,
+    every term cost its own round trips: ~5,900 commands for simhash_pairs
+    and ~1,400 for minhash_lsh_pairs, against ~450 each as SQL text."""
+    _, n = count_py4j(lambda: getattr(dedup, op)(docs))
+    assert n < 1_000
+
+
 def test_simhash_pairs_are_near_dups(spark, docs):
     """Every hamming<=3 pair (32-bit simhash) must be an ngram near-dup at a
     loose threshold — simhash is coarser but must not hallucinate."""
