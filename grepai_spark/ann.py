@@ -150,11 +150,13 @@ def cosine_vs_query_sql(
     vec_col: str, query_vec: list[float], dialect: str = "spark"
 ) -> str:
     """cosine(vec, q) with the norms spelled out (corpus vectors are NOT
-    assumed normalized, unlike the turn encoder's output)."""
+    assumed normalized, unlike the turn encoder's output). A zero norm
+    gives NULL, not ANSI Spark's DIVIDE_BY_ZERO (DuckDB's x / 0 is NULL);
+    both engines sort it last under DESC."""
     d = dot_sql(vec_col, query_vec, dialect)
     qn = sum(x * x for x in query_vec) ** 0.5
     sq = dot_sql_self(vec_col, dialect)
-    return f"({d}) / (sqrt({sq}) * CAST('{qn!r}' AS DOUBLE))"
+    return f"({d}) / NULLIF(sqrt({sq}) * CAST('{qn!r}' AS DOUBLE), 0)"
 
 
 def dot_sql_self(vec_col: str, dialect: str = "spark") -> str:
@@ -203,27 +205,6 @@ def ann_lsh_topk(
         .limit(k)
         .select(id_col, "score")
     )
-
-
-def write_lsh_bucketed(
-    emb: DataFrame,
-    path: str,
-    n_planes: int = N_PLANES,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the embedding table PARTITIONED BY its sign-LSH bucket —
-    the batch job that turns ann_lsh_topk's per-row bucket expression into a
-    physical partition column. One pass over the corpus, one write; queries
-    then touch ~(1+n_planes)/2^n_planes of the files (multi-probe, see
-    ann_lsh_topk_store). The repartition on bucket keeps file count =
-    O(buckets), not O(buckets x input-tasks) — without it every input task
-    writes a sliver into every bucket directory and the store degenerates
-    into 2^n_planes x tasks tiny files."""
-    emb.withColumn(
-        "bucket", F.expr(bucket_sql(vec_col, n_planes))
-    ).repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(path)
 
 
 def ann_lsh_topk_store(
@@ -318,8 +299,9 @@ def ivf_topk(
 
 def _pair_cos():
     """cos of a capped_block_pairs row from its carried vectors (a_v, b_v)
-    and precomputed norms (a_nv, b_nv)."""
-    return F.expr(f"({pair_dot_sql('a_v', 'b_v')}) / (a_nv * b_nv)")
+    and precomputed norms (a_nv, b_nv); NULL (never a pair) for a zero
+    norm, as in the DuckDB oracles."""
+    return F.expr(f"({pair_dot_sql('a_v', 'b_v')}) / NULLIF(a_nv * b_nv, 0)")
 
 
 def _vec_norm_sql(vec_col: str) -> str:

@@ -18,26 +18,25 @@ The gate is decided from rows, on the driver: the run collects its
 ``n_buckets`` hash rows (one aggregate), the lineage table is read once per
 Catalog handle with its declared schema (one scan, no inference job), and
 :func:`pending_buckets` compares the two in Python — no join job for a
-decision over a few dozen rows. :func:`mark_done` writes its update as a
-LocalRelation and keeps the held rows current, so a stage's output row count
-(:func:`stage_rows_out`) is known without another read.
+decision over a few dozen rows. :func:`mark_done` writes the stage's whole
+lineage partition from the held rows (one LocalRelation, no read-back), with
+``rows_out`` from the stage write's parquet footers, so no stage is
+re-derived to count it and :func:`stage_rows_out` needs no read.
 """
 
 from __future__ import annotations
 
+import datetime
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from grepai_spark.dimcache import cached_rows, local_df
 from grepai_spark.schemas import LINEAGE
 from grepai_spark.storage import Catalog
 
 LINEAGE_TABLE = "lineage"
-# what mark_done builds on the driver; updated_ts is stamped in the plan
-_LINEAGE_UPDATE = StructType([f for f in LINEAGE if f.name != "updated_ts"])
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "conv_id") -> DataFrame:
@@ -108,32 +107,34 @@ def pending_buckets(catalog: Catalog, stage: str, hash_rows: list) -> list:
 
 
 def mark_done(
-    catalog: Catalog, stage: str, pending: list, rows_out: DataFrame
+    catalog: Catalog, stage: str, pending: list, rows_out: dict[int, int]
 ) -> None:
-    """Upsert done rows for the ``pending`` hash rows.
+    """Mark the ``pending`` hash rows done for ``stage``.
 
-    rows_out: (bucket, rows_out) counts for the stage's output; collected
-    here (bucket-count rows), so the lineage update itself is a LocalRelation.
-    """
-    counts = dict(rows_out.collect())
-    rows = [
-        (stage, r["bucket"], r["content_hash"], "done", r["rows_in"],
-         counts.get(r["bucket"], 0))
-        for r in pending
-    ]
-    update = local_df(catalog.spark, rows, _LINEAGE_UPDATE)
-    # partitioned by stage: marking one stage's buckets done reads back and
-    # rewrites only that stage's partition (O(stage), not O(table)) — the
-    # contract's O(dirty) promise applies to the lineage table itself too
-    catalog.merge_by_key(
-        LINEAGE_TABLE,
-        update.withColumn("updated_ts", F.current_timestamp()),
-        ["stage", "bucket"],
-        partition_by=["stage"],
-    )
-    held = _HELD.get(catalog)
-    if held is not None:
-        held.update(((r["stage"], r["bucket"]), r) for r in cached_rows(update))
+    rows_out: bucket -> the stage's output row count for that bucket (a
+    bucket it lacks wrote none). The stage's rows are rebuilt from the held
+    rows and swapped in as the whole ``stage=`` partition of the lineage
+    table; untouched buckets keep every field."""
+    held = _held(catalog)
+    now = datetime.datetime.now(datetime.timezone.utc)
+    rows = {
+        b: [r[f] for f in LINEAGE.names]  # by name: reads put stage last
+        for (s, b), r in held.items()
+        if s == stage
+    }
+    for r in pending:
+        b = r["bucket"]
+        rows[b] = [
+            stage, b, r["content_hash"], "done", r["rows_in"],
+            rows_out.get(b, 0), now,
+        ]
+    for row in rows.values():
+        # collect() returns local naive timestamps and Arrow would take a
+        # naive value as UTC: make it aware so a kept row does not shift
+        row[-1] = row[-1] and row[-1].astimezone(datetime.timezone.utc)
+    df = local_df(catalog.spark, [rows[b] for b in sorted(rows)], LINEAGE)
+    catalog.merge_by_key(LINEAGE_TABLE, df, ["stage"], partition_by=["stage"])
+    held.update(((stage, r["bucket"]), r) for r in cached_rows(df))
 
 
 def stage_rows_out(catalog: Catalog, stage: str) -> int:

@@ -177,6 +177,36 @@ class PipelineResult:
     counters: dict[str, int] = field(default_factory=dict)
 
 
+def _bucket_stage(
+    catalog: Catalog,
+    stage: str,
+    table: str,
+    tb: DataFrame,
+    hashes: list,
+    counters: dict[str, int],
+    derive,
+) -> bool:
+    """The one per-bucket resumable stage of :func:`run`: gate on lineage,
+    derive the pending buckets' rows (``derive(<their transcripts>)``, with
+    a ``bucket`` column), swap exactly those partitions of ``table`` in (one
+    that now yields no row is swapped to empty, not left holding its old
+    rows) and mark them done with the row counts the write produced.
+    Returns whether any bucket was pending."""
+    pending = lineage.pending_buckets(catalog, stage, hashes)
+    ids = [r["bucket"] for r in pending]
+    counters[f"{stage}_buckets_pending"] = len(ids)
+    if not ids:
+        return False
+    sub = derive(tb.where(F.col("bucket").isin(ids)))
+    catalog.merge_by_key(
+        table, sub, ["bucket"], partition_by=["bucket"], ensure=ids
+    )
+    lineage.mark_done(
+        catalog, stage, pending, catalog.partition_rows(table, "bucket", ids)
+    )
+    return True
+
+
 def run(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -198,35 +228,26 @@ def run(
     if embed:
         from grepai_spark import embed as embed_mod
 
-        pending_v = lineage.pending_buckets(catalog, "vectors", hashes)
-        pending_v_ids = [r["bucket"] for r in pending_v]
-        counters["vectors_buckets_pending"] = len(pending_v_ids)
-        if pending_v_ids:
-            sub = tb.where(F.col("bucket").isin(pending_v_ids))
+        def vectors(sub: DataFrame) -> DataFrame:
             vec, embed_counters = embed_mod.embed_with_cache(catalog, sub)
             counters.update(
                 {f"embed_{k}": v for k, v in embed_counters.items()}
             )
             if fail_after == "embed_cache":
                 # crash point BETWEEN the cache merge (already committed
-                # inside embed_with_cache) and the vectors merge below: the
-                # re-run must converge to the same turn_vectors table with
-                # zero re-encoding (test_pipeline locks this)
+                # inside embed_with_cache) and the vectors merge: the re-run
+                # must converge to the same turn_vectors table with zero
+                # re-encoding (test_pipeline locks this)
                 raise InjectedFailure(
                     "killed between cache merge and vectors merge"
                 )
-            catalog.merge_by_key(
-                "turn_vectors",
-                vec.select(
-                    "bucket", "conv_id", "turn_idx", "content_hash", "vector"
-                ),
-                ["bucket"],
-                partition_by=["bucket"],
+            return vec.select(
+                "bucket", "conv_id", "turn_idx", "content_hash", "vector"
             )
-            out_counts = vec.groupBy("bucket").agg(
-                F.count("*").alias("rows_out")
-            )
-            lineage.mark_done(catalog, "vectors", pending_v, out_counts)
+
+        _bucket_stage(
+            catalog, "vectors", "turn_vectors", tb, hashes, counters, vectors
+        )
     if fail_after == "embed":
         raise InjectedFailure("killed after embed stage")
 
@@ -241,29 +262,16 @@ def run(
         raise InjectedFailure("killed after canonicalize stage")
 
     # ---- stage: edges (extract + link + materialize, fused), per bucket ----
-    pending_e = lineage.pending_buckets(catalog, "edges", hashes)
-    pending_e_ids = [r["bucket"] for r in pending_e]
-    counters["edges_buckets_pending"] = len(pending_e_ids)
-    if pending_e_ids:
-        sub = tb.where(F.col("bucket").isin(pending_e_ids))
-        edges = kg_edges_from_map(sub, _entity_map(alias_dict, cmap))
-        edges_b = lineage.with_bucket(edges, n_buckets)
-        catalog.merge_by_key(
-            "edges",
-            # written with the declared types, so reads can declare them
-            edges_b.select(
-                "bucket", *(F.col(f.name).cast(f.dataType) for f in EDGES)
-            ),
-            ["bucket"],
-            partition_by=["bucket"],
-            # a recomputed bucket whose new content yields no edge is
-            # swapped to empty, not left holding its old rows
-            ensure=[(b,) for b in pending_e_ids],
+    def edges(sub: DataFrame) -> DataFrame:
+        e = lineage.with_bucket(
+            kg_edges_from_map(sub, _entity_map(alias_dict, cmap)), n_buckets
         )
-        out_counts = edges_b.groupBy("bucket").agg(
-            F.count("*").alias("rows_out")
+        # written with the declared types, so reads can declare them
+        return e.select(
+            "bucket", *(F.col(f.name).cast(f.dataType) for f in EDGES)
         )
-        lineage.mark_done(catalog, "edges", pending_e, out_counts)
+
+    if _bucket_stage(catalog, "edges", "edges", tb, hashes, counters, edges):
         # maintain the graph-query plane's stored adjacency + degree census
         # whenever the edge table changed (stores.py) — the indexer writes
         # the artifacts the query plane reads; rebuilding them per query

@@ -10,6 +10,9 @@ full-table replace writes beside and renames over the live dir; partition
 merges write the dirty partitions beside and swap ONLY those partition
 subdirectories — a crash mid-job leaves every live partition either fully old
 or fully new, never half-written (the overwritePartitions commit contract).
+Every merge is partition-scoped, in one of two regimes (merge_by_key), and
+one into an unpartitioned table raises rather than rewrite the table. A
+writer reads what it wrote from the parquet footers (partition_rows).
 The pipeline code only talks to this interface, so swapping in Iceberg is a
 config change (`writeTo(...).createOrReplace()` / `.append()`), not a
 rewrite.
@@ -168,53 +171,75 @@ class Catalog:
         df.write.mode("append").parquet(self.path(table))
 
     def _is_partitioned_by(self, table: str, col: str) -> bool:
-        """True iff the live table's layout has `col=` partition subdirs."""
-        p = self.path(table)
-        return any(e.startswith(f"{col}=") for e in os.listdir(p))
+        """True iff every data entry of the live table is a `col=` dir (an
+        empty table qualifies; Spark's hidden `_`/`.` files do not count)."""
+        return all(
+            e.startswith(f"{col}=")
+            for e in os.listdir(self.path(table))
+            if not e.startswith(("_", "."))
+        )
+
+    def partition_rows(self, table: str, col: str, values) -> dict:
+        """value -> row count of `table`'s `col=value` partition from its
+        parquet footers, with no Spark job (Iceberg: the data-file record
+        counts of the commit). A missing or empty partition counts 0."""
+        import pyarrow.parquet as pq
+
+        out = {}
+        for v in values:
+            d = os.path.join(self.path(table), f"{col}={v}")
+            files = os.listdir(d) if os.path.isdir(d) else []
+            out[v] = sum(
+                pq.read_metadata(os.path.join(d, f)).num_rows
+                for f in files
+                if not f.startswith(("_", "."))
+            )
+        return out
+
+    def _partition_col(self, table, partition_by, keys) -> str:
+        """The one partition column a merge swaps by: a one-column
+        `partition_by` among its keys, and the live table (if any) in that
+        layout. Anything else has no O(dirty) plan and raises ValueError
+        (stream sinks are migrated first: streaming._migrate_bucketed)."""
+        col = partition_by[0] if len(partition_by or ()) == 1 else None
+        if col not in keys:
+            raise ValueError(f"{table}: {partition_by=} is not one of {keys}")
+        if self.exists(table) and not self._is_partitioned_by(table, col):
+            raise ValueError(f"{table}: live table not partitioned by {col}")
+        return col
 
     def _overwrite_partitions(
         self,
         table: str,
         df: DataFrame,
-        partition_by: list[str],
-        ensure: list[tuple] | None = None,
+        col: str,
+        ensure: list | None = None,
     ) -> None:
-        """Swap exactly the partitions present in `df` into the live table.
+        """Swap exactly the `col` partitions present in `df` into the live
+        table (creating it if missing). Iceberg: overwritePartitions.
 
         df is written partitioned to a tmp dir beside the table; each
         produced `col=value` subdirectory is then committed over its live
-        counterpart via the staged three-rename swap (_swap_dir) — cheap
+        counterpart with the staged three-rename swap (_swap_dir): cheap
         metadata renames per dirty partition, and a crash at ANY instant
-        leaves the partition recoverable as either fully old or fully new
-        (never missing, never a half-written mix the way writing
-        mode('overwrite') into the live dir would): Catalog startup
-        recovery promotes a staged __new__ or restores the __old__.
-        Iceberg: overwritePartitions / replaceWhere.
+        leaves the partition fully old or fully new once Catalog startup
+        recovery has run, never missing or half-written.
 
-        `ensure` lists partition values that must be swapped EVEN IF `df`
-        holds no rows for them: a scope-replacing merge (replace_by_scope)
-        can legitimately empty a partition — every existing row belonged
-        to the replaced scope and the new extraction yields nothing — and
-        Spark writes no subdirectory for an empty partition, which would
-        silently leave the stale files live. Such partitions get an empty
-        staged dir and go through the SAME crash-safe swap (an empty
-        partition dir reads as zero rows). Single-column partition specs
-        only — all callers partition by the bucket.
+        `ensure` lists values to swap EVEN IF `df` holds no rows for them:
+        a recomputed bucket or a replaced scope can empty a partition, and
+        Spark writes no subdirectory for an empty one, which would leave
+        the stale files live. Such partitions get an empty staged dir
+        (which reads as zero rows) and go through the same swap.
         """
         final = self.path(table)
         tmp = _tmp_dir(final)
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-        if ensure:
-            assert len(partition_by) == 1, "ensure needs a 1-col spec"
-            for vals in ensure:
-                sub = os.path.join(tmp, f"{partition_by[0]}={vals[0]}")
-                os.makedirs(sub, exist_ok=True)
+        df.write.mode("overwrite").partitionBy(col).parquet(tmp)
+        for v in ensure or ():
+            os.makedirs(os.path.join(tmp, f"{col}={v}"), exist_ok=True)
         os.makedirs(final, exist_ok=True)
-        prefix = f"{partition_by[0]}="
         for entry in sorted(os.listdir(tmp)):
-            if not entry.startswith(prefix):
-                continue
-            _swap_dir(os.path.join(tmp, entry), os.path.join(final, entry))
+            if entry.startswith(f"{col}="):
+                _swap_dir(os.path.join(tmp, entry), os.path.join(final, entry))
         shutil.rmtree(tmp, ignore_errors=True)
 
     def merge_by_key(
@@ -223,39 +248,31 @@ class Catalog:
         updates: DataFrame,
         keys: list[str],
         partition_by: list[str] | None = None,
-        ensure: list[tuple] | None = None,
+        ensure: list | None = None,
     ) -> None:
         """Idempotent upsert (Iceberg: MERGE INTO ... WHEN MATCHED UPDATE).
 
-        Three regimes, cheapest applicable first:
+        Two regimes, both O(dirty partitions), never O(table):
 
-        * `partition_by == keys` (the pipeline's per-bucket stage merges):
-          dynamic partition overwrite — ONLY the dirty partitions are
-          swapped in, O(dirty buckets) not O(table), and untouched bucket
-          files are never rewritten. `ensure` names partitions to swap even
-          when `updates` holds no rows for them (see _overwrite_partitions).
+        * `partition_by == keys` (the pipeline's per-bucket stages and the
+          per-stage lineage write): ONLY the partitions present in `updates`
+          (and those named by `ensure`, see _overwrite_partitions) are
+          swapped in; untouched partition files are never rewritten.
         * `partition_by` a strict subset of `keys` (streaming row-level
           merges into a bucketed table): the dirty partitions are READ back,
           anti-joined against the update keys, unioned with the updates and
-          swapped in — still O(dirty buckets); a micro-batch touching 2 of
-          16 buckets rewrites 2.
-        * otherwise (row-level keys, unpartitioned table): anti-join the
-          whole table, union, atomic swap — O(table), kept only for small
-          tables.
+          swapped in; a micro-batch touching 2 of 16 buckets rewrites 2.
+
+        Any other call raises ValueError (see _partition_col).
 
         Last-write-wins per key is safe for our tables: vectors are
         deterministic functions of the key and lineage is append-ish.
         """
-        if (
-            partition_by
-            and set(partition_by) == set(keys)
-            and self.exists(table)
-        ):
-            self._overwrite_partitions(table, updates, partition_by, ensure)
+        col = self._partition_col(table, partition_by, keys)
+        if set(keys) == {col}:
+            self._overwrite_partitions(table, updates, col, ensure)
             return
-        self._replace_scoped(
-            table, updates, updates.select(*keys), keys, partition_by
-        )
+        self._replace_scoped(table, updates, updates.select(*keys), keys, col)
 
     def replace_by_scope(
         self,
@@ -280,11 +297,11 @@ class Catalog:
         arriving turns), independent of how many derived rows each produced —
         including zero.
 
-        Cost shape matches merge_by_key's middle regime: only the partitions
-        named by `scope` are read back and swapped — O(dirty buckets), never
-        O(table).
+        Cost and partitioning rules are merge_by_key's row-level regime's:
+        only the partitions `scope` names are read back and swapped.
         """
-        self._replace_scoped(table, updates, scope, scope_keys, partition_by)
+        col = self._partition_col(table, partition_by, scope_keys)
+        self._replace_scoped(table, updates, scope, scope_keys, col)
 
     def _replace_scoped(
         self,
@@ -292,48 +309,28 @@ class Catalog:
         updates: DataFrame,
         scope: DataFrame,
         scope_keys: list[str],
-        partition_by: list[str] | None,
+        col: str,
     ) -> None:
         """The body both public merges share (each public name is wrapped by
         the benchmark's spans, so neither calls the other): delete the rows
-        matching `scope` on `scope_keys`, insert `updates`. The live table
-        is read with `updates.schema`, the shape every caller writes it
-        from, so no read runs a parquet schema-inference job."""
+        matching `scope` on `scope_keys`, insert `updates`, swapping only
+        the `col` partitions `scope` names. The live table is read with
+        `updates.schema`, the shape every caller writes it from, so no read
+        runs a parquet schema-inference job."""
         if not self.exists(table):
-            self.overwrite(table, updates, partition_by=partition_by)
+            self.overwrite(table, updates, partition_by=[col])
             return
         scope = scope.select(*scope_keys).distinct()
-        if (
-            partition_by
-            and set(partition_by) < set(scope_keys)
-            and self._is_partitioned_by(table, partition_by[0])
-        ):
-            dirty = [
-                tuple(r) for r in scope.select(*partition_by).distinct().collect()
-            ]
-            if not dirty:
-                return
-            cond = None
-            for vals in dirty:
-                c = F.lit(True)
-                for col, v in zip(partition_by, vals):
-                    c = c & (F.col(col) == F.lit(v))
-                cond = c if cond is None else (cond | c)
-            # partition-column filter -> directory pruning on the scan
-            existing_dirty = self.read(table, updates.schema).where(cond)
-            kept = existing_dirty.join(scope, on=scope_keys, how="left_anti")
-            merged = kept.unionByName(updates.select(*kept.columns))
-            # ensure=dirty: a partition whose rows ALL belonged to the
-            # replaced scope (and whose new extraction is empty) must still
-            # be swapped — to empty — or its stale files stay live
-            self._overwrite_partitions(
-                table, merged, partition_by, ensure=dirty
-            )
+        dirty = [r[0] for r in scope.select(col).distinct().collect()]
+        if not dirty:
             return
-        existing = self.read(table, updates.schema)
-        kept = existing.join(scope, on=scope_keys, how="left_anti")
-        self.overwrite(
-            table,
-            kept.unionByName(updates.select(*kept.columns)),
-            partition_by=partition_by,
+        # partition-column filter -> directory pruning on the scan
+        existing_dirty = self.read(table, updates.schema).where(
+            F.col(col).isin(dirty)
         )
+        kept = existing_dirty.join(scope, on=scope_keys, how="left_anti")
+        merged = kept.unionByName(updates.select(*kept.columns))
+        # ensure=dirty: a partition whose rows ALL belonged to the replaced
+        # scope (and whose new extraction is empty) must still be swapped —
+        # to empty — or its stale files stay live
+        self._overwrite_partitions(table, merged, col, ensure=dirty)

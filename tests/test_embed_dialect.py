@@ -233,21 +233,15 @@ def test_dot_forms_match_python_and_duckdb(spark, name):
     (seed 0 and a near-dup seed) and search.dot_score on the vector shapes
     that break dot products: a NULL or off-width vector gives a NULL
     literal or pair dot, an off-width self-dot is still a number, and a
-    zero vector sits on every plane's >= 0 boundary."""
+    zero vector has a NULL cosine and sits on every plane's >= 0
+    boundary."""
     v = _EDGE_VECS[name]
     sdf = spark.createDataFrame([(v, _W64)], "v array<float>, w array<float>")
-    # a zero vector's cosine divides by a zero norm, which Spark's ANSI
-    # division raises on (DuckDB gives NULL): only its dots and bits run
-    cos = (
-        "CAST(NULL AS DOUBLE)"
-        if name == "zero"
-        else ann.cosine_vs_query_sql("v", _Q64)
-    )
     row = sdf.select(
         F.expr(ann.dot_sql("v", _Q64)),
         F.expr(ann.dot_sql_self("v")),
         F.expr(ann.pair_dot_sql("v", "w")),
-        F.expr(cos),
+        F.expr(ann.cosine_vs_query_sql("v", _Q64)),
         F.expr(ann.bucket_sql("v")),
         search.dot_score("v", _Q64),
         F.expr(ann.bucket_sql("v", ann.NEAR_DUP_LSH_PLANES, seed=_SEED)),
@@ -263,7 +257,8 @@ def test_dot_forms_match_python_and_duckdb(spark, name):
     )
     assert tuple(row) == want
     if name == "zero":
-        assert row[4] == "1" * ann.N_PLANES
+        # a zero norm: NULL cosine, and every plane's >= 0 boundary
+        assert row[3] is None and row[4] == "1" * ann.N_PLANES
 
     if v is not None and len(v) != 64:
         assert row[0] is None and row[2] is None and row[3] is None

@@ -33,6 +33,21 @@ def _assert_counters_are_table_counts(spark, res, out):
     assert res.counters["vertices"] == catalog.read("vertices").count()
 
 
+def _append_one_turn(spark, transcripts):
+    """``transcripts`` plus one turn that re-derives conv-b's bucket."""
+    import datetime
+
+    from grepai_spark.schemas import TRANSCRIPTS
+
+    return transcripts.unionByName(
+        spark.createDataFrame(
+            [("conv-b", 2, "user", "now MergeSort it", "",
+              datetime.datetime(2024, 1, 2))],
+            schema=TRANSCRIPTS,
+        )
+    )
+
+
 def _golden(transcripts_df):
     rows = [r.asDict() for r in transcripts_df.collect()]
     return golden_triples(rows, ALIAS_ROWS)
@@ -90,20 +105,12 @@ def test_pipeline_rerun_over_changed_input(spark, tiny_transcripts, tmp_path):
     the tables equal to a clean run over the new input: one appended turn
     re-derives its conversation's bucket; a bucket edited to yield no edge
     at all is emptied, not left holding its old rows."""
-    import datetime
-
     from grepai_spark.schemas import TRANSCRIPTS
 
     out = str(tmp_path / "out")
     d = alias_dict_df(spark)
     pipeline.run(spark, tiny_transcripts, d, out)
-    ts = datetime.datetime(2024, 1, 2)
-    appended = tiny_transcripts.unionByName(
-        spark.createDataFrame(
-            [("conv-b", 2, "user", "now MergeSort it", "", ts)],
-            schema=TRANSCRIPTS,
-        )
-    )
+    appended = _append_one_turn(spark, tiny_transcripts)
     silent = [
         (c, i, role, "nothing to see" if c == "conv-d" else text, tool, t)
         for c, i, role, text, tool, t in map(tuple, appended.collect())
@@ -133,6 +140,82 @@ def test_zero_pending_resume_job_budget(
     res, n = count_jobs(lambda: pipeline.run(spark, tiny_transcripts, d, out))
     assert res.counters["edges_buckets_pending"] == 0
     assert n <= 7, n
+
+
+def test_one_turn_append_job_budget(
+    spark, tiny_transcripts, tmp_path, count_jobs
+):
+    """Appending one turn recomputes its bucket with one pass per step: the
+    content-hash aggregate, the edges derive and swap, one lineage write,
+    the graph artifacts, the vertices overwrite and the metrics append. It
+    ran 24 when mark_done re-derived the stage to count its rows and merged
+    lineage through a read-back and an anti-join."""
+    out = str(tmp_path / "out")
+    d = alias_dict_df(spark)
+    pipeline.run(spark, tiny_transcripts, d, out)
+    appended = _append_one_turn(spark, tiny_transcripts)
+    res, n = count_jobs(lambda: pipeline.run(spark, appended, d, out))
+    assert res.counters["edges_buckets_pending"] == 1
+    assert n <= 21, n
+
+
+@pytest.fixture
+def local_tz_not_utc(monkeypatch):
+    """The driver's local time zone set off UTC (the session's), so a
+    timestamp written back through Arrow as a naive value would shift."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_lineage_after_one_turn_append(
+    spark, tiny_transcripts, tmp_path, local_tz_not_utc
+):
+    """mark_done writes each stage's lineage partition from the rows the
+    driver holds: after a one-turn append the table holds one row per
+    (stage, bucket), the untouched rows keep every field (updated_ts
+    included), and each bucket's rows_out is its row count in the stage's
+    table."""
+    from grepai_spark import lineage
+    from grepai_spark.schemas import LINEAGE
+    from grepai_spark.storage import Catalog
+
+    out = str(tmp_path / "out")
+    d = alias_dict_df(spark)
+
+    def lineage_rows():
+        cat = Catalog(spark, out)
+        rows = cat.read(lineage.LINEAGE_TABLE, LINEAGE).collect()
+        by_key = {(r["stage"], r["bucket"]): r.asDict() for r in rows}
+        assert len(by_key) == len(rows)  # one row per (stage, bucket)
+        return by_key
+
+    pipeline.run(spark, tiny_transcripts, d, out, embed=True)
+    before = lineage_rows()
+    res = pipeline.run(
+        spark, _append_one_turn(spark, tiny_transcripts), d, out, embed=True
+    )
+    assert res.counters["edges_buckets_pending"] == 1
+    assert res.counters["vectors_buckets_pending"] == 1
+    after = lineage_rows()
+    assert after.keys() == before.keys()
+    changed = sorted(k for k in after if after[k] != before[k])
+    assert [s for s, _ in changed] == ["edges", "vectors"]
+    assert changed[0][1] == changed[1][1]
+    for k in changed:
+        assert after[k]["content_hash"] != before[k]["content_hash"]
+        assert after[k]["updated_ts"] > before[k]["updated_ts"]
+    cat = Catalog(spark, out)
+    for stage, table in (("edges", "edges"), ("vectors", "turn_vectors")):
+        counts = dict(cat.read(table).groupBy("bucket").count().collect())
+        for (s, b), r in after.items():
+            if s == stage:
+                assert r["status"] == "done"
+                assert r["rows_out"] == counts.get(b, 0), (stage, b)
 
 
 def test_pipeline_on_hostile_dictionary(

@@ -1,8 +1,11 @@
-"""Catalog merge regimes: atomic partition swap + dirty-partition row merge."""
+"""Catalog merge regimes: atomic partition swap + dirty-partition row merge;
+footer row counts."""
 
 from __future__ import annotations
 
 import os
+
+import pytest
 
 from grepai_spark.storage import Catalog
 
@@ -67,15 +70,41 @@ def test_merge_partition_key_branch_is_atomic_swap(spark, tmp_path):
     assert debris == []
 
 
-def test_merge_row_level_fallback_unpartitioned(spark, tmp_path):
+def test_merge_unpartitioned_raises(spark, tmp_path):
+    """No merge rewrites a whole table: a call without a one-column
+    partition_by among its keys, or into a live table not in that layout,
+    raises and leaves the table as it was."""
     cat = Catalog(spark, str(tmp_path / "cat3"))
-    df = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
-    cat.merge_by_key("t", df, ["k"])
-    cat.merge_by_key(
-        "t", spark.createDataFrame([("a", 7)], "k string, v int"), ["k"]
+    rows = [(0, "a", 1), (1, "b", 2)]
+    df = spark.createDataFrame(rows, "bucket int, k string, v int")
+    for keys, part in (
+        (["k"], None),
+        (["k"], ["bucket"]),
+        (["bucket", "k"], ["bucket", "k"]),
+    ):
+        with pytest.raises(ValueError):
+            cat.merge_by_key("t", df, keys, partition_by=part)
+    assert not cat.exists("t")
+    cat.overwrite("flat", df)
+    for keys in (["bucket", "k"], ["bucket"]):
+        with pytest.raises(ValueError, match="not partitioned"):
+            cat.merge_by_key("flat", df, keys, partition_by=["bucket"])
+    assert sorted(tuple(r) for r in cat.read("flat").collect()) == rows
+
+
+def test_partition_rows_reads_footer_counts(spark, tmp_path, count_jobs):
+    """Per-partition row counts from the parquet footers, with no Spark
+    job: a swapped-to-empty or absent partition counts 0."""
+    cat = Catalog(spark, str(tmp_path / "cat6"))
+    df = spark.createDataFrame(
+        [(b, i) for b in (0, 1) for i in range(3 + b)], "bucket int, v int"
     )
-    got = {r["k"]: r["v"] for r in cat.read("t").collect()}
-    assert got == {"a": 7, "b": 2}
+    cat.merge_by_key("t", df, ["bucket"], partition_by=["bucket"], ensure=[2])
+    got, n = count_jobs(lambda: cat.partition_rows("t", "bucket", [0, 1, 2, 3]))
+    assert (got, n) == ({0: 3, 1: 4, 2: 0, 3: 0}, 0)
+    assert got == {
+        b: cat.read("t").where(f"bucket = {b}").count() for b in got
+    }
 
 
 def test_crash_recovery_promotes_staged_new(spark, tmp_path):
@@ -181,19 +210,28 @@ def test_replace_by_scope_clears_rows_the_update_no_longer_produces(
             assert after.get(k) == m, f"clean partition rewritten: {k}"
 
 
-def test_replace_by_scope_creates_and_falls_back(spark, tmp_path):
-    """Missing table -> plain overwrite; unpartitioned table -> row-level
-    anti-join fallback."""
+def test_replace_by_scope_creates_and_refuses_unpartitioned(
+    spark, tmp_path
+):
+    """Missing table -> created in the partition layout; an unpartitioned
+    call raises instead of anti-joining the whole table."""
     cat = Catalog(spark, str(tmp_path / "cat2"))
-    scope = spark.createDataFrame([("a",)], "unit string")
-    upd = spark.createDataFrame([("a", 1)], "unit string, k int")
-    cat.replace_by_scope("t", upd, scope, ["unit"])
-    assert [tuple(r) for r in cat.read("t").collect()] == [("a", 1)]
+    scope = spark.createDataFrame([(0, "a")], "bucket int, unit string")
+    schema = "bucket int, unit string, k int"
+    upd = spark.createDataFrame([(0, "a", 1)], schema)
+    cat.replace_by_scope(
+        "t", upd, scope, ["bucket", "unit"], partition_by=["bucket"]
+    )
+    assert cat._is_partitioned_by("t", "bucket")
 
-    # unpartitioned fallback: replace unit 'a' wholesale
-    upd2 = spark.createDataFrame([("a", 7)], "unit string, k int")
-    cat.replace_by_scope("t", upd2, scope, ["unit"])
-    assert [tuple(r) for r in cat.read("t").collect()] == [("a", 7)]
+    def rows():
+        return [tuple(r) for r in cat.read("t").select(*upd.columns).collect()]
+
+    assert rows() == [(0, "a", 1)]
+    upd2 = spark.createDataFrame([(0, "a", 7)], schema)
+    with pytest.raises(ValueError):
+        cat.replace_by_scope("t", upd2, scope, ["bucket", "unit"])
+    assert rows() == [(0, "a", 1)]
 
 
 def test_replace_by_scope_empties_a_partition_whose_rows_all_left(

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from grepai_spark import extract, streaming
 from grepai_spark.storage import Catalog
 
@@ -320,6 +322,9 @@ def test_daemon_trigger_reindexes_modified_turns(
         end = time.monotonic() + deadline_s
         got = set()
         while time.monotonic() < end:
+            # a dead stream never converges: fail with its own error
+            if q.exception() is not None or not q.isActive:
+                pytest.fail(f"stream stopped: {q.exception()}")
             try:  # reads can race a partition swap mid-trigger
                 got = _edge_set(
                     cat.read(streaming.KG_EDGES_TABLE).select(

@@ -183,6 +183,43 @@ def test_ivf_topk_probes_best_cells(spark, emb, con):
     assert len(got) == 20
 
 
+def test_ann_topk_over_a_zero_vector_vs_oracle(spark, emb):
+    """One all-zero embedding has no cosine: ann_lsh_topk and ivf_topk
+    score it NULL and rank it last, as their DuckDB oracles do, instead of
+    failing the query on a zero-norm division."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    vecs = t.column("embedding").to_pylist()
+    # a query whose probe set holds the zero vector's all-'1' bucket
+    q = next(v for v in vecs if ann.py_bucket(v).count("0") <= 1)
+    cell = ann.ivf_topk(emb, q, 1).first()["cell"]
+    zero_id = 10**9
+    zero = (zero_id, [0.0] * 64, cell)
+    with_zero = emb.unionByName(spark.createDataFrame([zero], emb.schema))
+    c = duckdb.connect()
+    c.register(
+        "embeddings",
+        pa.concat_tables(
+            [t, pa.Table.from_pylist([dict(zip(t.column_names, zero))],
+                                     t.schema)]
+        ),
+    )
+    k = t.num_rows + 1  # every candidate: the NULL row is the last
+    for got_df, sql in (
+        (ann.ann_lsh_topk(with_zero, q, k), ann.ann_lsh_topk_oracle(q, k)),
+        (ann.ivf_topk(with_zero, q, k), ann.ivf_topk_oracle(q, k)),
+    ):
+        got = [tuple(r) for r in got_df.collect()]
+        want = c.execute(sql).fetchall()
+        assert got[-1][0] == zero_id and got[-1][-1] is None
+        assert got[:-1] == [
+            (*w[:-1], pytest.approx(w[-1], abs=1e-6)) for w in want[:-1]
+        ]
+        assert want[-1] == got[-1]
+
+
 def test_ann_lsh_is_subset_of_brute(spark, emb):
     from grepai_spark.search import cosine_topk
 
@@ -475,18 +512,16 @@ def test_image_features_matches_decoded_pixels(spark, docs):
         assert (r["sum_r"], r["sum_g"], r["sum_b"]) == tuple(int(x) for x in sums)
 
 
-def test_ann_lsh_bucketed_prunes_partitions(spark, tmp_path):
-    """The bucket-partitioned ANN store: identical top-k to the expression
+def test_ann_lsh_bucketed_prunes_partitions(spark, emb):
+    """The bucket-partitioned ANN store the driver queries read
+    (stores.open_store "lsh_store"): identical top-k to the expression
     path, and the scan's physical plan carries the bucket as a PARTITION
     filter (directory pruning), not a row filter."""
-    from grepai_spark.embed import py_encode
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    store = str(tmp_path / "emb_by_bucket")
-    ann.write_lsh_bucketed(emb, store)
+    from grepai_spark import stores
 
     q = py_encode("scan filter join", dim=64)
-    got = ann.ann_lsh_topk_store(spark.read.parquet(store), q, 10)
+    store = stores.open_store(spark, SF_DIR, "lsh_store")
+    got = ann.ann_lsh_topk_store(store, q, 10)
     want = ann.ann_lsh_topk(emb, q, 10)
     assert [tuple(r) for r in got.collect()] == [
         tuple(r) for r in want.collect()
