@@ -108,6 +108,22 @@ def collect_if_small(df: DataFrame, cutoff: int | None = None) -> list | None:
     return rows
 
 
+def arrow_table(rows: list, schema: StructType):
+    """``rows`` (tuples or Rows, positional in ``schema`` order) as a
+    ``pyarrow.Table`` of the types Spark exchanges with Arrow: a
+    ``TimestampType`` column is ``timestamp[us, tz=UTC]``, so an aware
+    datetime keeps its instant and a naive one is taken as UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
 def local_df(
     spark: SparkSession, rows: list, schema: StructType | str
 ) -> DataFrame:
@@ -117,18 +133,11 @@ def local_df(
 
     The only ``createDataFrame`` in the package: see the module docstring
     for why a Python list must not go in directly."""
-    import pyarrow as pa
     from pyspark.sql.conversion import ArrowTableToRowsConversion
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    arrow_schema = to_arrow_schema(schema)
-    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
-        schema=arrow_schema,
-    )
+    table = arrow_table(rows, schema)
     df = spark.createDataFrame(table, schema)
     _ROWS[df] = ArrowTableToRowsConversion.convert(table, schema)
     return df

@@ -16,12 +16,19 @@ mid-run: killing between stages loses at most uncommitted buckets.
 
 The gate is decided from rows, on the driver: the run collects its
 ``n_buckets`` hash rows (one aggregate), the lineage table is read once per
-Catalog handle with its declared schema (one scan, no inference job), and
-:func:`pending_buckets` compares the two in Python — no join job for a
-decision over a few dozen rows. :func:`mark_done` writes the stage's whole
-lineage partition from the held rows (one LocalRelation, no read-back), with
-``rows_out`` from the stage write's parquet footers, so no stage is
-re-derived to count it and :func:`stage_rows_out` needs no read.
+Catalog handle, and :func:`pending_buckets` compares the two in Python — no
+join job for a decision over a few dozen rows. The table is stages x buckets
+rows, so it never goes through Spark: it is read with pyarrow
+(``Catalog.read_rows``) and :func:`mark_done` writes the stage's whole
+lineage partition from the held rows as one parquet file
+(``Catalog.write_partition``), with ``rows_out`` from the stage write's
+parquet footers. Neither runs a Spark job, no stage is re-derived to count
+it, and :func:`stage_rows_out` needs no read. Spark reads the table back
+with the declared ``LINEAGE`` schema.
+
+A gate needs no bucketing: ``pipeline.run`` gates its dictionary-scale
+vertices table on one row (bucket 0) whose content hash is the dictionary's
+signature.
 """
 
 from __future__ import annotations
@@ -32,7 +39,6 @@ from weakref import WeakKeyDictionary
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-from grepai_spark.dimcache import cached_rows, local_df
 from grepai_spark.schemas import LINEAGE
 from grepai_spark.storage import Catalog
 
@@ -83,9 +89,7 @@ _HELD: "WeakKeyDictionary[Catalog, dict[tuple[str, int], Row]]" = (
 def _held(catalog: Catalog) -> dict[tuple[str, int], Row]:
     held = _HELD.get(catalog)
     if held is None:
-        # the LINEAGE schema: no inference job; a missing table reads as an
-        # empty LocalRelation, whose rows come back with no job
-        lin = cached_rows(catalog.read(LINEAGE_TABLE, schema=LINEAGE))
+        lin = catalog.read_rows(LINEAGE_TABLE, LINEAGE)
         held = _HELD[catalog] = {(r["stage"], r["bucket"]): r for r in lin}
     return held
 
@@ -114,7 +118,8 @@ def mark_done(
     rows_out: bucket -> the stage's output row count for that bucket (a
     bucket it lacks wrote none). The stage's rows are rebuilt from the held
     rows and swapped in as the whole ``stage=`` partition of the lineage
-    table; untouched buckets keep every field."""
+    table, written on the driver (no Spark job); untouched buckets keep
+    every field."""
     held = _held(catalog)
     now = datetime.datetime.now(datetime.timezone.utc)
     rows = {
@@ -129,12 +134,14 @@ def mark_done(
             rows_out.get(b, 0), now,
         ]
     for row in rows.values():
-        # collect() returns local naive timestamps and Arrow would take a
-        # naive value as UTC: make it aware so a kept row does not shift
+        # held rows carry collect()'s local naive timestamps and Arrow
+        # would take a naive value as UTC: make it aware so a kept row does
+        # not shift
         row[-1] = row[-1] and row[-1].astimezone(datetime.timezone.utc)
-    df = local_df(catalog.spark, [rows[b] for b in sorted(rows)], LINEAGE)
-    catalog.merge_by_key(LINEAGE_TABLE, df, ["stage"], partition_by=["stage"])
-    held.update(((stage, r["bucket"]), r) for r in cached_rows(df))
+    written = catalog.write_partition(
+        LINEAGE_TABLE, LINEAGE, "stage", stage, [rows[b] for b in sorted(rows)]
+    )
+    held.update(((stage, r["bucket"]), r) for r in written)
 
 
 def stage_rows_out(catalog: Catalog, stage: str) -> int:

@@ -18,15 +18,16 @@ recomputed buckets (Iceberg: overwritePartitions).
 
 from __future__ import annotations
 
+import datetime
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from grepai_spark import cc, extract, link, lineage, materialize
 from grepai_spark.dimcache import cached_rows, local_df
-from grepai_spark.schemas import EDGES, VERTICES
+from grepai_spark.schemas import EDGES, METRICS, VERTICES
 from grepai_spark.storage import Catalog
 
 # the bucket-partitioned edges table run() writes and reads back
@@ -71,7 +72,22 @@ def kg_edges_df(
 # fraction. The reference equivalently LOADS its persisted symbol maps
 # instead of re-indexing (rpg/persistence.go). Values are plain dicts (no
 # Spark handles), so entries stay valid across sessions in one process.
-_AMAP_MEMO: dict[tuple[int, str, bool], dict[str, tuple[str, str]]] = {}
+_AMAP_MEMO: dict[tuple[int, str], dict[str, tuple[str, str]]] = {}
+
+
+def _dict_signature(rows: list, use_lsh: bool) -> str:
+    """sha256 over the dictionary rows (alias, canonical_id, kind; order-
+    insensitive) and the linking variant: everything the entity map and the
+    vertices table are a function of. Keys the entity-map memo and gates
+    the vertices overwrite in :func:`run`."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for r in sorted((r["alias"], r["canonical_id"], r["kind"]) for r in rows):
+        h.update("\x01".join(r).encode())
+        h.update(b"\x00")
+    h.update(b"lsh" if use_lsh else b"blocked")
+    return h.hexdigest()
 
 
 def _canonical_map(alias_dict: DataFrame, use_lsh: bool) -> DataFrame:
@@ -118,17 +134,12 @@ def alias_entity_map(
     in-memory symbol maps (rpg/indexer.go:527).
 
     The dictionary is a collectable broadcast-side dimension (dimcache), so
-    the signature is a sha256 over the rows already in hand — no Spark job.
-    Linking and CC pick their own driver/distributed regime by size.
+    the signature (:func:`_dict_signature`) is taken over the rows already
+    in hand — no Spark job. Linking and CC pick their own
+    driver/distributed regime by size.
     """
-    import hashlib
-
     rows = cached_rows(alias_dict)
-    h = hashlib.sha256()
-    for r in sorted((r["alias"], r["canonical_id"], r["kind"]) for r in rows):
-        h.update("\x01".join(r).encode())
-        h.update(b"\x00")
-    key = (len(rows), h.hexdigest(), use_lsh)
+    key = (len(rows), _dict_signature(rows, use_lsh))
     amap = _AMAP_MEMO.get(key)
     if amap is None:
         amap = _entity_map(alias_dict, _canonical_map(alias_dict, use_lsh))
@@ -217,6 +228,16 @@ def run(
     use_lsh: bool = False,
     embed: bool = False,
 ) -> PipelineResult:
+    """The resumable index build into the catalog at ``out_dir``.
+
+    Every stage is gated on lineage, so a re-run recomputes only what
+    changed: the vectors and edges stages per bucket of turns (content hash
+    of the bucket's rows, :func:`_bucket_stage`), the vertices table as a
+    whole on the dictionary signature (:func:`_dict_signature` over the
+    rows already held, plus ``use_lsh``), so an unchanged dictionary leaves
+    it untouched. Lineage and the metrics run log are written on the
+    driver, so a zero-pending resume runs only the content-hash aggregate.
+    ``fail_after`` names a stage to crash after (tests)."""
     catalog = Catalog(spark, out_dir)
     counters: dict[str, int] = {}
 
@@ -284,9 +305,24 @@ def run(
     if fail_after == "edges":
         raise InjectedFailure("killed after edges stage")
 
-    # ---- stage: vertices (global, dictionary-scale) -------------------------
-    vertices = materialize.build_vertices(alias_dict, cmap)
-    catalog.overwrite("vertices", vertices)
+    # ---- stage: vertices (global, dictionary-scale), gated ------------------
+    # one lineage row whose content hash is the dictionary signature: the
+    # table is rewritten only when the dictionary (or the linking variant)
+    # changed, or the table is missing. A crash between the overwrite and
+    # the mark only rewrites it again next run, which is idempotent.
+    dict_rows = cached_rows(alias_dict)
+    sig = Row(
+        bucket=0,
+        content_hash=_dict_signature(dict_rows, use_lsh),
+        rows_in=len(dict_rows),
+    )
+    pending = lineage.pending_buckets(catalog, "vertices", [sig])
+    if pending or not catalog.exists("vertices"):
+        vertices = materialize.build_vertices(alias_dict, cmap)
+        catalog.overwrite("vertices", vertices)
+        lineage.mark_done(
+            catalog, "vertices", [sig], {0: counters["canonical_entities"]}
+        )
 
     edges_out = catalog.read("edges", _EDGES_B).drop("bucket")
     vertices_out = catalog.read("vertices", VERTICES)
@@ -298,15 +334,17 @@ def run(
     counters["vertices"] = counters["canonical_entities"]
 
     # ---- metrics sink (S8 analog: stats NDJSON -> a small metrics table) ---
-    # append-only run log (the reference's stats recorder appends NDJSON,
-    # stats/recorder.go): each run adds its counter snapshot — O(new rows),
-    # never a table rewrite; readers take the latest run_ts per metric
-    metrics = local_df(
-        spark,
-        [(k, int(v)) for k, v in sorted(counters.items())],
-        "metric string, value long",
-    ).withColumn("run_ts", F.current_timestamp())
-    catalog.append("metrics", metrics)
+    # append-only run log (the reference's stats recorder appends NDJSON
+    # from the process that holds the stats, stats/recorder.go): each run
+    # adds its counter snapshot as one file written on the driver — O(new
+    # rows), no Spark job, never a table rewrite; readers take the latest
+    # run_ts per metric
+    run_ts = datetime.datetime.now(datetime.timezone.utc)
+    catalog.append_rows(
+        "metrics",
+        METRICS,
+        [(k, int(v), run_ts) for k, v in sorted(counters.items())],
+    )
 
     return PipelineResult(edges=edges_out, vertices=vertices_out, counters=counters)
 
@@ -319,7 +357,7 @@ def latest_metrics(catalog: Catalog) -> DataFrame:
     take the max run_ts per metric, which is exactly this view."""
     from pyspark.sql import Window
 
-    m = catalog.read("metrics")
+    m = catalog.read("metrics", METRICS)
     w = Window.partitionBy("metric").orderBy(F.desc("run_ts"))
     return (
         m.withColumn("_rn", F.row_number().over(w))

@@ -9,13 +9,30 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
+    DoubleType,
     FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
+)
+
+# The synthetic events parquet of a scale-factor directory, which synth
+# derives transcripts from: exactly the types parquet inference returns for
+# it (its timestamps are not UTC-adjusted, so ts reads as TIMESTAMP_NTZ).
+# Declared so a load runs no schema-inference job.
+EVENTS = StructType(
+    [
+        StructField("event_id", LongType()),
+        StructField("ts", TimestampNTZType()),
+        StructField("user_id", LongType()),
+        StructField("event_type", StringType()),
+        StructField("value", DoubleType()),
+        StructField("props", StringType()),
+    ]
 )
 
 # Authoritative input shape (BASELINE.json input_hint).
@@ -96,6 +113,16 @@ LINEAGE = StructType(
         StructField("rows_in", LongType()),
         StructField("rows_out", LongType()),
         StructField("updated_ts", TimestampType()),
+    ]
+)
+
+# Append-only run log: one row per counter per pipeline run
+# (analog of the reference's stats NDJSON, stats/recorder.go).
+METRICS = StructType(
+    [
+        StructField("metric", StringType()),
+        StructField("value", LongType()),
+        StructField("run_ts", TimestampType()),
     ]
 )
 

@@ -13,6 +13,18 @@ or fully new, never half-written (the overwritePartitions commit contract).
 Every merge is partition-scoped, in one of two regimes (merge_by_key), and
 one into an unpartitioned table raises rather than rewrite the table. A
 writer reads what it wrote from the parquet footers (partition_rows).
+
+Driver-scale tables -- ``lineage`` (stages x buckets rows) and the
+``metrics`` run log (one row per counter per run) -- are read and written
+with pyarrow on the driver (read_rows, write_partition, append_rows): their
+rows are already in the driver's hands, so moving them through Spark would
+only add a fixed-cost job to every run, the zero-pending resume included.
+The files are the ones Spark would write: the same directory layout and
+swap protocol, the partition column only in the directory name,
+timestamps as UTC-adjusted micros, so Spark reads them back with the
+declared schemas. (Iceberg: pyiceberg scans and appends of Arrow
+tables.)
+
 The pipeline code only talks to this interface, so swapping in Iceberg is a
 config change (`writeTo(...).createOrReplace()` / `.append()`), not a
 rewrite.
@@ -27,6 +39,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from grepai_spark.dimcache import arrow_table, local_df
 
 
 _TMP_MARK = ".__tmp__"
@@ -117,6 +131,11 @@ def _recover_dir(parent: str) -> None:
                 os.rename(full, base)
 
 
+def _part_name() -> str:
+    """A data file name no other write picks (Spark's part-file style)."""
+    return f"part-00000-{uuid.uuid4()}.parquet"
+
+
 class Catalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -139,8 +158,6 @@ class Catalog:
         and an existing one is read with that schema (no inference job, which
         parquet otherwise runs per read); without it, a missing table
         raises."""
-        from grepai_spark.dimcache import local_df
-
         p = self.path(table)
         if not os.path.isdir(p):
             if schema is None:
@@ -169,6 +186,80 @@ class Catalog:
     def append(self, table: str, df: DataFrame) -> None:
         """Append snapshot (Iceberg: .append())."""
         df.write.mode("append").parquet(self.path(table))
+
+    def read_rows(self, table: str, schema: StructType) -> list:
+        """A driver-scale table's rows read with pyarrow (hive partitions,
+        no Spark job), equal to ``read(table, schema).collect()``: `col=`
+        directory columns last, timestamps as local naive datetimes. A
+        missing table has no rows."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        p = self.path(table)
+        if not os.path.isdir(p):
+            return []
+        part_cols = {e.split("=", 1)[0] for e in os.listdir(p) if "=" in e}
+        # Spark's column order: data columns, then the partition columns
+        order = StructType(
+            [f for f in schema if f.name not in part_cols]
+            + [f for f in schema if f.name in part_cols]
+        )
+        arrow_schema = to_arrow_schema(order)
+        parts = pa.schema([f for f in arrow_schema if f.name in part_cols])
+        data = ds.dataset(
+            p,
+            schema=arrow_schema,
+            format="parquet",
+            partitioning=ds.partitioning(parts, flavor="hive"),
+        ).to_table()
+        return ArrowTableToRowsConversion.convert(data, order)
+
+    def write_partition(
+        self, table: str, schema: StructType, col: str, value, rows: list
+    ) -> list:
+        """Swap ``rows`` (positional in ``schema`` order, each with ``col``
+        = ``value``) in as the whole ``col=value`` partition of ``table``:
+        one parquet file written on the driver into a staging dir, then the
+        staged three-rename swap of _overwrite_partitions (Iceberg: an
+        overwrite of one partition). Returns the rows as read_rows returns
+        them."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        data = arrow_table(rows, schema)
+        final = self.path(table)
+        tmp = _tmp_dir(final)
+        staged = os.path.join(tmp, f"{col}={value}")
+        os.makedirs(staged)
+        pq.write_table(
+            data.drop_columns([col]), os.path.join(staged, _part_name())
+        )
+        os.makedirs(final, exist_ok=True)
+        _swap_dir(staged, os.path.join(final, f"{col}={value}"))
+        shutil.rmtree(tmp, ignore_errors=True)
+        # as a read returns them: the partition column last
+        order = StructType(
+            [f for f in schema if f.name != col] + [schema[col]]
+        )
+        return ArrowTableToRowsConversion.convert(
+            data.select(order.names), order
+        )
+
+    def append_rows(self, table: str, schema: StructType, rows: list) -> None:
+        """Append ``rows`` (positional in ``schema`` order) as one new
+        parquet file written on the driver (Iceberg: an append of an Arrow
+        table). The file is written under a hidden name and renamed into
+        place, so a reader never sees it half-written."""
+        import pyarrow.parquet as pq
+
+        final = self.path(table)
+        os.makedirs(final, exist_ok=True)
+        name = _part_name()
+        hidden = os.path.join(final, f".{name}")
+        pq.write_table(arrow_table(rows, schema), hidden)
+        os.rename(hidden, os.path.join(final, name))
 
     def _is_partitioned_by(self, table: str, col: str) -> bool:
         """True iff every data entry of the live table is a `col=` dir (an
@@ -254,10 +345,10 @@ class Catalog:
 
         Two regimes, both O(dirty partitions), never O(table):
 
-        * `partition_by == keys` (the pipeline's per-bucket stages and the
-          per-stage lineage write): ONLY the partitions present in `updates`
-          (and those named by `ensure`, see _overwrite_partitions) are
-          swapped in; untouched partition files are never rewritten.
+        * `partition_by == keys` (the pipeline's per-bucket stages): ONLY
+          the partitions present in `updates` (and those named by `ensure`,
+          see _overwrite_partitions) are swapped in; untouched partition
+          files are never rewritten.
         * `partition_by` a strict subset of `keys` (streaming row-level
           merges into a bucketed table): the dirty partitions are READ back,
           anti-joined against the update keys, unioned with the updates and
@@ -266,7 +357,7 @@ class Catalog:
         Any other call raises ValueError (see _partition_col).
 
         Last-write-wins per key is safe for our tables: vectors are
-        deterministic functions of the key and lineage is append-ish.
+        deterministic functions of the key.
         """
         col = self._partition_col(table, partition_by, keys)
         if set(keys) == {col}:

@@ -140,10 +140,13 @@ def read_parallel(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize transcripts from the sf directory's events parquet."""
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
-        "gs_events"
-    )
+    """Synthesize transcripts from the sf directory's events parquet, read
+    with its declared schema (no schema-inference job)."""
+    from grepai_spark.schemas import EVENTS
+
+    spark.read.schema(EVENTS).parquet(
+        f"{sf_dir}/events.parquet"
+    ).createOrReplaceTempView("gs_events")
     return spark.sql(transcripts_sql("gs_events", "spark"))
 
 

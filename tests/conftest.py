@@ -82,6 +82,19 @@ def count_jobs(spark):
 
 
 @pytest.fixture
+def local_tz_not_utc(monkeypatch):
+    """The driver's local time zone set off UTC (the session's), so a
+    timestamp written back through Arrow as a naive value would shift."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+@pytest.fixture
 def count_py4j(spark):
     """``count_py4j(fn) -> (fn(), number of py4j commands fn sent to the
     JVM)``: the driver's plan-building cost, which no Spark job shows."""

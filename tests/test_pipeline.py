@@ -128,48 +128,158 @@ def test_pipeline_rerun_over_changed_input(spark, tiny_transcripts, tmp_path):
 def test_zero_pending_resume_job_budget(
     spark, tiny_transcripts, tmp_path, count_jobs
 ):
-    """A zero-pending resume runs only the jobs it cannot avoid: the
-    content-hash aggregate (2 jobs under AQE), one lineage read, the
-    vertices overwrite (3) and the metrics append. It ran 17 when the gates
-    were left-anti joins, the canonical map a checkpoint of a Python-list
-    DataFrame and the counters count() jobs; a reintroduced Python-RDD
-    scan, schema-inference job or gate join fails this."""
+    """A zero-pending resume runs only the content-hash aggregate (2 jobs
+    under AQE): lineage is read and the metrics row appended with pyarrow
+    on the driver, and the vertices overwrite is gated on the dictionary
+    signature. It ran 17 when the gates were left-anti joins, the canonical
+    map a checkpoint of a Python-list DataFrame and the counters count()
+    jobs, and 7 while lineage and metrics went through Spark and vertices
+    was rewritten every run; a reintroduced Python-RDD scan,
+    schema-inference job, gate join or ungated write fails this."""
     out = str(tmp_path / "out")
     d = alias_dict_df(spark)
     pipeline.run(spark, tiny_transcripts, d, out)
     res, n = count_jobs(lambda: pipeline.run(spark, tiny_transcripts, d, out))
     assert res.counters["edges_buckets_pending"] == 0
-    assert n <= 7, n
+    assert n <= 2, n
 
 
 def test_one_turn_append_job_budget(
     spark, tiny_transcripts, tmp_path, count_jobs
 ):
     """Appending one turn recomputes its bucket with one pass per step: the
-    content-hash aggregate, the edges derive and swap, one lineage write,
-    the graph artifacts, the vertices overwrite and the metrics append. It
-    ran 24 when mark_done re-derived the stage to count its rows and merged
-    lineage through a read-back and an anti-join."""
+    content-hash aggregate, the edges derive and swap and the graph
+    artifacts; the lineage write and the metrics append run on the driver
+    and the unchanged dictionary leaves vertices alone. It ran 24 when
+    mark_done re-derived the stage to count its rows and merged lineage
+    through a read-back and an anti-join, and 21 while lineage and metrics
+    went through Spark and vertices was rewritten every run."""
     out = str(tmp_path / "out")
     d = alias_dict_df(spark)
     pipeline.run(spark, tiny_transcripts, d, out)
     appended = _append_one_turn(spark, tiny_transcripts)
     res, n = count_jobs(lambda: pipeline.run(spark, appended, d, out))
     assert res.counters["edges_buckets_pending"] == 1
-    assert n <= 21, n
+    assert n <= 15, n
 
 
-@pytest.fixture
-def local_tz_not_utc(monkeypatch):
-    """The driver's local time zone set off UTC (the session's), so a
-    timestamp written back through Arrow as a naive value would shift."""
-    import time
+def _vertex_rows(vertices_df):
+    return sorted(
+        (r.entity_id, r.canonical_name, r.kind, tuple(r.aliases))
+        for r in vertices_df.collect()
+    )
 
-    monkeypatch.setenv("TZ", "America/New_York")
-    time.tzset()
-    yield
+
+def _vertex_files(out):
+    import os
+
+    d = os.path.join(out, "vertices")
+    return sorted(f for f in os.listdir(d) if not f.startswith((".", "_")))
+
+
+def _dict_df(spark, rows):
+    from grepai_spark.dimcache import local_df
+    from grepai_spark.schemas import ALIAS_DICT
+
+    return local_df(spark, rows, ALIAS_DICT)
+
+
+def test_vertices_gated_on_dictionary_signature(
+    spark, tiny_transcripts, tmp_path
+):
+    """run() rewrites vertices only when the dictionary signature changed:
+    an unchanged dictionary leaves its files in place; adding or removing
+    an alias, or flipping use_lsh, rewrites it to the new dictionary's
+    vertices."""
+    out = str(tmp_path / "out")
+    d = alias_dict_df(spark)
+    res = pipeline.run(spark, tiny_transcripts, d, out)
+    files = _vertex_files(out)
+    res = pipeline.run(spark, tiny_transcripts, d, out)
+    assert _vertex_files(out) == files
+    assert _vertex_rows(res.vertices) == _vertex_rows(
+        pipeline.kg_vertices_df(spark, d)
+    )
+    plus = _dict_df(
+        spark, [*ALIAS_ROWS, ("mergeSorter", "e_merge_sort", "entity")]
+    )
+    minus = _dict_df(spark, [r for r in ALIAS_ROWS if r[0] != "hash_join"])
+    for step, use_lsh in ((plus, False), (minus, False), (minus, True)):
+        res = pipeline.run(spark, tiny_transcripts, step, out, use_lsh=use_lsh)
+        assert _vertex_files(out) != files
+        files = _vertex_files(out)
+        assert _vertex_rows(res.vertices) == _vertex_rows(
+            pipeline.kg_vertices_df(spark, step)
+        )
+        assert res.counters["vertices"] == len(_vertex_rows(res.vertices))
+    assert _vertex_rows(res.vertices) != _vertex_rows(
+        pipeline.kg_vertices_df(spark, plus)
+    )
+
+
+def test_vertices_gate_rewrites_what_it_cannot_vouch_for(
+    spark, tiny_transcripts, tmp_path, monkeypatch
+):
+    """vertices is rewritten when no lineage row vouches for it: a catalog
+    written before the gate (no stage=vertices lineage partition) is
+    rewritten once and marked; a deleted vertices table is rewritten; a
+    crash in the vertices mark_done converges on the next run."""
+    import os
+    import shutil
+
+    from grepai_spark import lineage
+
+    out = str(tmp_path / "out")
+    d = alias_dict_df(spark)
+    want = _vertex_rows(pipeline.kg_vertices_df(spark, d))
+    pipeline.run(spark, tiny_transcripts, d, out)
+
+    def vertices_lineage():
+        from grepai_spark.schemas import LINEAGE
+        from grepai_spark.storage import Catalog
+
+        rows = Catalog(spark, out).read("lineage", LINEAGE).collect()
+        return [r for r in rows if r["stage"] == "vertices"]
+
+    # a catalog the ungated pipeline wrote: no vertices lineage
+    shutil.rmtree(os.path.join(out, "lineage", "stage=vertices"))
+    files = _vertex_files(out)
+    res = pipeline.run(spark, tiny_transcripts, d, out)
+    assert _vertex_files(out) != files
+    assert _vertex_rows(res.vertices) == want
+    (row,) = vertices_lineage()
+    assert (row["bucket"], row["status"], row["rows_in"], row["rows_out"]) == (
+        0, "done", len(ALIAS_ROWS), len(want)
+    )
+    files = _vertex_files(out)
+    pipeline.run(spark, tiny_transcripts, d, out)
+    assert _vertex_files(out) == files
+
+    shutil.rmtree(os.path.join(out, "vertices"))
+    res = pipeline.run(spark, tiny_transcripts, d, out)
+    assert _vertex_rows(res.vertices) == want
+
+    # killed after the overwrite, before the mark: the next run rewrites
+    # vertices again (idempotent) and marks it
+    mark_done = lineage.mark_done
+
+    def crash_on_vertices(catalog, stage, *a):
+        if stage == "vertices":
+            raise pipeline.InjectedFailure("killed before the vertices mark")
+        return mark_done(catalog, stage, *a)
+
+    monkeypatch.setattr(lineage, "mark_done", crash_on_vertices)
+    with pytest.raises(pipeline.InjectedFailure):
+        pipeline.run(spark, tiny_transcripts, d, out, use_lsh=True)
     monkeypatch.undo()
-    time.tzset()
+    files = _vertex_files(out)
+    res = pipeline.run(spark, tiny_transcripts, d, out, use_lsh=True)
+    assert _vertex_files(out) != files
+    assert _vertex_rows(res.vertices) == want
+    files = _vertex_files(out)
+    pipeline.run(spark, tiny_transcripts, d, out, use_lsh=True)
+    assert _vertex_files(out) == files
+    assert len(vertices_lineage()) == 1
 
 
 def test_lineage_after_one_turn_append(

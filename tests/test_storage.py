@@ -300,3 +300,106 @@ def test_replace_by_scope_sequential_model(spark, tmp_path):
             for r in cat.read("t").collect()
         }
         assert got == model, f"diverged at step {step}"
+
+
+def _lineage_rows(spark, when):
+    """Lineage rows of two stages as pipeline.run writes them (updated_ts
+    an aware UTC instant, one NULL)."""
+    from grepai_spark.dimcache import local_df
+    from grepai_spark.schemas import LINEAGE
+
+    rows = [
+        (stage, b, f"{stage}:{b}", "done", b + 1, 2 * b, when)
+        for stage in ("edges", "vectors")
+        for b in range(3)
+    ]
+    rows[-1] = (*rows[-1][:-1], None)
+    return local_df(spark, rows, LINEAGE)
+
+
+def _by_key(rows):
+    return sorted(rows, key=lambda r: (r["stage"], r["bucket"]))
+
+
+def test_read_rows_equals_collect_of_both_writers(
+    spark, tmp_path, count_jobs, local_tz_not_utc
+):
+    """read_rows returns a table's rows as collect() does, field by field
+    and in the same column order, with no Spark job: over a lineage table
+    written by Spark (the stage-partitioned merge), and after one stage
+    partition is replaced by an Arrow write_partition, whose returned rows
+    are the ones a read then gives. The driver's local zone is off UTC, so
+    a timestamp taken as naive anywhere would shift."""
+    import datetime
+
+    from grepai_spark.schemas import LINEAGE
+
+    cat = Catalog(spark, str(tmp_path / "lin"))
+    utc = datetime.timezone.utc
+    t0 = datetime.datetime(2024, 3, 10, 6, 30, 0, 123456, tzinfo=utc)
+    cat.merge_by_key(
+        "lineage", _lineage_rows(spark, t0), ["stage"], partition_by=["stage"]
+    )
+
+    def same_as_collect():
+        got, n = count_jobs(lambda: cat.read_rows("lineage", LINEAGE))
+        want = cat.read("lineage", LINEAGE).collect()
+        assert n == 0
+        assert _by_key(got) == _by_key(want)
+        assert [r.asDict() for r in _by_key(got)] == [
+            r.asDict() for r in _by_key(want)
+        ]
+        return got
+
+    spark_rows = same_as_collect()
+    assert {r["updated_ts"] for r in spark_rows} == {
+        None, t0.astimezone().replace(tzinfo=None)
+    }
+    t1 = t0 + datetime.timedelta(days=1)
+    new = [("vectors", 7, "h", "done", 1, 1, t1)]
+    written = cat.write_partition("lineage", LINEAGE, "stage", "vectors", new)
+    got = same_as_collect()
+    assert written == [r for r in got if r["stage"] == "vectors"]
+    assert [r["updated_ts"] for r in written] == [
+        t1.astimezone().replace(tzinfo=None)
+    ]
+    # the partition column lives only in the directory name, as Spark has it
+    import pyarrow.parquet as pq
+
+    vdir = os.path.join(cat.path("lineage"), "stage=vectors")
+    (f,) = [f for f in os.listdir(vdir) if not f.startswith((".", "_"))]
+    assert "stage" not in pq.read_schema(os.path.join(vdir, f)).names
+    assert cat.read_rows("missing", LINEAGE) == []
+
+
+def test_latest_metrics_over_spark_and_arrow_files(
+    spark, tmp_path, count_jobs
+):
+    """The metrics run log can hold files Spark appended and files
+    append_rows wrote on the driver (no job); latest_metrics takes the
+    newest run_ts per metric across both."""
+    import datetime
+
+    from grepai_spark.pipeline import latest_metrics
+    from grepai_spark.schemas import METRICS
+
+    utc = datetime.timezone.utc
+    t0, t1, t2 = (
+        datetime.datetime(2024, 1, d, 12, tzinfo=utc) for d in (1, 2, 3)
+    )
+    cat = Catalog(spark, str(tmp_path / "m"))
+    cat.append(
+        "metrics",
+        spark.createDataFrame([("a", 1, t0), ("b", 7, t2)], METRICS),
+    )
+    _, n = count_jobs(
+        lambda: cat.append_rows(
+            "metrics", METRICS, [("a", 2, t1), ("b", 8, t1), ("c", 3, t1)]
+        )
+    )
+    assert n == 0
+    got = {r["metric"]: r["value"] for r in latest_metrics(cat).collect()}
+    assert got == {"a": 2, "b": 7, "c": 3}
+    assert sorted(
+        (r["metric"], r["value"]) for r in cat.read_rows("metrics", METRICS)
+    ) == [("a", 1), ("a", 2), ("b", 7), ("b", 8), ("c", 3)]

@@ -138,3 +138,64 @@ def test_recover_keeps_a_live_writers_staging_dir(tmp_path):
     _recover_dir(parent)
     assert sorted(os.listdir(parent)) == [os.path.basename(live)]
     assert _read_tag(parent, os.path.basename(live)) == "IN FLIGHT"
+
+
+_KILLED_WRITE = """
+import os, sys
+sys.path.insert(0, {repo!r})
+from grepai_spark import storage
+from grepai_spark.schemas import LINEAGE
+
+real, renames = os.rename, [0]
+
+def rename(src, dst):
+    if renames[0] >= {allow}:
+        os._exit(3)  # killed: no cleanup, no exception handlers
+    renames[0] += 1
+    real(src, dst)
+
+storage.os.rename = rename
+storage.Catalog(None, {root!r}).write_partition(
+    "lineage", LINEAGE, "stage", "edges",
+    [("edges", 0, "NEW", "done", 1, 1, None)],
+)
+"""
+
+
+@pytest.mark.parametrize("allow", [0, 1, 2, 3])
+def test_arrow_lineage_write_killed_then_recovered(tmp_path, allow):
+    """A driver-side lineage write (Catalog.write_partition) killed after
+    staging its file, or at any rename of the swap, leaves its stage=
+    partition fully old or fully new once a Catalog has run recovery, with
+    no debris: killed before the commit the old rows stay."""
+    import subprocess
+    import sys
+
+    from grepai_spark.schemas import LINEAGE
+    from grepai_spark.storage import Catalog
+
+    root = str(tmp_path / "cat")
+    old = [("edges", b, "OLD", "done", 1, 1, None) for b in (0, 1)]
+    Catalog(None, root).write_partition(
+        "lineage", LINEAGE, "stage", "edges", old
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = _KILLED_WRITE.format(repo=repo, allow=allow, root=root)
+    done = subprocess.run([sys.executable, "-c", code], check=False)
+    assert done.returncode == (0 if allow == 3 else 3)
+
+    cat = Catalog(None, root)  # startup recovery
+    got = sorted(
+        (r["bucket"], r["content_hash"])
+        for r in cat.read_rows("lineage", LINEAGE)
+    )
+    # 3 renames: stage beside, displace the live dir, commit; once the live
+    # dir is displaced, recovery finishes the commit forward
+    assert got == ([(0, "NEW")] if allow >= 2 else [(0, "OLD"), (1, "OLD")])
+    debris = [
+        e
+        for d in (root, cat.path("lineage"))
+        for e in os.listdir(d)
+        if "__tmp__" in e or "__new__" in e or "__old__" in e
+    ]
+    assert debris == []

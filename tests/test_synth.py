@@ -46,3 +46,22 @@ def test_text_byte_equality_invariant(spark, sf_transcripts):
         .collect()
     )
     assert [r["text"] for r in a] == [r["text"] for r in b]
+
+
+def test_events_read_with_declared_schema(spark, count_jobs):
+    """load_transcripts reads events.parquet with the declared EVENTS
+    schema: it equals what parquet inference returns, the transcripts rows
+    are the inferred read's, and building the DataFrame runs no job (an
+    inferred read runs one to take the schema from a footer)."""
+    from grepai_spark.schemas import EVENTS
+    from grepai_spark.synth import load_transcripts, transcripts_sql
+
+    events = f"{SF_DIR}/events.parquet"
+    assert EVENTS == spark.read.parquet(events).schema
+    t, n = count_jobs(lambda: load_transcripts(spark, SF_DIR))
+    assert n == 0
+    got = sorted(map(tuple, t.collect()), key=lambda r: r[:2])
+    spark.read.parquet(events).createOrReplaceTempView("gs_events_inferred")
+    want = spark.sql(transcripts_sql("gs_events_inferred")).collect()
+    assert got == sorted(map(tuple, want), key=lambda r: r[:2])
+    assert t.schema == spark.sql(transcripts_sql("gs_events_inferred")).schema
