@@ -423,22 +423,6 @@ def _q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.corpus_clean(_docs(spark, sf_dir))
 
 
-def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.lang_id(_docs(spark, sf_dir))
-
-
-def _q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.text_quality(_docs(spark, sf_dir))
-
-
-def _q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.token_counts(_docs(spark, sf_dir))
-
-
-def _q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.doc_fingerprint(_docs(spark, sf_dir))
-
-
 def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused text-analysis projection — lang-ID + quality + token counts +
     fingerprint in ONE zero-shuffle pass over documents (the four operators

@@ -61,12 +61,6 @@ _ROWS: "WeakKeyDictionary[DataFrame, list]" = WeakKeyDictionary()
 _LARGER: "WeakKeyDictionary[DataFrame, int]" = WeakKeyDictionary()
 
 
-def attached_rows(df: DataFrame) -> list | None:
-    """Rows previously attached/collected for this handle, else None —
-    never triggers a job."""
-    return _ROWS.get(df)
-
-
 def cached_rows(df: DataFrame) -> list:
     """Collect (once per handle) and memoize the full row list."""
     rows = _ROWS.get(df)

@@ -15,7 +15,7 @@ partition overwritten idempotently. This makes the whole pipeline resumable
 mid-run: killing between stages loses at most uncommitted buckets.
 
 The gate is decided from rows, on the driver: the run collects its
-``n_buckets`` hash rows (one aggregate), the lineage table is read once per
+``N_BUCKETS`` hash rows (one aggregate; an empty bucket hashes as ""), the lineage table is read once per
 Catalog handle, and :func:`pending_buckets` compares the two in Python — no
 join job for a decision over a few dozen rows. The table is stages x buckets
 rows, so it never goes through Spark: it is read with pyarrow
@@ -26,8 +26,12 @@ parquet footers. Neither runs a Spark job, no stage is re-derived to count
 it, and :func:`stage_rows_out` needs no read. Spark reads the table back
 with the declared ``LINEAGE`` schema.
 
-A gate needs no bucketing: ``pipeline.run`` gates its dictionary-scale
-vertices table on one row (bucket 0) whose content hash is the dictionary's
+The rule every gate keeps (``pipeline._stage``, the one gate of
+``pipeline.run``): a stage's content hash covers EVERY run input its rows
+are a function of, and a stage whose output table is missing is entirely
+pending, since no lineage row can vouch for data that is not there. The
+edges stage appends the dictionary signature to each bucket's hash; the
+dictionary-scale vertices table is one row (bucket 0) whose hash is that
 signature.
 """
 
@@ -43,23 +47,29 @@ from grepai_spark.schemas import LINEAGE
 from grepai_spark.storage import Catalog
 
 LINEAGE_TABLE = "lineage"
+# the one bucket count: the batch stages, their lineage and the stream sinks
+N_BUCKETS = 16
 
 
-def with_bucket(df: DataFrame, n_buckets: int, key: str = "conv_id") -> DataFrame:
-    """Deterministic bucket assignment. xxhash64 is seed-stable across runs and
-    cluster sizes, so lineage survives re-runs at different parallelism.
+def with_bucket(df: DataFrame) -> DataFrame:
+    """Deterministic bucket of each row's ``conv_id`` among
+    :data:`N_BUCKETS`. xxhash64 is seed-stable across runs and cluster
+    sizes, so lineage survives re-runs at different parallelism.
 
     This doubles as the skew treatment: a mega-conversation lands in one
     bucket, but buckets only gate lineage — within a run, Spark's own
     partitioning plus AQE skew-split spread the heavy bucket across tasks.
     """
     return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(N_BUCKETS)).cast("int")
     )
 
 
-def bucket_content_hashes(transcripts_b: DataFrame) -> DataFrame:
-    """(bucket, content_hash, rows_in): order-insensitive per-bucket input hash.
+def bucket_content_hashes(transcripts_b: DataFrame) -> list[dict]:
+    """(bucket, content_hash, rows_in) of every one of the N_BUCKETS
+    buckets: an order-insensitive hash of the bucket's input rows, from one
+    aggregate, collected. A bucket with no rows hashes as "", so one whose
+    rows all left is pending like any changed bucket, and is emptied.
 
     sum(xxhash64(row)) is commutative -> identical regardless of partitioning
     or shuffle order; 64-bit wraparound is fine for a change detector.
@@ -67,7 +77,7 @@ def bucket_content_hashes(transcripts_b: DataFrame) -> DataFrame:
     h = F.xxhash64("conv_id", "turn_idx", "role", "text", "tool")
     # mod keeps the ANSI-mode sum overflow-free up to ~2^33 rows per bucket;
     # combine two residues so the change-detector keeps ~60 bits of entropy.
-    return transcripts_b.groupBy("bucket").agg(
+    got = transcripts_b.groupBy("bucket").agg(
         F.concat_ws(
             ":",
             F.sum(h % F.lit(1_000_000_007)),
@@ -75,6 +85,9 @@ def bucket_content_hashes(transcripts_b: DataFrame) -> DataFrame:
         ).alias("content_hash"),
         F.count("*").alias("rows_in"),
     )
+    held = {r["bucket"]: r.asDict() for r in got.collect()}
+    empty = {"content_hash": "", "rows_in": 0}
+    return [held.get(b, {"bucket": b, **empty}) for b in range(N_BUCKETS)]
 
 
 # Catalog handle -> its lineage rows by (stage, bucket): read once (the
@@ -95,8 +108,9 @@ def _held(catalog: Catalog) -> dict[tuple[str, int], Row]:
 
 
 def pending_buckets(catalog: Catalog, stage: str, hash_rows: list) -> list:
-    """The rows of ``hash_rows`` (:func:`bucket_content_hashes`, collected)
-    whose (bucket, content_hash) has no done lineage row for ``stage``."""
+    """The ``hash_rows`` (bucket, content_hash, rows_in: e.g.
+    :func:`bucket_content_hashes`) whose (bucket, content_hash) has no done
+    lineage row for ``stage``."""
     held = _held(catalog)
 
     def done(r) -> bool:

@@ -639,11 +639,3 @@ def media_meta(docs: DataFrame) -> DataFrame:
         F.col("media_meta.format").alias("format"),
         F.col("media_meta.n_bytes").cast("long").alias("n_bytes"),
     )
-
-
-def media_meta_oracle() -> str:
-    return (
-        "SELECT doc_id, 'text/plain' AS format,"
-        " CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes"
-        " FROM documents"
-    )

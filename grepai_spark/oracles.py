@@ -20,10 +20,6 @@ from grepai_spark.synth import alias_dict_values_sql, transcripts_sql
 TRANSCRIPTS_REL = transcripts_sql("events", "duckdb")
 
 
-def transcripts_oracle() -> str:
-    return TRANSCRIPTS_REL
-
-
 def call_triples_oracle() -> str:
     return f"""
 SELECT role AS subj, 'calls' AS pred, tool AS obj, conv_id, turn_idx,

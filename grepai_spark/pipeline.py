@@ -6,14 +6,20 @@ analog of the reference's full index build
 (Indexer.IndexAll -> trace extract -> RPG BuildFull,
 /root/reference/cli/watch.go:750-860, indexer/indexer.go:94).
 
-There is ONE edge derivation. LINK + CANON are dictionary-scale and collapse
-to an alias -> (pred, entity_id) map on the driver (:func:`alias_entity_map`,
-memoized per dictionary version); EXTRACT + MATERIALIZE are then one narrow
+There is ONE dictionary product and ONE edge derivation. LINK + CANON are
+dictionary-scale and run once per dictionary version (:func:`_dictionary`,
+memoized on its signature) into driver rows: the canonical map and an
+alias -> (pred, entity_id) map. EXTRACT + MATERIALIZE are then one narrow
 map over transcripts (:func:`kg_edges_from_map`). The flagship query
-(:func:`kg_edges_df`), the streaming sink and the resumable :func:`run` all
-use it; :func:`run` applies it to the pending buckets only and merges the
-result into a bucket-partitioned table, so re-running overwrites exactly the
-recomputed buckets (Iceberg: overwritePartitions).
+(:func:`kg_edges_df`), :func:`kg_vertices_df`, the streaming sink and the
+resumable :func:`run` all read the same product.
+
+:func:`run` has ONE gate (:func:`_stage`): a stage's output partitions are
+rewritten iff lineage does not vouch for them under a content hash of every
+run input they depend on, or the stage's table is missing — grepai's
+content-hash skip and NeedsReindex (indexer/indexer.go:161-164, :726-742)
+applied to every input of a stage. Rewrites swap exactly the recomputed
+partitions (Iceberg: overwritePartitions).
 """
 
 from __future__ import annotations
@@ -21,7 +27,7 @@ from __future__ import annotations
 import datetime
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -53,33 +59,30 @@ def kg_edges_df(
     corpus-scale plan is then ONE narrow map over transcripts: call edges
     come from an inline array filter on the `tool` column, mention/does
     edges from the UDF (per-turn distinct inside the batch), one explode —
-    no shuffle anywhere and a single scan. The only exchange the previous
-    shape had (dropDuplicates over all mention triples) was a within-turn
-    dedup in disguise; fusing it into the UDF removes it entirely.
-    :func:`run` writes the same map over its pending buckets, so the
-    resumable path and this query emit identical rows.
+    no shuffle anywhere and a single scan. :func:`run` writes the same map
+    over its pending buckets, so the two emit identical rows.
     """
     return kg_edges_from_map(
         transcripts, alias_entity_map(alias_dict, use_lsh)
     )
 
 
-# alias_entity_map results keyed by dictionary content signature: the map
-# is a pure function of the dictionary, and its contract is "computed once
-# per dictionary version" — without the memo every derivation in a serving
-# process (each query of a session, each bench pass) re-runs linking + CC,
-# a fixed multi-job driver-side cost that at corpus scale is pure serial
-# fraction. The reference equivalently LOADS its persisted symbol maps
-# instead of re-indexing (rpg/persistence.go). Values are plain dicts (no
+# _dictionary's products keyed by dictionary signature: without the memo
+# every derivation in a serving process (each query, each run) re-runs
+# linking + CC, a fixed multi-job driver cost. The reference likewise LOADS
+# its persisted symbol maps (rpg/persistence.go). Values hold plain rows (no
 # Spark handles), so entries stay valid across sessions in one process.
-_AMAP_MEMO: dict[tuple[int, str], dict[str, tuple[str, str]]] = {}
+_AMAP_MEMO: dict[tuple[int, str], "_Dictionary"] = {}
+
+# the canonical map's rows: canonical_id -> entity_id (cc.canonical_map)
+_CMAP = "canonical_id string, entity_id string"
 
 
 def _dict_signature(rows: list, use_lsh: bool) -> str:
     """sha256 over the dictionary rows (alias, canonical_id, kind; order-
-    insensitive) and the linking variant: everything the entity map and the
-    vertices table are a function of. Keys the entity-map memo and gates
-    the vertices overwrite in :func:`run`."""
+    insensitive) and the linking variant: everything the dictionary
+    product is a function of. Keys the memo and the edges and vertices
+    gates of :func:`run`, and is recorded beside the stream's sink."""
     import hashlib
 
     h = hashlib.sha256()
@@ -90,61 +93,56 @@ def _dict_signature(rows: list, use_lsh: bool) -> str:
     return h.hexdigest()
 
 
-def _canonical_map(alias_dict: DataFrame, use_lsh: bool) -> DataFrame:
-    """LINK + CANON: similarity edges (blocked or LSH Jaccard) ->
-    cc.canonical_map. The one canonicalization every derivation shares.
+@dataclass(frozen=True)
+class _Dictionary:
+    """The dictionary-scale product of LINK + CANON, as driver rows."""
 
-    The dictionary is a broadcast-side dimension whose rows the entity map
-    needs anyway, so it is loaded first, in one job; link's and CC's size
-    probes then answer from those rows instead of probing it once each."""
-    cached_rows(alias_dict)
-    sim = (
-        link.alias_similarity_edges_lsh(alias_dict)
-        if use_lsh
-        else link.alias_similarity_edges(alias_dict)
-    )
-    return cc.canonical_map(alias_dict, sim)
+    signature: str
+    canonical_rows: list  # (canonical_id, entity_id), one per canonical id
+    entity_map: dict[str, tuple[str, str]]  # alias -> (pred, entity_id)
 
 
-def _entity_map(
-    alias_dict: DataFrame, cmap: DataFrame
-) -> dict[str, tuple[str, str]]:
-    """alias -> (pred, entity_id) for entity/action aliases: the dictionary
-    joined to its canonical map on the driver (both sides are
-    dictionary-scale; the result is broadcast to the edge detector anyway).
-    Job-free when the canonical map's rows are attached (dimcache)."""
-    entity = dict(cached_rows(cmap))
-    return {
-        r["alias"]: (
-            "does" if r["kind"] == "action" else "mentions",
-            entity[r["canonical_id"]],
+def _dictionary(alias_dict: DataFrame, use_lsh: bool) -> _Dictionary:
+    """LINK + CANON once per dictionary version: similarity edges (blocked
+    or LSH Jaccard) -> cc.canonical_map, held as rows, and the alias ->
+    (pred, entity_id) map of the entity/action aliases.
+
+    The dictionary is a collectable broadcast-side dimension (dimcache): it
+    is loaded first, in one job, so the signature is taken over rows in
+    hand and link's and CC's size probes answer from them. Linking and CC
+    pick their own driver/distributed regime by size; a distributed
+    canonical map is collected (dictionary-scale)."""
+    rows = cached_rows(alias_dict)
+    sig = _dict_signature(rows, use_lsh)
+    product = _AMAP_MEMO.get((len(rows), sig))
+    if product is None:
+        sim = (
+            link.alias_similarity_edges_lsh(alias_dict)
+            if use_lsh
+            else link.alias_similarity_edges(alias_dict)
         )
-        for r in cached_rows(alias_dict)
-        if r["kind"] in ("entity", "action")
-    }
+        cmap = list(map(tuple, cached_rows(cc.canonical_map(alias_dict, sim))))
+        entity = dict(cmap)
+        amap = {
+            r["alias"]: (
+                "does" if r["kind"] == "action" else "mentions",
+                entity[r["canonical_id"]],
+            )
+            for r in rows
+            if r["kind"] in ("entity", "action")
+        }
+        product = _AMAP_MEMO[(len(rows), sig)] = _Dictionary(sig, cmap, amap)
+    return product
 
 
 def alias_entity_map(
     alias_dict: DataFrame, use_lsh: bool = False
 ) -> dict[str, tuple[str, str]]:
-    """alias -> (pred, entity_id): the dictionary-scale product of linking +
-    canonicalization, computed ONCE per dictionary version (memoized on a
-    content signature across calls) and shipped to executors via
-    SparkContext.broadcast (inside make_edge_detector) — the reference's
-    in-memory symbol maps (rpg/indexer.go:527).
-
-    The dictionary is a collectable broadcast-side dimension (dimcache), so
-    the signature (:func:`_dict_signature`) is taken over the rows already
-    in hand — no Spark job. Linking and CC pick their own
-    driver/distributed regime by size.
-    """
-    rows = cached_rows(alias_dict)
-    key = (len(rows), _dict_signature(rows, use_lsh))
-    amap = _AMAP_MEMO.get(key)
-    if amap is None:
-        amap = _entity_map(alias_dict, _canonical_map(alias_dict, use_lsh))
-        _AMAP_MEMO[key] = amap
-    return amap
+    """alias -> (pred, entity_id): the entity map of :func:`_dictionary`,
+    shipped to executors via SparkContext.broadcast (inside
+    make_edge_detector) — the reference's in-memory symbol maps
+    (rpg/indexer.go:527)."""
+    return _dictionary(alias_dict, use_lsh).entity_map
 
 
 def kg_edges_from_map(
@@ -176,9 +174,8 @@ def kg_edges_from_map(
 def kg_vertices_df(
     spark: SparkSession, alias_dict: DataFrame
 ) -> DataFrame:
-    return materialize.build_vertices(
-        alias_dict, _canonical_map(alias_dict, use_lsh=False)
-    )
+    cmap = _dictionary(alias_dict, use_lsh=False).canonical_rows
+    return materialize.build_vertices(alias_dict, local_df(spark, cmap, _CMAP))
 
 
 @dataclass
@@ -188,33 +185,31 @@ class PipelineResult:
     counters: dict[str, int] = field(default_factory=dict)
 
 
-def _bucket_stage(
+def _stage(
     catalog: Catalog,
     stage: str,
     table: str,
-    tb: DataFrame,
-    hashes: list,
+    hash_rows: list,
     counters: dict[str, int],
-    derive,
+    write,
 ) -> bool:
-    """The one per-bucket resumable stage of :func:`run`: gate on lineage,
-    derive the pending buckets' rows (``derive(<their transcripts>)``, with
-    a ``bucket`` column), swap exactly those partitions of ``table`` in (one
-    that now yields no row is swapped to empty, not left holding its old
-    rows) and mark them done with the row counts the write produced.
-    Returns whether any bucket was pending."""
-    pending = lineage.pending_buckets(catalog, stage, hashes)
-    ids = [r["bucket"] for r in pending]
-    counters[f"{stage}_buckets_pending"] = len(ids)
-    if not ids:
+    """The one lineage gate of :func:`run`. ``hash_rows`` hold a (bucket,
+    content_hash, rows_in) per output partition of ``table``, hashing every
+    run input the partition depends on. Pending are the rows lineage does
+    not mark done with that hash, or all of them when ``table`` is missing.
+    ``write(<pending bucket ids>)`` rewrites exactly those partitions and
+    returns bucket -> rows written, which are then marked done (a crash in
+    between only rewrites them again). Returns whether any was pending."""
+    pending = (
+        lineage.pending_buckets(catalog, stage, hash_rows)
+        if catalog.exists(table)
+        else hash_rows
+    )
+    counters[f"{stage}_buckets_pending"] = len(pending)
+    if not pending:
         return False
-    sub = derive(tb.where(F.col("bucket").isin(ids)))
-    catalog.merge_by_key(
-        table, sub, ["bucket"], partition_by=["bucket"], ensure=ids
-    )
-    lineage.mark_done(
-        catalog, stage, pending, catalog.partition_rows(table, "bucket", ids)
-    )
+    rows_out = write([r["bucket"] for r in pending])
+    lineage.mark_done(catalog, stage, pending, rows_out)
     return True
 
 
@@ -223,27 +218,40 @@ def run(
     transcripts: DataFrame,
     alias_dict: DataFrame,
     out_dir: str,
-    n_buckets: int = 16,
     fail_after: str | None = None,
     use_lsh: bool = False,
     embed: bool = False,
 ) -> PipelineResult:
     """The resumable index build into the catalog at ``out_dir``.
 
-    Every stage is gated on lineage, so a re-run recomputes only what
-    changed: the vectors and edges stages per bucket of turns (content hash
-    of the bucket's rows, :func:`_bucket_stage`), the vertices table as a
-    whole on the dictionary signature (:func:`_dict_signature` over the
-    rows already held, plus ``use_lsh``), so an unchanged dictionary leaves
-    it untouched. Lineage and the metrics run log are written on the
-    driver, so a zero-pending resume runs only the content-hash aggregate.
-    ``fail_after`` names a stage to crash after (tests)."""
+    Every stage goes through the one lineage gate (:func:`_stage`), keyed
+    on all its run inputs: vectors per bucket of turns (``conv_id`` into
+    ``lineage.N_BUCKETS``) on the bucket's content hash, edges per bucket
+    on that hash plus the dictionary signature (:func:`_dict_signature`,
+    covering ``use_lsh``), vertices as one row on the signature. Linking +
+    CC run once per dictionary version (:func:`_dictionary`), and lineage
+    and the metrics log are written on the driver, so a zero-pending resume
+    runs only the content-hash aggregate. ``fail_after`` names a stage to
+    crash after (tests)."""
     catalog = Catalog(spark, out_dir)
     counters: dict[str, int] = {}
 
-    tb = lineage.with_bucket(transcripts, n_buckets)
-    # n_buckets rows, one aggregate: every gate below is decided from them
-    hashes = lineage.bucket_content_hashes(tb).collect()
+    tb = lineage.with_bucket(transcripts)
+    # one row per bucket, one aggregate: every gate below is decided on them
+    hashes = lineage.bucket_content_hashes(tb)
+
+    def bucket_write(table: str, derive):
+        # derive the buckets' rows (with a bucket column) from their turns
+        # and swap exactly those partitions in: one that now yields no row
+        # is swapped to empty, not left holding its old rows
+        def write(ids: list) -> dict:
+            sub = derive(tb.where(F.col("bucket").isin(ids)))
+            catalog.merge_by_key(
+                table, sub, ["bucket"], partition_by=["bucket"], ensure=ids
+            )
+            return catalog.partition_rows(table, "bucket", ids)
+
+        return write
 
     # ---- stage: embeddings (content-hash cached), per-bucket resumable -----
     if embed:
@@ -255,10 +263,8 @@ def run(
                 {f"embed_{k}": v for k, v in embed_counters.items()}
             )
             if fail_after == "embed_cache":
-                # crash point BETWEEN the cache merge (already committed
-                # inside embed_with_cache) and the vectors merge: the re-run
-                # must converge to the same turn_vectors table with zero
-                # re-encoding (test_pipeline locks this)
+                # between the cache merge (committed inside embed_with_cache)
+                # and the vectors merge: a re-run re-encodes nothing
                 raise InjectedFailure(
                     "killed between cache merge and vectors merge"
                 )
@@ -266,37 +272,39 @@ def run(
                 "bucket", "conv_id", "turn_idx", "content_hash", "vector"
             )
 
-        _bucket_stage(
-            catalog, "vectors", "turn_vectors", tb, hashes, counters, vectors
+        _stage(
+            catalog, "vectors", "turn_vectors", hashes, counters,
+            bucket_write("turn_vectors", vectors),
         )
     if fail_after == "embed":
         raise InjectedFailure("killed after embed stage")
 
-    # ---- stage: canonicalization (dictionary-level, cheap, global) ---------
-    # held as rows, one LocalRelation with them attached: no job in the
-    # driver regime (its map is already one), and in the distributed regime
-    # the collect the edges stage's entity map needs anyway
-    cmap = _canonical_map(alias_dict, use_lsh)
-    cmap = local_df(spark, cached_rows(cmap), cmap.schema)
-    counters["canonical_entities"] = len({r[1] for r in cached_rows(cmap)})
+    # ---- stage: canonicalization (dictionary-level, once per version) ------
+    dictionary = _dictionary(alias_dict, use_lsh)
+    sig = dictionary.signature
+    cmap_rows = dictionary.canonical_rows
+    counters["canonical_entities"] = len({e for _, e in cmap_rows})
     if fail_after == "canonicalize":
         raise InjectedFailure("killed after canonicalize stage")
 
     # ---- stage: edges (extract + link + materialize, fused), per bucket ----
     def edges(sub: DataFrame) -> DataFrame:
-        e = lineage.with_bucket(
-            kg_edges_from_map(sub, _entity_map(alias_dict, cmap)), n_buckets
-        )
+        e = lineage.with_bucket(kg_edges_from_map(sub, dictionary.entity_map))
         # written with the declared types, so reads can declare them
         return e.select(
             "bucket", *(F.col(f.name).cast(f.dataType) for f in EDGES)
         )
 
-    if _bucket_stage(catalog, "edges", "edges", tb, hashes, counters, edges):
-        # maintain the graph-query plane's stored adjacency + degree census
-        # whenever the edge table changed (stores.py) — the indexer writes
-        # the artifacts the query plane reads; rebuilding them per query
-        # was the round-4 scale anti-pattern
+    edge_hashes = [
+        {**r, "content_hash": f"{r['content_hash']}:{sig}"}
+        for r in hashes
+    ]
+    if _stage(
+        catalog, "edges", "edges", edge_hashes, counters,
+        bucket_write("edges", edges),
+    ):
+        # the graph-query plane's stored adjacency + degree census follow
+        # the edge table (stores.py): the indexer writes what queries read
         from grepai_spark import stores
 
         stores.build_graph_artifacts(
@@ -305,40 +313,30 @@ def run(
     if fail_after == "edges":
         raise InjectedFailure("killed after edges stage")
 
-    # ---- stage: vertices (global, dictionary-scale), gated ------------------
-    # one lineage row whose content hash is the dictionary signature: the
-    # table is rewritten only when the dictionary (or the linking variant)
-    # changed, or the table is missing. A crash between the overwrite and
-    # the mark only rewrites it again next run, which is idempotent.
-    dict_rows = cached_rows(alias_dict)
-    sig = Row(
-        bucket=0,
-        content_hash=_dict_signature(dict_rows, use_lsh),
-        rows_in=len(dict_rows),
-    )
-    pending = lineage.pending_buckets(catalog, "vertices", [sig])
-    if pending or not catalog.exists("vertices"):
-        vertices = materialize.build_vertices(alias_dict, cmap)
-        catalog.overwrite("vertices", vertices)
-        lineage.mark_done(
-            catalog, "vertices", [sig], {0: counters["canonical_entities"]}
-        )
+    # ---- stage: vertices (global, dictionary-scale), one gate row ----------
+    def vertices(ids: list) -> dict:
+        cmap = local_df(spark, cmap_rows, _CMAP)
+        built = materialize.build_vertices(alias_dict, cmap)
+        catalog.overwrite("vertices", built)
+        # build_vertices emits one row per canonical entity
+        return {0: counters["canonical_entities"]}
+
+    n_dict = len(cached_rows(alias_dict))
+    one = {"bucket": 0, "content_hash": sig, "rows_in": n_dict}
+    _stage(catalog, "vertices", "vertices", [one], counters, vertices)
 
     edges_out = catalog.read("edges", _EDGES_B).drop("bucket")
     vertices_out = catalog.read("vertices", VERTICES)
     # counters from rows already held, no count() job: every edges bucket
     # partition is written and then marked done with its own row count, so
-    # the lineage rows_out sum is the table's row count; build_vertices
-    # emits one row per canonical entity
+    # the lineage rows_out sum is the table's row count
     counters["edges"] = lineage.stage_rows_out(catalog, "edges")
     counters["vertices"] = counters["canonical_entities"]
 
     # ---- metrics sink (S8 analog: stats NDJSON -> a small metrics table) ---
-    # append-only run log (the reference's stats recorder appends NDJSON
-    # from the process that holds the stats, stats/recorder.go): each run
-    # adds its counter snapshot as one file written on the driver — O(new
-    # rows), no Spark job, never a table rewrite; readers take the latest
-    # run_ts per metric
+    # append-only run log (the reference's stats recorder, stats/recorder.go):
+    # one file of this run's counters written on the driver, no Spark job;
+    # readers take the latest run_ts per metric
     run_ts = datetime.datetime.now(datetime.timezone.utc)
     catalog.append_rows(
         "metrics",

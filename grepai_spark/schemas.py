@@ -47,19 +47,6 @@ TRANSCRIPTS = StructType(
     ]
 )
 
-# Stage-1 output: one row per detected in-text mention
-# (analog of trace.Reference, /root/reference/trace/trace.go:39-49).
-MENTIONS = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()),
-        StructField("mention", StringType()),
-        StructField("pos", IntegerType()),
-        StructField("kind", StringType()),  # call | read | write | mention
-    ]
-)
-
 # Broadcast alias dictionary (entity-linking side input).
 ALIAS_DICT = StructType(
     [

@@ -10,8 +10,10 @@ full-table replace writes beside and renames over the live dir; partition
 merges write the dirty partitions beside and swap ONLY those partition
 subdirectories — a crash mid-job leaves every live partition either fully old
 or fully new, never half-written (the overwritePartitions commit contract).
-Every merge is partition-scoped, in one of two regimes (merge_by_key), and
-one into an unpartitioned table raises rather than rewrite the table. A
+Every merge is partition-scoped and has one regime: merge_by_key swaps
+whole partitions (its keys are the one partition column), replace_by_scope
+replaces rows by scope within the partitions the scope names. A merge into
+an unpartitioned table raises rather than rewrite the table. A
 writer reads what it wrote from the parquet footers (partition_rows).
 
 Driver-scale tables -- ``lineage`` (stages x buckets rows) and the
@@ -341,29 +343,17 @@ class Catalog:
         partition_by: list[str] | None = None,
         ensure: list | None = None,
     ) -> None:
-        """Idempotent upsert (Iceberg: MERGE INTO ... WHEN MATCHED UPDATE).
-
-        Two regimes, both O(dirty partitions), never O(table):
-
-        * `partition_by == keys` (the pipeline's per-bucket stages): ONLY
-          the partitions present in `updates` (and those named by `ensure`,
-          see _overwrite_partitions) are swapped in; untouched partition
-          files are never rewritten.
-        * `partition_by` a strict subset of `keys` (streaming row-level
-          merges into a bucketed table): the dirty partitions are READ back,
-          anti-joined against the update keys, unioned with the updates and
-          swapped in; a micro-batch touching 2 of 16 buckets rewrites 2.
-
-        Any other call raises ValueError (see _partition_col).
-
-        Last-write-wins per key is safe for our tables: vectors are
-        deterministic functions of the key.
-        """
+        """Idempotent partition upsert (Iceberg: overwritePartitions):
+        `keys` is the one partition column, and ONLY the partitions present
+        in `updates` (and those named by `ensure`, see
+        _overwrite_partitions) are swapped in; untouched partition files
+        are never rewritten. O(dirty partitions), never O(table). A
+        row-level merge goes through replace_by_scope; any other call
+        raises ValueError (see _partition_col)."""
         col = self._partition_col(table, partition_by, keys)
-        if set(keys) == {col}:
-            self._overwrite_partitions(table, updates, col, ensure)
-            return
-        self._replace_scoped(table, updates, updates.select(*keys), keys, col)
+        if keys != [col]:
+            raise ValueError(f"{table}: {keys=} are not the partition {col}")
+        self._overwrite_partitions(table, updates, col, ensure)
 
     def replace_by_scope(
         self,
@@ -377,8 +367,8 @@ class Catalog:
         followed by an insert): every existing row whose `scope_keys` match a
         row of `scope` is deleted, then ALL of `updates` is inserted.
 
-        The difference from merge_by_key matters exactly when a scope unit is
-        REDELIVERED WITH DIFFERENT CONTENT: merge_by_key only overwrites keys
+        The difference from a key upsert matters exactly when a scope unit
+        is REDELIVERED WITH DIFFERENT CONTENT: an upsert only overwrites keys
         the new batch still produces, so derived rows the new content no
         longer yields (an edge whose tool call was edited away) would survive
         as stale truth. Scope replacement is the reference's re-index-on-
@@ -388,26 +378,18 @@ class Catalog:
         arriving turns), independent of how many derived rows each produced —
         including zero.
 
-        Cost and partitioning rules are merge_by_key's row-level regime's:
-        only the partitions `scope` names are read back and swapped.
+        A row-level upsert is the case `scope` = `updates` (the streaming
+        stats sink): every key the batch carries gets its new row.
+
+        `partition_by` is one column among `scope_keys` (see
+        _partition_col), and the cost is O(dirty partitions), never
+        O(table): only the partitions `scope` names are read back,
+        anti-joined against the scope, unioned with the updates and swapped
+        in; a micro-batch touching 2 of 16 buckets rewrites 2. The live
+        table is read with `updates.schema`, the shape every caller writes
+        it from, so no read runs a parquet schema-inference job.
         """
         col = self._partition_col(table, partition_by, scope_keys)
-        self._replace_scoped(table, updates, scope, scope_keys, col)
-
-    def _replace_scoped(
-        self,
-        table: str,
-        updates: DataFrame,
-        scope: DataFrame,
-        scope_keys: list[str],
-        col: str,
-    ) -> None:
-        """The body both public merges share (each public name is wrapped by
-        the benchmark's spans, so neither calls the other): delete the rows
-        matching `scope` on `scope_keys`, insert `updates`, swapping only
-        the `col` partitions `scope` names. The live table is read with
-        `updates.schema`, the shape every caller writes it from, so no read
-        runs a parquet schema-inference job."""
         if not self.exists(table):
             self.overwrite(table, updates, partition_by=[col])
             return

@@ -30,16 +30,27 @@ the source forever, exactly like the reference's fsnotify loop
 (cli/watch.go:1140, watcher/watcher.go:44-77); callers get the live
 StreamingQuery back and own its lifecycle.
 
-Every sink table is BUCKETED on conv_id (the same xxhash64 bucketing the
-batch pipeline's lineage uses), and the per-micro-batch MERGE includes the
-bucket in its key set — Catalog.merge_by_key then reads back and rewrites
-ONLY the buckets the batch touched (O(dirty buckets) per trigger), instead
-of anti-joining and rewriting the whole table. At stream volume the
+Every sink table is BUCKETED on conv_id (lineage.with_bucket, the batch
+pipeline's N_BUCKETS buckets), and the per-micro-batch MERGE includes the
+bucket in its scope keys — Catalog.replace_by_scope then reads back and
+rewrites ONLY the buckets the batch touched (O(dirty buckets) per trigger),
+instead of anti-joining and rewriting the whole table. At stream volume the
 O(table)-per-trigger row-level merge is the difference between a pipeline
 that keeps up and one that falls progressively behind.
+
+The edge sink is a function of the alias dictionary as well as the turns,
+so it records the dictionary signature (pipeline._dict_signature) in a
+``kg_edges_stream.dictionary_signature`` file beside its table dir: outside
+the table, so no reader of it sees the file and the first batch still
+creates the table with a plain write. A start over a different dictionary
+raises before any batch runs, rather than mix edges derived with two
+dictionaries in one table; a sink with no record (a legacy one, or one
+written by the batch query) is adopted.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,8 +58,6 @@ from pyspark.sql import functions as F
 from grepai_spark import lineage
 from grepai_spark.schemas import TRANSCRIPTS
 from grepai_spark.storage import Catalog
-
-STREAM_BUCKETS = 16
 
 # modification stamps are second-granular in the fixtures; ties broken on
 # content so the winner is deterministic however files land in batches
@@ -84,12 +93,7 @@ def _start(stream_writer, checkpoint_dir: str, trigger: dict | None):
     return q
 
 
-def _migrate_bucketed(
-    catalog: Catalog,
-    table: str,
-    n_buckets: int = STREAM_BUCKETS,
-    key: str = "conv_id",
-) -> None:
+def _migrate_bucketed(catalog: Catalog, table: str) -> None:
     """One-time layout migration (ADVICE r3): a sink table written by a
     pre-bucketed version has no `bucket` column, so a resumed stream's
     bucket-keyed MERGE would fail its anti-join on the missing key. The
@@ -104,12 +108,36 @@ def _migrate_bucketed(
         return
     catalog.overwrite(
         table,
-        lineage.with_bucket(catalog.read(table), n_buckets, key=key),
+        lineage.with_bucket(catalog.read(table)),
         partition_by=["bucket"],
     )
 
 
 KG_EDGES_TABLE = "kg_edges_stream"
+_SIGNATURE = ".dictionary_signature"
+
+
+def _adopt_dictionary(catalog: Catalog, table: str, signature: str) -> None:
+    """Check the dictionary signature recorded for ``table`` against
+    ``signature``: a different one raises ValueError. A missing sink, or
+    one with no record (legacy, or written by the batch query), gets
+    ``signature`` recorded: written under a hidden name, renamed into
+    place."""
+    path = catalog.path(table + _SIGNATURE)
+    if catalog.exists(table) and os.path.exists(path):
+        with open(path, encoding="ascii") as fh:
+            held = fh.read()
+        if held != signature:
+            raise ValueError(
+                f"{path}: the sink holds edges derived with dictionary "
+                f"{held[:12]}, not {signature[:12]}; rebuild it or use a "
+                "new out_dir"
+            )
+        return
+    hidden = catalog.path(f".{table}{_SIGNATURE}")
+    with open(hidden, "w", encoding="ascii") as fh:
+        fh.write(signature)
+    os.rename(hidden, path)
 
 
 def incremental_kg_edges(
@@ -122,8 +150,9 @@ def incremental_kg_edges(
 ):
     """Full fused KG derivation (calls + canonicalized mention/does edges)
     as a streaming job: the alias -> (pred, entity_id) map is computed ONCE
-    (the dictionary does not change per micro-batch), then every batch runs
-    the same zero-shuffle narrow map as the batch flagship and replaces the
+    (the dictionary does not change per micro-batch; a start over a sink
+    recorded with another dictionary raises ValueError), then every batch
+    runs the same zero-shuffle narrow map as the batch flagship and replaces the
     edge set of every turn it carries (replace_by_scope) — idempotent under
     re-delivery AND convergent under redelivered MODIFICATIONS, exactly like
     the reference's watch daemon re-indexing a changed file (W1/W2 analog,
@@ -135,16 +164,14 @@ def incremental_kg_edges(
 
     catalog = Catalog(spark, out_dir)
     _migrate_bucketed(catalog, KG_EDGES_TABLE)
-    amap = pipeline.alias_entity_map(alias_dict)
+    dictionary = pipeline._dictionary(alias_dict, use_lsh=False)
+    _adopt_dictionary(catalog, KG_EDGES_TABLE, dictionary.signature)
+    amap = dictionary.entity_map
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         turns = _latest_version(batch)
-        scope = lineage.with_bucket(
-            turns.select("conv_id", "turn_idx"), STREAM_BUCKETS
-        )
-        edges = lineage.with_bucket(
-            pipeline.kg_edges_from_map(turns, amap), STREAM_BUCKETS
-        )
+        scope = lineage.with_bucket(turns.select("conv_id", "turn_idx"))
+        edges = lineage.with_bucket(pipeline.kg_edges_from_map(turns, amap))
         catalog.replace_by_scope(
             KG_EDGES_TABLE,
             edges,
@@ -226,10 +253,10 @@ def conversation_stats_stream(
     )
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        catalog.merge_by_key(
-            CONV_STATS_TABLE,
-            lineage.with_bucket(batch, STREAM_BUCKETS),
-            ["bucket", "conv_id"],
+        # row-level upsert: the batch's rows replace their own keys
+        b = lineage.with_bucket(batch)
+        catalog.replace_by_scope(
+            CONV_STATS_TABLE, b, b, ["bucket", "conv_id"],
             partition_by=["bucket"],
         )
 

@@ -243,34 +243,10 @@ def doc_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # DuckDB oracles
 # ---------------------------------------------------------------------------
 
-def lang_id_oracle() -> str:
-    scores = lang_scores_sql("text", "duckdb")
-    cols = ", ".join(
-        f"CAST({scores[lang]} AS INT) AS hits_{lang}" for lang in LANG_ORDER
-    )
-    return (
-        f"SELECT doc_id, {lang_pred_sql('text', 'duckdb')} AS pred_lang,"
-        f" {cols} FROM documents"
-    )
-
-
 def text_quality_oracle() -> str:
     q = quality_sql("text", "duckdb")
     cols = ", ".join(f"{expr} AS {name}" for name, expr in q.items())
     return (
         f"SELECT doc_id, {cols},"
         f" {quality_score_sql('text', 'duckdb')} AS quality FROM documents"
-    )
-
-
-def token_counts_oracle() -> str:
-    t = token_counts_sql("text", "duckdb")
-    cols = ", ".join(f"{expr} AS {name}" for name, expr in t.items())
-    return f"SELECT doc_id, {cols} FROM documents"
-
-
-def doc_fingerprint_oracle() -> str:
-    return (
-        f"SELECT doc_id, {fingerprint_sql('text', 'duckdb')} AS fingerprint"
-        f" FROM documents"
     )

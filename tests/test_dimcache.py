@@ -34,7 +34,7 @@ def test_collect_if_small_probes_once_per_handle(spark, count_jobs):
     assert count_jobs(lambda: dimcache.collect_if_small(big, 5)) == (
         None, 0
     )
-    assert dimcache.attached_rows(big) is None  # a large handle keeps no rows
+    assert big not in dimcache._ROWS  # a large handle keeps no rows
     # a larger cutoff is a new question: it probes again
     rows, n = count_jobs(lambda: dimcache.collect_if_small(big, 50))
     assert rows == big.collect() and n >= 1

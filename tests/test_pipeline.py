@@ -103,8 +103,9 @@ def test_pipeline_rerun_noop(spark, tiny_transcripts, tmp_path):
 def test_pipeline_rerun_over_changed_input(spark, tiny_transcripts, tmp_path):
     """A rerun recomputes only the buckets whose input changed and leaves
     the tables equal to a clean run over the new input: one appended turn
-    re-derives its conversation's bucket; a bucket edited to yield no edge
-    at all is emptied, not left holding its old rows."""
+    re-derives its conversation's bucket; a bucket whose only conversation
+    is removed, or is edited to yield no edge at all, is emptied, not left
+    holding its old rows."""
     from grepai_spark.schemas import TRANSCRIPTS
 
     out = str(tmp_path / "out")
@@ -115,8 +116,10 @@ def test_pipeline_rerun_over_changed_input(spark, tiny_transcripts, tmp_path):
         (c, i, role, "nothing to see" if c == "conv-d" else text, tool, t)
         for c, i, role, text, tool, t in map(tuple, appended.collect())
     ]
+    # conv-d is the only conversation in its bucket
+    dropped = appended.where("conv_id <> 'conv-d'")
     for n, step in enumerate(
-        [appended, spark.createDataFrame(silent, schema=TRANSCRIPTS)]
+        [appended, dropped, spark.createDataFrame(silent, schema=TRANSCRIPTS)]
     ):
         res = pipeline.run(spark, step, d, out)
         assert res.counters["edges_buckets_pending"] == 1
@@ -142,6 +145,39 @@ def test_zero_pending_resume_job_budget(
     res, n = count_jobs(lambda: pipeline.run(spark, tiny_transcripts, d, out))
     assert res.counters["edges_buckets_pending"] == 0
     assert n <= 2, n
+
+
+def test_zero_pending_resume_runs_no_linking(
+    spark, tiny_transcripts, tmp_path, monkeypatch
+):
+    """Linking + CC run once per dictionary version: a zero-pending resume
+    takes the dictionary product from the memo and calls neither; with the
+    memo emptied the same run links once and still has nothing pending."""
+    from grepai_spark import cc, link
+
+    out = str(tmp_path / "out")
+    d = alias_dict_df(spark)
+    pipeline.run(spark, tiny_transcripts, d, out)
+    calls = []
+    for mod, name in (
+        (link, "alias_similarity_edges"),
+        (link, "alias_similarity_edges_lsh"),
+        (cc, "canonical_map"),
+    ):
+
+        def counted(*a, _fn=getattr(mod, name), _name=name, **k):
+            calls.append(_name)
+            return _fn(*a, **k)
+
+        monkeypatch.setattr(mod, name, counted)
+    res = pipeline.run(spark, tiny_transcripts, d, out)
+    assert res.counters["edges_buckets_pending"] == 0
+    assert res.counters["vertices_buckets_pending"] == 0
+    assert calls == []
+    monkeypatch.setattr(pipeline, "_AMAP_MEMO", {})
+    res = pipeline.run(spark, tiny_transcripts, d, out)
+    assert res.counters["edges_buckets_pending"] == 0
+    assert sorted(calls) == ["alias_similarity_edges", "canonical_map"]
 
 
 def test_one_turn_append_job_budget(
@@ -187,13 +223,15 @@ def _dict_df(spark, rows):
 def test_vertices_gated_on_dictionary_signature(
     spark, tiny_transcripts, tmp_path
 ):
-    """run() rewrites vertices only when the dictionary signature changed:
-    an unchanged dictionary leaves its files in place; adding or removing
-    an alias, or flipping use_lsh, rewrites it to the new dictionary's
-    vertices."""
+    """run() rewrites vertices and edges only when the dictionary signature
+    changed: an unchanged dictionary leaves the vertices files in place;
+    adding or removing an alias, or flipping use_lsh, rewrites vertices and
+    every edges bucket to the new dictionary's rows, and the next unchanged
+    run has nothing pending."""
     out = str(tmp_path / "out")
     d = alias_dict_df(spark)
     res = pipeline.run(spark, tiny_transcripts, d, out)
+    all_buckets = res.counters["edges_buckets_pending"]
     files = _vertex_files(out)
     res = pipeline.run(spark, tiny_transcripts, d, out)
     assert _vertex_files(out) == files
@@ -212,6 +250,14 @@ def test_vertices_gated_on_dictionary_signature(
             pipeline.kg_vertices_df(spark, step)
         )
         assert res.counters["vertices"] == len(_vertex_rows(res.vertices))
+        assert res.counters["edges_buckets_pending"] == all_buckets
+        assert _edge_rows(res.edges) == _edge_rows(
+            pipeline.kg_edges_df(spark, tiny_transcripts, step, use_lsh)
+        )
+        _assert_counters_are_table_counts(spark, res, out)
+    again = pipeline.run(spark, tiny_transcripts, minus, out, use_lsh=True)
+    assert again.counters["edges_buckets_pending"] == 0
+    assert again.counters["vertices_buckets_pending"] == 0
     assert _vertex_rows(res.vertices) != _vertex_rows(
         pipeline.kg_vertices_df(spark, plus)
     )
@@ -220,14 +266,16 @@ def test_vertices_gated_on_dictionary_signature(
 def test_vertices_gate_rewrites_what_it_cannot_vouch_for(
     spark, tiny_transcripts, tmp_path, monkeypatch
 ):
-    """vertices is rewritten when no lineage row vouches for it: a catalog
-    written before the gate (no stage=vertices lineage partition) is
-    rewritten once and marked; a deleted vertices table is rewritten; a
-    crash in the vertices mark_done converges on the next run."""
+    """A stage's table is rewritten when no lineage row vouches for it: a
+    catalog written before the vertices gate (no stage=vertices lineage
+    partition) is rewritten once and marked; a deleted vertices, edges or
+    turn_vectors table is rebuilt; a crash in the vertices mark_done
+    converges on the next run."""
     import os
     import shutil
 
     from grepai_spark import lineage
+    from grepai_spark.storage import Catalog
 
     out = str(tmp_path / "out")
     d = alias_dict_df(spark)
@@ -236,7 +284,6 @@ def test_vertices_gate_rewrites_what_it_cannot_vouch_for(
 
     def vertices_lineage():
         from grepai_spark.schemas import LINEAGE
-        from grepai_spark.storage import Catalog
 
         rows = Catalog(spark, out).read("lineage", LINEAGE).collect()
         return [r for r in rows if r["stage"] == "vertices"]
@@ -258,6 +305,21 @@ def test_vertices_gate_rewrites_what_it_cannot_vouch_for(
     shutil.rmtree(os.path.join(out, "vertices"))
     res = pipeline.run(spark, tiny_transcripts, d, out)
     assert _vertex_rows(res.vertices) == want
+
+    # a deleted bucket-stage table: every one of its buckets is pending
+    all_buckets = pipeline.run(
+        spark, tiny_transcripts, d, out, embed=True
+    ).counters["vectors_buckets_pending"]
+    for table, stage in (("edges", "edges"), ("turn_vectors", "vectors")):
+        shutil.rmtree(os.path.join(out, table))
+        res = pipeline.run(spark, tiny_transcripts, d, out, embed=True)
+        assert res.counters[f"{stage}_buckets_pending"] == all_buckets
+        _assert_counters_are_table_counts(spark, res, out)
+    assert _edge_rows(res.edges) == _edge_rows(
+        pipeline.kg_edges_df(spark, tiny_transcripts, d)
+    )
+    vectors = Catalog(spark, out).read("turn_vectors")
+    assert vectors.count() == tiny_transcripts.count()
 
     # killed after the overwrite, before the mark: the next run rewrites
     # vertices again (idempotent) and marks it
@@ -408,18 +470,10 @@ def test_pipeline_parallelism_invariance(spark, sf_transcripts, tmp_path):
     """Same triples regardless of partitioning (determinism criterion #7)."""
     d = alias_dict_df(spark)
     a = pipeline.run(
-        spark,
-        sf_transcripts.repartition(2),
-        d,
-        str(tmp_path / "p2"),
-        n_buckets=4,
+        spark, sf_transcripts.repartition(2), d, str(tmp_path / "p2")
     )
     b = pipeline.run(
-        spark,
-        sf_transcripts.repartition(16),
-        d,
-        str(tmp_path / "p16"),
-        n_buckets=32,
+        spark, sf_transcripts.repartition(16), d, str(tmp_path / "p16")
     )
     assert _triple_set(a.edges) == _triple_set(b.edges)
 

@@ -1,5 +1,5 @@
-"""Catalog merge regimes: atomic partition swap + dirty-partition row merge;
-footer row counts."""
+"""Catalog merges: merge_by_key's atomic partition swap, replace_by_scope's
+dirty-partition row merge; footer row counts."""
 
 from __future__ import annotations
 
@@ -11,12 +11,16 @@ from grepai_spark.storage import Catalog
 
 
 def test_merge_subset_branch_rewrites_only_dirty_partitions(spark, tmp_path):
+    """A row-level upsert (replace_by_scope with the updates as their own
+    scope, keys a superset of the partition column) rewrites only the
+    partitions the updates touch."""
     cat = Catalog(spark, str(tmp_path / "cat"))
     df = spark.createDataFrame(
         [(0, "a", 1), (0, "b", 2), (1, "c", 3), (2, "d", 4)],
         "bucket int, k string, v int",
     )
-    cat.merge_by_key("t", df, ["bucket", "k"], partition_by=["bucket"])
+    keys = ["bucket", "k"]
+    cat.replace_by_scope("t", df, df, keys, partition_by=["bucket"])
     tdir = cat.path("t")
     assert sorted(
         e for e in os.listdir(tdir) if e.startswith("bucket=")
@@ -35,7 +39,7 @@ def test_merge_subset_branch_rewrites_only_dirty_partitions(spark, tmp_path):
     upd = spark.createDataFrame(
         [(0, "a", 10), (1, "e", 5)], "bucket int, k string, v int"
     )
-    cat.merge_by_key("t", upd, ["bucket", "k"], partition_by=["bucket"])
+    cat.replace_by_scope("t", upd, upd, keys, partition_by=["bucket"])
 
     assert mtimes("bucket=2") == b2_before  # clean partition untouched
     got = {(r["bucket"], r["k"]): r["v"] for r in cat.read("t").collect()}
@@ -73,7 +77,8 @@ def test_merge_partition_key_branch_is_atomic_swap(spark, tmp_path):
 def test_merge_unpartitioned_raises(spark, tmp_path):
     """No merge rewrites a whole table: a call without a one-column
     partition_by among its keys, or into a live table not in that layout,
-    raises and leaves the table as it was."""
+    raises and leaves the table as it was. merge_by_key's keys are the
+    partition column; row-level keys are replace_by_scope's."""
     cat = Catalog(spark, str(tmp_path / "cat3"))
     rows = [(0, "a", 1), (1, "b", 2)]
     df = spark.createDataFrame(rows, "bucket int, k string, v int")
@@ -84,11 +89,18 @@ def test_merge_unpartitioned_raises(spark, tmp_path):
     ):
         with pytest.raises(ValueError):
             cat.merge_by_key("t", df, keys, partition_by=part)
+        with pytest.raises(ValueError):
+            cat.replace_by_scope("t", df, df, keys, partition_by=part)
+    with pytest.raises(ValueError, match="not the partition"):
+        cat.merge_by_key("t", df, ["bucket", "k"], partition_by=["bucket"])
     assert not cat.exists("t")
     cat.overwrite("flat", df)
-    for keys in (["bucket", "k"], ["bucket"]):
-        with pytest.raises(ValueError, match="not partitioned"):
-            cat.merge_by_key("flat", df, keys, partition_by=["bucket"])
+    with pytest.raises(ValueError, match="not partitioned"):
+        cat.merge_by_key("flat", df, ["bucket"], partition_by=["bucket"])
+    with pytest.raises(ValueError, match="not partitioned"):
+        cat.replace_by_scope(
+            "flat", df, df, ["bucket", "k"], partition_by=["bucket"]
+        )
     assert sorted(tuple(r) for r in cat.read("flat").collect()) == rows
 
 

@@ -8,6 +8,7 @@ import pytest
 
 from grepai_spark import extract, streaming
 from grepai_spark.storage import Catalog
+from grepai_spark.synth import ALIAS_ROWS
 
 
 def _write_slice(df, path):
@@ -227,7 +228,7 @@ def test_streaming_merge_rewrites_only_dirty_buckets(
     # extraction is empty, whose old rows it must be able to clear — so the
     # dirty set is keyed by the delivered conversations, not just those
     # producing call edges.
-    scope2 = lineage.with_bucket(second, streaming.STREAM_BUCKETS)
+    scope2 = lineage.with_bucket(second)
     dirty = {r["bucket"] for r in scope2.select("bucket").distinct().collect()}
     assert dirty, "fixture must deliver second-slice turns"
 
@@ -281,6 +282,42 @@ def test_stream_resumes_over_unbucketed_legacy_table(
     assert "bucket" in migrated.columns
     table_dir = os.path.join(out, streaming.KG_EDGES_TABLE)
     assert any(e.startswith("bucket=") for e in os.listdir(table_dir))
+    assert set(_calls(cat)) == _call_triples(tiny_transcripts)
+    # the sink had no dictionary record: it is adopted and recorded
+    with open(f"{table_dir}.dictionary_signature") as fh:
+        want = pipeline._dictionary(alias_dict_df(spark), False).signature
+        assert fh.read() == want
+
+
+def test_stream_refuses_a_changed_dictionary(
+    spark, tiny_transcripts, tmp_path
+):
+    """The edge sink records its dictionary signature: a restart with the
+    same dictionary drains on, one with another dictionary raises before
+    any batch runs and leaves the sink as it was."""
+    from grepai_spark.dimcache import local_df
+    from grepai_spark.schemas import ALIAS_DICT
+
+    src = str(tmp_path / "dsrc")
+    out = str(tmp_path / "dout")
+    ck = str(tmp_path / "dck")
+    os.makedirs(src, exist_ok=True)
+    first = tiny_transcripts.where("conv_id in ('conv-a', 'conv-b')")
+    second = tiny_transcripts.where("conv_id not in ('conv-a', 'conv-b')")
+    _write_slice(first, f"{src}/slice1")
+    _drain(spark, src, out, ck)
+    cat = Catalog(spark, out)
+    before = set(_calls(cat))
+    assert before == _call_triples(first)
+
+    _write_slice(second, f"{src}/slice2")
+    minus = local_df(
+        spark, [r for r in ALIAS_ROWS if r[0] != "hash_join"], ALIAS_DICT
+    )
+    with pytest.raises(ValueError, match="dictionary"):
+        streaming.incremental_kg_edges(spark, f"{src}/slice*", out, ck, minus)
+    assert set(_calls(cat)) == before
+    _drain(spark, src, out, ck)
     assert set(_calls(cat)) == _call_triples(tiny_transcripts)
 
 
