@@ -10,7 +10,8 @@ canonical map. Re-collecting one of those costs a full Spark action
 which turns dictionary-scale serving paths into chains of fixed-cost jobs.
 
 It also owns the one size decision of every dictionary- and graph-scale
-path that has a driver regime and a distributed one (link, CC, BFS):
+path that has a driver regime and a distributed one (link, CC, BFS, the
+stream sink's merge, which probes with :func:`arrow_if_small`):
 :func:`collect_if_small` returns a handle's rows when there are at most
 ``cutoff`` of them and ``None`` otherwise, measuring with at most one
 bounded probe per handle and memoizing BOTH outcomes, so a later caller
@@ -76,12 +77,10 @@ def collect_if_small(df: DataFrame, cutoff: int | None = None) -> list | None:
 
     Rows already in hand for the handle answer with no job, and so does a
     memoized "larger than a bound >= cutoff". Otherwise one bounded probe
-    reads at most ``cutoff + 1`` rows: a small result is memoized as the
-    handle's rows, a large one only as "larger than cutoff". The probe
-    collects through Arrow — ``limit().collect()`` scans partitions
-    incrementally (several jobs), ``limit().toArrow()`` is one job — and
-    converts with PySpark's own Arrow-to-Row conversion, so the rows equal
-    ``collect()``'s.
+    (:func:`arrow_if_small`) runs: a small result is memoized as the
+    handle's rows, converted with PySpark's own Arrow-to-Row conversion so
+    they equal ``collect()``'s, and a large one only as "larger than
+    cutoff".
     """
     from pyspark.sql.conversion import ArrowTableToRowsConversion
 
@@ -92,14 +91,24 @@ def collect_if_small(df: DataFrame, cutoff: int | None = None) -> list | None:
         return rows if len(rows) <= cutoff else None
     if _LARGER.get(df, -1) >= cutoff:
         return None
-    rows = ArrowTableToRowsConversion.convert(
-        df.limit(cutoff + 1).toArrow(), df.schema
-    )
-    if len(rows) > cutoff:
+    table = arrow_if_small(df, cutoff)
+    if table is None:
         _LARGER[df] = cutoff
         return None
-    _ROWS[df] = rows
+    rows = _ROWS[df] = ArrowTableToRowsConversion.convert(table, df.schema)
     return rows
+
+
+def arrow_if_small(df: DataFrame, cutoff: int | None = None):
+    """``df`` as a ``pyarrow.Table`` if it has at most ``cutoff`` (default
+    :data:`DRIVER_ROWS`) rows, else ``None``, from one bounded probe that
+    reads at most ``cutoff + 1`` rows and memoizes nothing. The probe
+    collects through Arrow: ``limit().collect()`` scans partitions
+    incrementally (several jobs), ``limit().toArrow()`` is one job."""
+    if cutoff is None:
+        cutoff = DRIVER_ROWS
+    table = df.limit(cutoff + 1).toArrow()
+    return table if table.num_rows <= cutoff else None
 
 
 def arrow_table(rows: list, schema: StructType):

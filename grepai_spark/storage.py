@@ -10,11 +10,16 @@ full-table replace writes beside and renames over the live dir; partition
 merges write the dirty partitions beside and swap ONLY those partition
 subdirectories — a crash mid-job leaves every live partition either fully old
 or fully new, never half-written (the overwritePartitions commit contract).
-Every merge is partition-scoped and has one regime: merge_by_key swaps
-whole partitions (its keys are the one partition column), replace_by_scope
-replaces rows by scope within the partitions the scope names. A merge into
-an unpartitioned table raises rather than rewrite the table. A
-writer reads what it wrote from the parquet footers (partition_rows).
+Every merge is partition-scoped: merge_by_key swaps whole partitions (its
+keys are the one partition column), replace_by_scope replaces rows by
+scope within the partitions the scope names. replace_by_scope has two
+regimes behind one size decision (dimcache.DRIVER_ROWS): a batch whose
+rows and dirty partitions fit is merged on the driver with pyarrow, one
+collect job and one file per partition (Iceberg: pyiceberg's overwrite
+with a row filter); a larger one is merged by Spark's partitioned write
+(Iceberg: MERGE INTO). A merge into an unpartitioned table raises rather
+than rewrite the table. A writer reads what it wrote from the parquet
+footers (partition_rows).
 
 Driver-scale tables -- ``lineage`` (stages x buckets rows) and the
 ``metrics`` run log (one row per counter per run) -- are read and written
@@ -42,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from grepai_spark import dimcache
 from grepai_spark.dimcache import arrow_table, local_df
 
 
@@ -222,25 +228,13 @@ class Catalog:
         self, table: str, schema: StructType, col: str, value, rows: list
     ) -> list:
         """Swap ``rows`` (positional in ``schema`` order, each with ``col``
-        = ``value``) in as the whole ``col=value`` partition of ``table``:
-        one parquet file written on the driver into a staging dir, then the
-        staged three-rename swap of _overwrite_partitions (Iceberg: an
-        overwrite of one partition). Returns the rows as read_rows returns
-        them."""
-        import pyarrow.parquet as pq
+        = ``value``) in as the whole ``col=value`` partition of ``table``,
+        written on the driver (_write_partitions; Iceberg: an overwrite of
+        one partition). Returns the rows as read_rows returns them."""
         from pyspark.sql.conversion import ArrowTableToRowsConversion
 
         data = arrow_table(rows, schema)
-        final = self.path(table)
-        tmp = _tmp_dir(final)
-        staged = os.path.join(tmp, f"{col}={value}")
-        os.makedirs(staged)
-        pq.write_table(
-            data.drop_columns([col]), os.path.join(staged, _part_name())
-        )
-        os.makedirs(final, exist_ok=True)
-        _swap_dir(staged, os.path.join(final, f"{col}={value}"))
-        shutil.rmtree(tmp, ignore_errors=True)
+        self._write_partitions(table, col, {value: data.drop_columns([col])})
         # as a read returns them: the partition column last
         order = StructType(
             [f for f in schema if f.name != col] + [schema[col]]
@@ -248,6 +242,29 @@ class Catalog:
         return ArrowTableToRowsConversion.convert(
             data.select(order.names), order
         )
+
+    def _write_partitions(self, table: str, col: str, parts: dict) -> None:
+        """Swap each ``col=value`` partition of ``table`` for the Arrow
+        table ``parts[value]`` (its rows, without ``col``): all of them
+        are written on the driver into one staging dir beside the table,
+        one parquet file per partition (a partition with no rows as an
+        empty dir, which reads as zero rows), then each is committed with
+        the staged three-rename swap (_swap_dir), as _overwrite_partitions
+        commits Spark's files."""
+        import pyarrow.parquet as pq
+
+        final = self.path(table)
+        tmp = _tmp_dir(final)
+        for value, data in parts.items():
+            staged = os.path.join(tmp, f"{col}={value}")
+            os.makedirs(staged)
+            if data.num_rows:
+                pq.write_table(data, os.path.join(staged, _part_name()))
+        os.makedirs(final, exist_ok=True)
+        for value in parts:
+            entry = f"{col}={value}"
+            _swap_dir(os.path.join(tmp, entry), os.path.join(final, entry))
+        shutil.rmtree(tmp, ignore_errors=True)
 
     def append_rows(self, table: str, schema: StructType, rows: list) -> None:
         """Append ``rows`` (positional in ``schema`` order) as one new
@@ -383,18 +400,107 @@ class Catalog:
 
         `partition_by` is one column among `scope_keys` (see
         _partition_col), and the cost is O(dirty partitions), never
-        O(table): only the partitions `scope` names are read back,
-        anti-joined against the scope, unioned with the updates and swapped
-        in; a micro-batch touching 2 of 16 buckets rewrites 2. The live
-        table is read with `updates.schema`, the shape every caller writes
-        it from, so no read runs a parquet schema-inference job.
+        O(table): only the partitions `scope` or `updates` name are read
+        back, anti-joined against the scope, unioned with the updates and
+        swapped in; a micro-batch touching 2 of 16 buckets rewrites 2. The
+        live table is read with `updates.schema`, the shape every caller
+        writes it from, so no read runs a parquet schema-inference job.
+
+        Two regimes, one size decision. The batch (updates and scope keys)
+        comes to the driver in one bounded Arrow probe
+        (dimcache.arrow_if_small); if it fits in dimcache.DRIVER_ROWS, and
+        so do the dirty partitions' rows by their parquet footers
+        (partition_rows, no job), the merge runs on the driver
+        (_replace_on_driver: pyarrow reads, anti-joins and writes one file
+        per partition; Iceberg: pyiceberg's overwrite with a row filter).
+        Otherwise the same merge runs in Spark (_replace_in_spark), kept
+        only as the path for batches or buckets that do not fit in driver
+        memory. DRIVER_ROWS is the cutoff set for link, CC and BFS; where
+        the two regimes of this merge cross over is not measured. A
+        missing table is created with a plain Spark write.
         """
         col = self._partition_col(table, partition_by, scope_keys)
         if not self.exists(table):
             self.overwrite(table, updates, partition_by=[col])
             return
+        batch = _collect_batch(updates, scope, scope_keys)
+        if batch is None:
+            self._replace_in_spark(table, updates, scope, scope_keys, col)
+            return
+        upd, keys = batch
+        dirty = set(upd[col].to_pylist()) | set(keys[col].to_pylist())
+        if None in dirty or (
+            sum(self.partition_rows(table, col, dirty).values())
+            > dimcache.DRIVER_ROWS
+        ):
+            self._replace_in_spark(
+                table, updates, scope, scope_keys, col, list(dirty)
+            )
+        else:
+            self._replace_on_driver(table, col, upd, keys, sorted(dirty))
+
+    def _replace_on_driver(
+        self, table: str, col: str, upd, keys, dirty: list
+    ) -> None:
+        """replace_by_scope over a batch in the driver's hands: `upd` (the
+        updates) and `keys` (the scope keys) as Arrow tables.
+        Each `col` partition in `dirty` is read with pyarrow, its rows
+        under the scope are dropped (a left anti join on the scope keys,
+        where a NULL key matches nothing, as in Spark), the batch's rows
+        for it are added, sorted on the scope keys (a join's order is not
+        defined), and the partition is written back as one file
+        (_write_partitions)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        scope_keys = keys.column_names
+        part = upd.schema.field(col)
+        files = upd.schema.remove(upd.schema.get_field_index(col))
+        parts = {}
+        for value in dirty:
+            d = os.path.join(self.path(table), f"{col}={value}")
+            old = (
+                ds.dataset(d, schema=files, format="parquet").to_table()
+                if os.path.isdir(d)
+                else files.empty_table()
+            )
+            old = old.append_column(
+                part, pa.repeat(pa.scalar(value, part.type), old.num_rows)
+            )
+            kept = old.join(keys, keys=scope_keys, join_type="left anti")
+            merged = pa.concat_tables([
+                kept.select(upd.schema.names).cast(upd.schema),
+                upd.filter(pc.equal(upd[col], value)),
+            ])
+            parts[value] = merged.sort_by(
+                [(k, "ascending") for k in scope_keys]
+            ).drop_columns([col])
+        self._write_partitions(table, col, parts)
+
+    def _replace_in_spark(
+        self,
+        table: str,
+        updates: DataFrame,
+        scope: DataFrame,
+        scope_keys: list[str],
+        col: str,
+        dirty: list | None = None,
+    ) -> None:
+        """replace_by_scope in Spark, for a batch or dirty partitions
+        above dimcache.DRIVER_ROWS: the dirty partitions (collected unless
+        given) are read back with a partition filter, anti-joined against
+        the distinct scope, unioned with the updates and swapped in by
+        _overwrite_partitions."""
         scope = scope.select(*scope_keys).distinct()
-        dirty = [r[0] for r in scope.select(col).distinct().collect()]
+        if dirty is None:
+            dirty = [
+                r[0]
+                for r in scope.select(col)
+                .union(updates.select(col))
+                .distinct()
+                .collect()
+            ]
         if not dirty:
             return
         # partition-column filter -> directory pruning on the scan
@@ -407,3 +513,42 @@ class Catalog:
         # scope (and whose new extraction is empty) must still be swapped —
         # to empty — or its stale files stay live
         self._overwrite_partitions(table, merged, col, ensure=dirty)
+
+
+_SCOPE_TAG = "__scope"
+
+
+def _collect_batch(updates: DataFrame, scope: DataFrame, scope_keys: list):
+    """(updates, scope keys) as Arrow tables from one bounded Arrow probe
+    (dimcache.arrow_if_small), or None above dimcache.DRIVER_ROWS rows.
+    The scope keys ride in the same collect as the updates: cast to the
+    updates' types, padded with typed NULLs and told apart by a boolean
+    tag column; a scope that is the updates themselves is collected once.
+    The keys are not deduplicated: the anti join that consumes them drops
+    the same rows whether or not a key repeats."""
+    import pyarrow.compute as pc
+
+    if scope is updates:
+        upd = keys = dimcache.arrow_if_small(updates)
+        if upd is None:
+            return None
+    else:
+        types = {f.name: f.dataType for f in updates.schema}
+        padded = scope.select(
+            *[
+                (F.col(c) if c in scope_keys else F.lit(None))
+                .cast(types[c])
+                .alias(c)
+                for c in updates.columns
+            ],
+            F.lit(True).alias(_SCOPE_TAG),
+        )
+        both = dimcache.arrow_if_small(
+            updates.withColumn(_SCOPE_TAG, F.lit(False)).unionByName(padded)
+        )
+        if both is None:
+            return None
+        tag = both.column(_SCOPE_TAG)
+        upd = both.filter(pc.invert(tag)).drop_columns([_SCOPE_TAG])
+        keys = both.filter(tag)
+    return upd, keys.select(scope_keys)

@@ -34,9 +34,11 @@ Every sink table is BUCKETED on conv_id (lineage.with_bucket, the batch
 pipeline's N_BUCKETS buckets), and the per-micro-batch MERGE includes the
 bucket in its scope keys — Catalog.replace_by_scope then reads back and
 rewrites ONLY the buckets the batch touched (O(dirty buckets) per trigger),
-instead of anti-joining and rewriting the whole table. At stream volume the
-O(table)-per-trigger row-level merge is the difference between a pipeline
-that keeps up and one that falls progressively behind.
+instead of anti-joining and rewriting the whole table. A batch and dirty
+buckets within dimcache.DRIVER_ROWS rows are merged on the driver: the
+batch comes back in one Arrow collect and each dirty bucket is rewritten
+as one parquet file, so a wave runs 3 Spark jobs and a daemon's sink
+stays at one file per bucket; larger ones take Spark's partitioned write.
 
 The edge sink is a function of the alias dictionary as well as the turns,
 so it records the dictionary signature (pipeline._dict_signature) in a

@@ -6,50 +6,54 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql.types import StructType
 
 from grepai_spark.storage import Catalog
 
 
-def test_merge_subset_branch_rewrites_only_dirty_partitions(spark, tmp_path):
+def test_merge_subset_branch_rewrites_only_dirty_partitions(
+    spark, tmp_path, regimes
+):
     """A row-level upsert (replace_by_scope with the updates as their own
     scope, keys a superset of the partition column) rewrites only the
     partitions the updates touch."""
-    cat = Catalog(spark, str(tmp_path / "cat"))
-    df = spark.createDataFrame(
-        [(0, "a", 1), (0, "b", 2), (1, "c", 3), (2, "d", 4)],
-        "bucket int, k string, v int",
-    )
-    keys = ["bucket", "k"]
-    cat.replace_by_scope("t", df, df, keys, partition_by=["bucket"])
-    tdir = cat.path("t")
-    assert sorted(
-        e for e in os.listdir(tdir) if e.startswith("bucket=")
-    ) == ["bucket=0", "bucket=1", "bucket=2"]
+    for regime in regimes():
+        cat = Catalog(spark, str(tmp_path / "cat" / regime))
+        df = spark.createDataFrame(
+            [(0, "a", 1), (0, "b", 2), (1, "c", 3), (2, "d", 4)],
+            "bucket int, k string, v int",
+        )
+        keys = ["bucket", "k"]
+        cat.replace_by_scope("t", df, df, keys, partition_by=["bucket"])
+        tdir = cat.path("t")
+        assert sorted(
+            e for e in os.listdir(tdir) if e.startswith("bucket=")
+        ) == ["bucket=0", "bucket=1", "bucket=2"]
 
-    def mtimes(bucket: str) -> dict[str, float]:
-        d = os.path.join(tdir, bucket)
-        return {
-            f: os.path.getmtime(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
+        def mtimes(bucket: str) -> dict[str, float]:
+            d = os.path.join(tdir, bucket)
+            return {
+                f: os.path.getmtime(os.path.join(d, f))
+                for f in os.listdir(d)
+                if f.endswith(".parquet")
+            }
+
+        b2_before = mtimes("bucket=2")
+        # update touches buckets 0 (upsert existing key) and 1 (new key)
+        upd = spark.createDataFrame(
+            [(0, "a", 10), (1, "e", 5)], "bucket int, k string, v int"
+        )
+        cat.replace_by_scope("t", upd, upd, keys, partition_by=["bucket"])
+
+        assert mtimes("bucket=2") == b2_before  # clean partition untouched
+        got = {(r["bucket"], r["k"]): r["v"] for r in cat.read("t").collect()}
+        assert got == {
+            (0, "a"): 10,
+            (0, "b"): 2,
+            (1, "c"): 3,
+            (1, "e"): 5,
+            (2, "d"): 4,
         }
-
-    b2_before = mtimes("bucket=2")
-    # update touches buckets 0 (upsert existing key) and 1 (new key)
-    upd = spark.createDataFrame(
-        [(0, "a", 10), (1, "e", 5)], "bucket int, k string, v int"
-    )
-    cat.replace_by_scope("t", upd, upd, keys, partition_by=["bucket"])
-
-    assert mtimes("bucket=2") == b2_before  # clean partition untouched
-    got = {(r["bucket"], r["k"]): r["v"] for r in cat.read("t").collect()}
-    assert got == {
-        (0, "a"): 10,
-        (0, "b"): 2,
-        (1, "c"): 3,
-        (1, "e"): 5,
-        (2, "d"): 4,
-    }
 
 
 def test_merge_partition_key_branch_is_atomic_swap(spark, tmp_path):
@@ -174,52 +178,55 @@ def test_crash_recovery_restores_old_and_drops_debris(spark, tmp_path):
 
 
 def test_replace_by_scope_clears_rows_the_update_no_longer_produces(
-    spark, tmp_path
+    spark, tmp_path, regimes
 ):
     """The semantic difference from merge_by_key: a redelivered scope unit's
     STALE derived rows (keys the new extraction does not emit — including
     the all-of-them case) must vanish, while untouched partitions keep
     their files byte-identical on disk."""
-    cat = Catalog(spark, str(tmp_path / "cat"))
-    rows = [(0, "a", 1, "x"), (0, "a", 2, "y"), (0, "b", 1, "z"),
-            (1, "c", 1, "w"), (1, "c", 2, "v")]
-    df = spark.createDataFrame(rows, "bucket int, unit string, k int, v string")
-    cat.overwrite("t", df, partition_by=["bucket"])
+    for regime in regimes():
+        cat = Catalog(spark, str(tmp_path / "cat" / regime))
+        rows = [(0, "a", 1, "x"), (0, "a", 2, "y"), (0, "b", 1, "z"),
+                (1, "c", 1, "w"), (1, "c", 2, "v")]
+        df = spark.createDataFrame(
+            rows, "bucket int, unit string, k int, v string"
+        )
+        cat.overwrite("t", df, partition_by=["bucket"])
 
-    table_dir = cat.path("t")
-    before = {
-        f"{e}/{f}": os.path.getmtime(os.path.join(table_dir, e, f))
-        for e in os.listdir(table_dir) if e.startswith("bucket=")
-        for f in os.listdir(os.path.join(table_dir, e)) if f.endswith(".parquet")
-    }
+        table_dir = cat.path("t")
+        before = {
+            f"{e}/{f}": os.path.getmtime(os.path.join(table_dir, e, f))
+            for e in os.listdir(table_dir) if e.startswith("bucket=")
+            for f in os.listdir(os.path.join(table_dir, e)) if f.endswith(".parquet")
+        }
 
-    # unit 'a' redelivered: now yields ONE row with a new key; unit 'b'
-    # redelivered with ZERO rows
-    scope = spark.createDataFrame(
-        [(0, "a"), (0, "b")], "bucket int, unit string"
-    )
-    upd = spark.createDataFrame(
-        [(0, "a", 9, "new")], "bucket int, unit string, k int, v string"
-    )
-    cat.replace_by_scope("t", upd, scope, ["bucket", "unit"],
-                         partition_by=["bucket"])
+        # unit 'a' redelivered: now yields ONE row with a new key; unit 'b'
+        # redelivered with ZERO rows
+        scope = spark.createDataFrame(
+            [(0, "a"), (0, "b")], "bucket int, unit string"
+        )
+        upd = spark.createDataFrame(
+            [(0, "a", 9, "new")], "bucket int, unit string, k int, v string"
+        )
+        cat.replace_by_scope("t", upd, scope, ["bucket", "unit"],
+                             partition_by=["bucket"])
 
-    got = sorted(
-        tuple(r)
-        for r in cat.read("t").select("bucket", "unit", "k", "v").collect()
-    )
-    assert got == sorted(
-        [(0, "a", 9, "new"), (1, "c", 1, "w"), (1, "c", 2, "v")]
-    )
-    # bucket=1 untouched on disk
-    after = {
-        f"{e}/{f}": os.path.getmtime(os.path.join(table_dir, e, f))
-        for e in os.listdir(table_dir) if e.startswith("bucket=")
-        for f in os.listdir(os.path.join(table_dir, e)) if f.endswith(".parquet")
-    }
-    for k, m in before.items():
-        if k.startswith("bucket=1/"):
-            assert after.get(k) == m, f"clean partition rewritten: {k}"
+        got = sorted(
+            tuple(r)
+            for r in cat.read("t").select("bucket", "unit", "k", "v").collect()
+        )
+        assert got == sorted(
+            [(0, "a", 9, "new"), (1, "c", 1, "w"), (1, "c", 2, "v")]
+        )
+        # bucket=1 untouched on disk
+        after = {
+            f"{e}/{f}": os.path.getmtime(os.path.join(table_dir, e, f))
+            for e in os.listdir(table_dir) if e.startswith("bucket=")
+            for f in os.listdir(os.path.join(table_dir, e)) if f.endswith(".parquet")
+        }
+        for k, m in before.items():
+            if k.startswith("bucket=1/"):
+                assert after.get(k) == m, f"clean partition rewritten: {k}"
 
 
 def test_replace_by_scope_creates_and_refuses_unpartitioned(
@@ -247,71 +254,75 @@ def test_replace_by_scope_creates_and_refuses_unpartitioned(
 
 
 def test_replace_by_scope_empties_a_partition_whose_rows_all_left(
-    spark, tmp_path
+    spark, tmp_path, regimes
 ):
     """Round-6 regression: when EVERY row of a dirty partition belongs to
     the replaced scope and the new extraction yields nothing there, the
     partition must be swapped to EMPTY — Spark writes no subdir for an
     empty partition, so without the ensure= backstop the stale files
     would silently stay live."""
-    cat = Catalog(spark, str(tmp_path / "cat3"))
-    rows = [(0, "solo", 1, "stale"), (1, "other", 1, "keep")]
-    df = spark.createDataFrame(rows, "bucket int, unit string, k int, v string")
-    cat.overwrite("t", df, partition_by=["bucket"])
+    for regime in regimes():
+        cat = Catalog(spark, str(tmp_path / "cat3" / regime))
+        rows = [(0, "solo", 1, "stale"), (1, "other", 1, "keep")]
+        df = spark.createDataFrame(
+            rows, "bucket int, unit string, k int, v string"
+        )
+        cat.overwrite("t", df, partition_by=["bucket"])
 
-    # unit 'solo' (the ONLY occupant of bucket 0) redelivered with nothing
-    scope = spark.createDataFrame([(0, "solo")], "bucket int, unit string")
-    upd = spark.createDataFrame(
-        [], "bucket int, unit string, k int, v string"
-    )
-    cat.replace_by_scope("t", upd, scope, ["bucket", "unit"],
-                         partition_by=["bucket"])
-    got = sorted(
-        tuple(r)
-        for r in cat.read("t").select("bucket", "unit", "k", "v").collect()
-    )
-    assert got == [(1, "other", 1, "keep")]
+        # unit 'solo' (the ONLY occupant of bucket 0) redelivered with nothing
+        scope = spark.createDataFrame([(0, "solo")], "bucket int, unit string")
+        upd = spark.createDataFrame(
+            [], "bucket int, unit string, k int, v string"
+        )
+        cat.replace_by_scope("t", upd, scope, ["bucket", "unit"],
+                             partition_by=["bucket"])
+        got = sorted(
+            tuple(r)
+            for r in cat.read("t").select("bucket", "unit", "k", "v").collect()
+        )
+        assert got == [(1, "other", 1, "keep")]
 
 
-def test_replace_by_scope_sequential_model(spark, tmp_path):
+def test_replace_by_scope_sequential_model(spark, tmp_path, regimes):
     """Model check: 8 seeded random scope-replacements applied to one
     catalog must track a plain dict model exactly — covers re-emptied and
     re-populated partitions, repeated scope units, and updates whose rows
     land in multiple buckets."""
     import random
 
-    rng = random.Random(42)
-    cat = Catalog(spark, str(tmp_path / "model"))
-    units = [("u%d" % i, i % 3) for i in range(7)]  # unit -> bucket
-    model: dict[tuple, str] = {}
+    for regime in regimes():
+        rng = random.Random(42)
+        cat = Catalog(spark, str(tmp_path / "model" / regime))
+        units = [("u%d" % i, i % 3) for i in range(7)]  # unit -> bucket
+        model: dict[tuple, str] = {}
 
-    for step in range(8):
-        scoped = rng.sample(units, rng.randrange(1, len(units) + 1))
-        scope_rows = [(b, u) for u, b in scoped]
-        upd_rows = []
-        for u, b in scoped:
-            for k in range(rng.randrange(0, 3)):
-                upd_rows.append((b, u, k, f"v{step}"))
-        # apply to the model: drop every scoped unit's rows, insert news
-        for key in [k for k in model if (k[1], k[0]) in [(u, b) for u, b in scoped]]:
-            del model[key]
-        for b, u, k, v in upd_rows:
-            model[(b, u, k)] = v
+        for step in range(8):
+            scoped = rng.sample(units, rng.randrange(1, len(units) + 1))
+            scope_rows = [(b, u) for u, b in scoped]
+            upd_rows = []
+            for u, b in scoped:
+                for k in range(rng.randrange(0, 3)):
+                    upd_rows.append((b, u, k, f"v{step}"))
+            # apply to the model: drop every scoped unit's rows, insert news
+            for key in [k for k in model if (k[1], k[0]) in [(u, b) for u, b in scoped]]:
+                del model[key]
+            for b, u, k, v in upd_rows:
+                model[(b, u, k)] = v
 
-        scope = spark.createDataFrame(scope_rows, "bucket int, unit string")
-        upd = spark.createDataFrame(
-            upd_rows, "bucket int, unit string, k int, v string"
-        )
-        cat.replace_by_scope(
-            "t", upd, scope, ["bucket", "unit"], partition_by=["bucket"]
-        )
-        if not model:
-            continue  # fully-empty table: parquet scan has no schema source
-        got = {
-            (r["bucket"], r["unit"], r["k"]): r["v"]
-            for r in cat.read("t").collect()
-        }
-        assert got == model, f"diverged at step {step}"
+            scope = spark.createDataFrame(scope_rows, "bucket int, unit string")
+            upd = spark.createDataFrame(
+                upd_rows, "bucket int, unit string, k int, v string"
+            )
+            cat.replace_by_scope(
+                "t", upd, scope, ["bucket", "unit"], partition_by=["bucket"]
+            )
+            if not model:
+                continue  # fully-empty table: parquet scan has no schema source
+            got = {
+                (r["bucket"], r["unit"], r["k"]): r["v"]
+                for r in cat.read("t").collect()
+            }
+            assert got == model, f"diverged at step {step}"
 
 
 def _lineage_rows(spark, when):
@@ -415,3 +426,124 @@ def test_latest_metrics_over_spark_and_arrow_files(
     assert sorted(
         (r["metric"], r["value"]) for r in cat.read_rows("metrics", METRICS)
     ) == [("a", 1), ("a", 2), ("b", 7), ("b", 8), ("c", 3)]
+
+
+_TS_SCHEMA = "bucket int, unit string, k int, ts timestamp"
+
+
+def _ts_merges(spark):
+    """A replace_by_scope sequence over a table with a timestamp column:
+    (updates, scope) per step, scope None for a row-level upsert. It
+    holds a NULL scope key, scope keys absent from the table and a
+    partition only the updates name."""
+    import datetime
+
+    utc = datetime.timezone.utc
+    t0 = datetime.datetime(2024, 3, 10, 6, 30, 0, 123456, tzinfo=utc)
+
+    def df(rows, schema=_TS_SCHEMA):
+        return spark.createDataFrame(rows, schema)
+
+    scope = "bucket int, unit string"
+    return [
+        (df([(0, "a", 1, t0), (0, None, 2, t0), (1, "b", 1, None),
+             (2, "c", 1, t0)]), df([], scope)),
+        # NULL unit matches nothing: its old row stays, the new one is added
+        (df([(0, None, 3, t0), (0, "a", 4, None)]),
+         df([(0, None), (0, "a"), (1, "zz")], scope)),
+        # absent keys in a live and in a missing partition; bucket 3 is
+        # named by the updates only
+        (df([(3, "d", 1, t0)]), df([(2, "nope"), (5, "nope")], scope)),
+        (df([(1, "b", 9, t0), (2, "c", 9, None)]), None),
+        # every row of bucket 2 leaves
+        (df([], _TS_SCHEMA), df([(2, "c")], scope)),
+    ]
+
+
+def _run_merges(cat, merges):
+    for upd, scope in merges:
+        cat.replace_by_scope(
+            "t", upd, upd if scope is None else scope, ["bucket", "unit"],
+            partition_by=["bucket"],
+        )
+    return sorted(
+        cat.read_rows("t", StructType.fromDDL(_TS_SCHEMA)),
+        key=lambda r: (r["bucket"], r["unit"] or "", r["k"]),
+    )
+
+
+def test_replace_by_scope_regimes_leave_equal_tables(
+    spark, tmp_path, regimes, local_tz_not_utc, monkeypatch
+):
+    """The driver merge and the Spark merge leave equal tables for the
+    same sequence, timestamps included with the driver's zone off UTC;
+    the driver regime runs no Spark write after the first (creating)
+    merge and leaves one file per partition."""
+    merges = _ts_merges(spark)
+    spark_writes = []
+    real = Catalog._overwrite_partitions
+    monkeypatch.setattr(
+        Catalog, "_overwrite_partitions",
+        lambda self, *a, **k: spark_writes.append(a[0]) or real(self, *a, **k),
+    )
+    got = {}
+    for regime in regimes():
+        spark_writes.clear()
+        cat = Catalog(spark, str(tmp_path / regime))
+        got[regime] = _run_merges(cat, merges)
+        tdir = cat.path("t")
+        files = {
+            e: [f for f in os.listdir(os.path.join(tdir, e))
+                if f.endswith(".parquet")]
+            for e in os.listdir(tdir)
+            if e.startswith("bucket=")
+        }
+        if regime == "driver":
+            assert spark_writes == []
+            assert all(len(f) <= 1 for f in files.values()), files
+        else:
+            assert len(spark_writes) == len(merges) - 1
+    assert got["driver"] == got["distributed"]
+    assert [r.asDict() for r in got["driver"]] == [
+        r.asDict() for r in got["distributed"]
+    ]
+    assert {(r["bucket"], r["unit"], r["k"]) for r in got["driver"]} == {
+        (0, "a", 4), (0, None, 2), (0, None, 3), (1, "b", 9), (3, "d", 1),
+    }
+
+
+def test_replace_by_scope_large_partition_takes_the_spark_path(
+    spark, tmp_path, monkeypatch
+):
+    """A batch that fits in DRIVER_ROWS over a dirty partition whose
+    footer rows do not runs the Spark merge, with the driver regime's
+    result."""
+    from grepai_spark import dimcache
+
+    rows = [(0, f"u{i}", i) for i in range(20)] + [(1, "x", 0)]
+    schema = "bucket int, unit string, k int"
+    spark_writes = []
+    real = Catalog._overwrite_partitions
+    monkeypatch.setattr(
+        Catalog, "_overwrite_partitions",
+        lambda self, *a, **k: spark_writes.append(a[0]) or real(self, *a, **k),
+    )
+    got = {}
+    for cutoff in (dimcache.DRIVER_ROWS, 5):
+        monkeypatch.setattr(dimcache, "DRIVER_ROWS", cutoff)
+        cat = Catalog(spark, str(tmp_path / str(cutoff)))
+        cat.overwrite("t", spark.createDataFrame(rows, schema), ["bucket"])
+        upd = spark.createDataFrame([(0, "u3", 30), (0, "new", 1)], schema)
+        scope = spark.createDataFrame(
+            [(0, "u3"), (0, "u4")], "bucket int, unit string"
+        )
+        spark_writes.clear()
+        cat.replace_by_scope(
+            "t", upd, scope, ["bucket", "unit"], partition_by=["bucket"]
+        )
+        assert len(spark_writes) == (cutoff == 5)
+        got[cutoff] = sorted(
+            tuple(r) for r in cat.read_rows("t", StructType.fromDDL(schema))
+        )
+    assert got[5] == got[dimcache.DRIVER_ROWS]
+    assert len(got[5]) == len(rows)  # u3 replaced, u4 gone, new added

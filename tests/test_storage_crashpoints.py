@@ -199,3 +199,80 @@ def test_arrow_lineage_write_killed_then_recovered(tmp_path, allow):
         if "__tmp__" in e or "__new__" in e or "__old__" in e
     ]
     assert debris == []
+
+
+_KILLED_MERGE = """
+import os, sys
+sys.path.insert(0, {repo!r})
+from grepai_spark import storage
+from grepai_spark.dimcache import arrow_table
+from pyspark.sql.types import IntegerType, StringType, StructType
+
+real, renames = os.rename, [0]
+
+def rename(src, dst):
+    if renames[0] >= {allow}:
+        os._exit(3)  # killed: no cleanup, no exception handlers
+    renames[0] += 1
+    real(src, dst)
+
+storage.os.rename = rename
+schema = (
+    StructType().add("bucket", IntegerType()).add("unit", StringType())
+    .add("v", StringType())
+)
+upd = arrow_table([(0, "a", "NEW"), (1, "c", "NEW")], schema)
+keys = upd.select(["bucket", "unit"])
+storage.Catalog(None, {root!r})._replace_on_driver(
+    "t", "bucket", upd, keys, [0, 1]
+)
+"""
+
+
+@pytest.mark.parametrize("allow", range(7))
+def test_driver_scope_merge_killed_then_recovered(tmp_path, allow):
+    """replace_by_scope's driver regime (the merge of a collected batch,
+    Catalog._replace_on_driver) killed after staging both dirty
+    partitions, or at any rename of their swaps, leaves each partition
+    fully old or fully new once a Catalog has run recovery, with no
+    staging dir or other debris left."""
+    import subprocess
+    import sys
+
+    from pyspark.sql.types import IntegerType, StringType, StructType
+
+    from grepai_spark.storage import Catalog
+
+    schema = (
+        StructType().add("bucket", IntegerType()).add("unit", StringType())
+        .add("v", StringType())
+    )
+    root = str(tmp_path / "cat")
+    cat = Catalog(None, root)
+    cat.write_partition(
+        "t", schema, "bucket", 0, [(0, "a", "OLD"), (0, "b", "OLD")]
+    )
+    cat.write_partition("t", schema, "bucket", 1, [(1, "c", "OLD")])
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = _KILLED_MERGE.format(repo=repo, allow=allow, root=root)
+    done = subprocess.run([sys.executable, "-c", code], check=False)
+    assert done.returncode == (0 if allow == 6 else 3)
+
+    cat = Catalog(None, root)  # startup recovery
+    rows = cat.read_rows("t", schema)
+    got = {
+        b: sorted((r["unit"], r["v"]) for r in rows if r["bucket"] == b)
+        for b in (0, 1)
+    }
+    # 3 renames per partition, bucket=0's first; once a live dir is
+    # displaced, recovery finishes its commit forward
+    old0 = [("a", "OLD"), ("b", "OLD")]
+    assert got[0] == ([("a", "NEW"), ("b", "OLD")] if allow >= 2 else old0)
+    assert got[1] == ([("c", "NEW")] if allow >= 5 else [("c", "OLD")])
+    debris = [
+        e
+        for d in (root, cat.path("t"))
+        for e in os.listdir(d)
+        if "__tmp__" in e or "__new__" in e or "__old__" in e
+    ]
+    assert debris == []

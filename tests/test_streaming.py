@@ -559,3 +559,64 @@ def test_stateful_stats_daemon_trigger(spark, tiny_transcripts, tmp_path):
         assert got == want
     finally:
         q.stop()
+
+
+def test_stream_waves_run_three_jobs_and_keep_one_file_per_bucket(
+    spark, tmp_path
+):
+    """Waves that re-touch the same buckets (an edited first turn and a
+    new turn per conversation) each run at most 3 Spark jobs, counted by
+    the query's job group, and leave every sink bucket one parquet file;
+    the sink equals the batch kg_edges_df of the latest turns."""
+    import datetime
+
+    from conftest import TINY_ROWS
+
+    from grepai_spark import pipeline
+    from grepai_spark.schemas import TRANSCRIPTS
+    from grepai_spark.synth import alias_dict_df
+
+    src, out, ck = (str(tmp_path / d) for d in ("wsrc", "wout", "wck"))
+    d = alias_dict_df(spark)
+    sc = spark.sparkContext
+    latest = {(r[0], r[1]): r for r in TINY_ROWS}
+    convs = sorted({r[0] for r in TINY_ROWS})
+    for wave in range(6):
+        ts = datetime.datetime(2024, 2, 1) + datetime.timedelta(hours=wave)
+        rows = list(latest.values()) if wave == 0 else [
+            (c, 0, "user", f"{latest[(c, 0)][3]} w{wave}", "", ts)
+            for c in convs
+        ] + [
+            (c, 10 + wave, "user", f"run FetchData w{wave}",
+             "payments.charge" if wave % 2 else "", ts)
+            for c in convs
+        ]
+        latest.update(((r[0], r[1]), r) for r in rows)
+        _write_slice(
+            spark.createDataFrame(rows, TRANSCRIPTS), f"{src}/slice{wave}"
+        )
+        q = streaming.incremental_kg_edges(
+            spark, f"{src}/slice*", out, ck, d
+        )
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+        assert len(q.recentProgress) == 1
+        if wave:  # the first batch creates the sink with a Spark write
+            assert len(jobs) <= 3, f"wave {wave}: {len(jobs)} jobs"
+
+    table_dir = os.path.join(out, streaming.KG_EDGES_TABLE)
+    files = {
+        e: [f for f in os.listdir(os.path.join(table_dir, e))
+            if f.endswith(".parquet")]
+        for e in os.listdir(table_dir)
+        if e.startswith("bucket=")
+    }
+    assert files and all(len(f) <= 1 for f in files.values()), files
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "weight"]
+    want = pipeline.kg_edges_df(
+        spark, spark.createDataFrame(list(latest.values()), TRANSCRIPTS), d
+    )
+    got = Catalog(spark, out).read(streaming.KG_EDGES_TABLE).select(*cols)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.select(*cols).collect())
+    )
