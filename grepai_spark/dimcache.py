@@ -131,16 +131,31 @@ def local_df(
     spark: SparkSession, rows: list, schema: StructType | str
 ) -> DataFrame:
     """``rows`` (tuples or Rows, positional in ``schema`` order; a DDL
-    string is accepted) as an Arrow-backed ``LocalRelation``, with the rows
-    attached exactly as ``collect()`` returns them.
-
-    The only ``createDataFrame`` in the package: see the module docstring
-    for why a Python list must not go in directly."""
+    string is accepted) as an Arrow-backed ``LocalRelation``
+    (:func:`arrow_df`), with the rows attached exactly as ``collect()``
+    returns them."""
     from pyspark.sql.conversion import ArrowTableToRowsConversion
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     table = arrow_table(rows, schema)
-    df = spark.createDataFrame(table, schema)
+    df = arrow_df(spark, table, schema)
     _ROWS[df] = ArrowTableToRowsConversion.convert(table, schema)
     return df
+
+
+def arrow_df(
+    spark: SparkSession, table, schema: StructType | None = None
+) -> DataFrame:
+    """A ``pyarrow.Table`` the driver holds as a ``LocalRelation`` of
+    ``schema`` (default: the table's own types), with no rows attached:
+    for a table no consumer collects back, converting its rows would cost
+    more than the plan (1.6 s for 230k edge rows on 4 cores).
+
+    The only ``createDataFrame`` in the package: see the module docstring
+    for why a Python list must not go in directly."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return spark.createDataFrame(
+        table, schema or from_arrow_schema(table.schema)
+    )

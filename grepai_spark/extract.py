@@ -214,45 +214,68 @@ _EDGE_ELEM = StructType(
 )
 
 
+def turn_edges(payload):
+    """The one per-turn edge derivation: ``edges(text, tool)`` -> the
+    turn's edge fragments ``[{"pred", "obj"}]``.
+
+    A ``tool`` that is not NULL and not ``''`` is one ``calls`` edge
+    (extract.call_triples' rule, ref trace/store.go:194-204); the text's
+    aliases with a word-boundary occurrence outside ``` fences give the
+    sorted distinct canonical ``(pred, entity_id)`` pairs (the per-turn
+    distinct that replaced a dropDuplicates shuffle). ``payload`` is an
+    :class:`~grepai_spark.automaton.AliasPayload` over alias -> (pred,
+    entity_id); its matcher is the two-regime one (memmem loop small,
+    Aho-Corasick large, automaton.matcher_for).
+
+    The edge-detector UDF (:func:`make_edge_detector`) runs it over each
+    Arrow batch on a worker, and the stream runs it over a micro-batch it
+    holds on the driver (streaming.incremental_kg_edges), so both derive
+    the same rows. Each returned function memoizes per distinct text (r7:
+    duplicate texts are the norm, ~26% distinct at sf0.01); take one per
+    batch so the memo stays bounded by the batch.
+    """
+    matcher = payload.matcher()  # module-memoized: one build per process
+    amap = payload.data
+    memo: dict[str | None, list[dict]] = {}
+
+    def edges(text: str | None, tool: str | None) -> list[dict]:
+        found = memo.get(text)
+        if found is None:
+            found = memo[text] = [
+                {"pred": p, "obj": o}
+                for p, o in sorted(
+                    {amap[a] for a in matcher(mask_fences(text))}
+                    if text
+                    else ()
+                )
+            ]
+        return [{"pred": "calls", "obj": tool}, *found] if tool else found
+
+    return edges
+
+
 def make_edge_detector(alias_map: dict[str, tuple[str, str]]):
     """Arrow-batched detector emitting CANONICAL edge fragments directly:
-    text -> sorted distinct [(pred, entity_id)] per turn.
+    (text, tool) -> the turn's [(pred, obj)], calls edge included
+    (:func:`turn_edges` per row).
 
     `alias_map`: alias -> (pred, entity_id), the dictionary-scale product of
     linking + canonicalization, shipped to executors by SparkContext.broadcast
     (the reference's in-memory symbol maps, rpg/indexer.go:527; the task
     command pickles only the broadcast handle). Fusing the per-turn dedup
     here makes the ENTIRE kg_edges derivation a single narrow map — no
-    shuffle, no second pass; the per-turn distinct replaces the downstream
-    dropDuplicates whose shuffle was the pipeline's only exchange. Same
-    two-regime boundary matching as the mention detector (memmem loop small,
-    Aho-Corasick large), built once per worker via automaton.matcher_for.
+    shuffle, no second pass. The matcher is built once per worker via
+    automaton.matcher_for.
     """
     bc = _broadcast_payload(dict(alias_map))
 
     @F.pandas_udf(ArrayType(_EDGE_ELEM))
-    def detect_edges(texts: pd.Series) -> pd.Series:
-        payload = bc.value  # one unpickle per worker (broadcast registry)
-        matcher = payload.matcher()  # module-memoized: one build per worker
-        amap = payload.data
-        out = []
-        empty: list[dict] = []
-        # per-batch memo — same rationale as the mention detector (r7):
-        # one match pass per distinct text per batch, bounded memory
-        memo: dict[str, list[dict]] = {}
-        for text in texts.fillna(""):
-            edges = memo.get(text)
-            if edges is None:
-                if not text:
-                    edges = empty
-                else:
-                    found = {amap[a] for a in matcher(mask_fences(text))}
-                    edges = [
-                        {"pred": p, "obj": o} for p, o in sorted(found)
-                    ] or empty
-                memo[text] = edges
-            out.append(edges)
-        return pd.Series(out)
+    def detect_edges(texts: pd.Series, tools: pd.Series) -> pd.Series:
+        # one unpickle per worker (broadcast registry), one memo per batch
+        edges = turn_edges(bc.value)
+        return pd.Series(
+            [edges(x, t) for x, t in zip(texts.fillna(""), tools.fillna(""))]
+        )
 
     return detect_edges
 

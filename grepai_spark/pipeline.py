@@ -56,10 +56,10 @@ def kg_edges_df(
     The linking + canonicalization product is dictionary-scale, so it
     collapses to an alias -> (pred, entity_id) map computed once on the
     driver (two tiny jobs) and broadcast to the edge-detector UDF. The
-    corpus-scale plan is then ONE narrow map over transcripts: call edges
-    come from an inline array filter on the `tool` column, mention/does
-    edges from the UDF (per-turn distinct inside the batch), one explode —
-    no shuffle anywhere and a single scan. :func:`run` writes the same map
+    corpus-scale plan is then ONE narrow map over transcripts: the UDF
+    derives each turn's calls edge (from `tool`) and mention/does edges
+    (from `text`, per-turn distinct), one explode — no shuffle anywhere
+    and a single scan. :func:`run` writes the same map
     over its pending buckets, so the two emit identical rows.
     """
     return kg_edges_from_map(
@@ -150,17 +150,15 @@ def kg_edges_from_map(
 ) -> DataFrame:
     """The corpus-scale half of the fused plan — usable on batch AND
     streaming DataFrames (it is a pure narrow map, so it is trivially
-    streamable)."""
+    streamable): each turn's edges, calls edge included, from the one
+    per-turn derivation (extract.turn_edges, run by the edge-detector
+    UDF), one explode."""
     detect_edges = extract.make_edge_detector(amap)
-    # call edge as a 0/1-element array: filter() keeps the struct type
-    # without CASE branches whose empty array() would type-clash
-    call_arr = F.expr(
-        "filter(array(named_struct('pred', 'calls', 'obj', tool)),"
-        " x -> x.obj IS NOT NULL AND x.obj <> '')"
-    )
-    combined = F.concat(call_arr, detect_edges(F.col("text")))
     return transcripts.select(
-        "conv_id", "turn_idx", "role", F.explode(combined).alias("e")
+        "conv_id",
+        "turn_idx",
+        "role",
+        F.explode(detect_edges("text", "tool")).alias("e"),
     ).select(
         F.col("role").alias("subj"),
         F.col("e.pred").alias("pred"),

@@ -34,11 +34,19 @@ Every sink table is BUCKETED on conv_id (lineage.with_bucket, the batch
 pipeline's N_BUCKETS buckets), and the per-micro-batch MERGE includes the
 bucket in its scope keys — Catalog.replace_by_scope then reads back and
 rewrites ONLY the buckets the batch touched (O(dirty buckets) per trigger),
-instead of anti-joining and rewriting the whole table. A batch and dirty
-buckets within dimcache.DRIVER_ROWS rows are merged on the driver: the
-batch comes back in one Arrow collect and each dirty bucket is rewritten
-as one parquet file, so a wave runs 3 Spark jobs and a daemon's sink
-stays at one file per bucket; larger ones take Spark's partitioned write.
+instead of anti-joining and rewriting the whole table.
+
+A micro-batch within dimcache.DRIVER_ROWS rows never reaches a Python
+worker: the KG edge stream collects the raw batch with its bucket in one
+bounded Arrow collect (one narrow job, no shuffle), then picks each turn's
+latest version (_latest_rows), derives its edges (extract.turn_edges, the
+per-turn function the edge-detector UDF runs) and merges them
+(replace_by_scope over Arrow tables) on the driver, each dirty bucket
+rewritten as one parquet file. A wave is 1 Spark job, the sink is created
+the same way, and a daemon's sink stays at one file per bucket. A larger
+batch takes the Spark path: _latest_version's shuffle, the UDF and, for
+large buckets, Spark's partitioned write. The watch daemon likewise
+re-extracts a changed file in-process (cli/watch.go:2007-2133).
 
 The edge sink is a function of the alias dictionary as well as the turns,
 so it records the dictionary signature (pipeline._dict_signature) in a
@@ -57,7 +65,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from grepai_spark import lineage
+from grepai_spark import dimcache, extract, lineage
+from grepai_spark.automaton import AliasPayload
 from grepai_spark.schemas import TRANSCRIPTS
 from grepai_spark.storage import Catalog
 
@@ -73,12 +82,60 @@ def _latest_version(batch: DataFrame) -> DataFrame:
     modification can land in the same trigger as its original; extracting
     both would race two versions into one MERGE. The groupBy touches only
     the micro-batch (never the sink table), so its shuffle is bounded by the
-    trigger size."""
+    trigger size. :func:`_latest_rows` is its driver twin."""
     return (
         batch.groupBy("conv_id", "turn_idx")
         .agg(F.max(F.struct(*_VERSION_COLS)).alias("m"))
         .select("conv_id", "turn_idx", "m.role", "m.text", "m.tool", "m.ts")
     )
+
+
+def _latest_rows(batch):
+    """:func:`_latest_version` over a micro-batch held as a
+    ``pyarrow.Table``: per (conv_id, turn_idx) the row with the largest
+    (ts, role, text, tool) in Spark's struct order — field by field, NULL
+    lowest, strings compared as UTF-8 bytes, which is Arrow's string order.
+    Sorting each version column descending with NULLs last puts that row
+    first in its key group."""
+    order = batch.sort_by(
+        [("conv_id", "ascending"), ("turn_idx", "ascending")]
+        + [(c, "descending") for c in _VERSION_COLS],
+        null_placement="at_end",
+    )
+    keys = list(
+        zip(order["conv_id"].to_pylist(), order["turn_idx"].to_pylist())
+    )
+    return order.take(
+        [i for i, k in enumerate(keys) if i == 0 or k != keys[i - 1]]
+    )
+
+
+def _edge_rows(turns, edges_of):
+    """The bucketed sink rows (pipeline._EDGES_B) of ``turns``, a
+    ``pyarrow.Table`` of bucketed transcript rows, derived on the driver
+    with ``edges_of`` (extract.turn_edges): the rows
+    ``lineage.with_bucket(pipeline.kg_edges_from_map(turns, amap))``
+    holds, as an Arrow table of the sink's types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from grepai_spark.pipeline import _EDGES_B
+
+    cols = [[] for _ in _EDGES_B]
+    subj, pred, obj, conv, idx, weight, bucket = cols
+    names = ("conv_id", "turn_idx", "role", "text", "tool", "bucket")
+    for c, i, role, text, tool, b in zip(
+        *(turns[n].to_pylist() for n in names)
+    ):
+        for e in edges_of(text, tool):
+            subj.append(role)
+            pred.append(e["pred"])
+            obj.append(e["obj"])
+            conv.append(c)
+            idx.append(i)
+            bucket.append(b)
+    weight.extend([1.0] * len(subj))
+    return pa.Table.from_arrays(cols, schema=to_arrow_schema(_EDGES_B))
 
 
 def _start(stream_writer, checkpoint_dir: str, trigger: dict | None):
@@ -154,7 +211,9 @@ def incremental_kg_edges(
     as a streaming job: the alias -> (pred, entity_id) map is computed ONCE
     (the dictionary does not change per micro-batch; a start over a sink
     recorded with another dictionary raises ValueError), then every batch
-    runs the same zero-shuffle narrow map as the batch flagship and replaces the
+    derives its latest turns' edges with the same per-turn function as the
+    batch flagship (extract.turn_edges: on the driver for a batch within
+    dimcache.DRIVER_ROWS, in the edge-detector UDF above) and replaces the
     edge set of every turn it carries (replace_by_scope) — idempotent under
     re-delivery AND convergent under redelivered MODIFICATIONS, exactly like
     the reference's watch daemon re-indexing a changed file (W1/W2 analog,
@@ -169,17 +228,23 @@ def incremental_kg_edges(
     dictionary = pipeline._dictionary(alias_dict, use_lsh=False)
     _adopt_dictionary(catalog, KG_EDGES_TABLE, dictionary.signature)
     amap = dictionary.entity_map
+    payload = AliasPayload(amap)
+    keys = ["bucket", "conv_id", "turn_idx"]
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        turns = _latest_version(batch)
-        scope = lineage.with_bucket(turns.select("conv_id", "turn_idx"))
-        edges = lineage.with_bucket(pipeline.kg_edges_from_map(turns, amap))
+        raw = dimcache.arrow_if_small(lineage.with_bucket(batch))
+        if raw is not None:
+            turns = _latest_rows(raw)
+            edges = _edge_rows(turns, extract.turn_edges(payload))
+            scope = turns.select(keys)
+        else:
+            turns = _latest_version(batch)
+            scope = lineage.with_bucket(turns.select("conv_id", "turn_idx"))
+            edges = lineage.with_bucket(
+                pipeline.kg_edges_from_map(turns, amap)
+            )
         catalog.replace_by_scope(
-            KG_EDGES_TABLE,
-            edges,
-            scope,
-            ["bucket", "conv_id", "turn_idx"],
-            partition_by=["bucket"],
+            KG_EDGES_TABLE, edges, scope, keys, partition_by=["bucket"]
         )
 
     stream = (

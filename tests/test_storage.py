@@ -512,6 +512,48 @@ def test_replace_by_scope_regimes_leave_equal_tables(
     }
 
 
+def test_replace_by_scope_takes_arrow_tables(
+    spark, tmp_path, regimes, local_tz_not_utc, monkeypatch
+):
+    """Updates and scope handed over as Arrow tables (a batch the caller
+    already holds) merge to the table their DataFrames leave, in both
+    regimes. The missing table is created on the driver in both; after
+    that the driver regime runs no Spark write and leaves one file per
+    partition, and with DRIVER_ROWS = 0 every merge over a non-empty
+    dirty partition takes the Spark write."""
+    frames = _ts_merges(spark)
+    arrows = [
+        (u.toArrow(), None if s is None else s.toArrow()) for u, s in frames
+    ]
+    want = _run_merges(Catalog(spark, str(tmp_path / "frames")), frames)
+    spark_writes = []
+    for name in ("_overwrite_partitions", "overwrite"):
+        real = getattr(Catalog, name)
+        monkeypatch.setattr(
+            Catalog, name,
+            lambda self, *a, _real=real, _name=name, **k: (
+                spark_writes.append(_name) or _real(self, *a, **k)
+            ),
+        )
+    for regime in regimes():
+        spark_writes.clear()
+        cat = Catalog(spark, str(tmp_path / regime))
+        got = _run_merges(cat, arrows)
+        assert [r.asDict() for r in got] == [r.asDict() for r in want]
+        if regime == "driver":
+            assert spark_writes == []
+            tdir = cat.path("t")
+            assert all(
+                len([f for f in os.listdir(os.path.join(tdir, e))
+                     if f.endswith(".parquet")]) <= 1
+                for e in os.listdir(tdir)
+            )
+        else:
+            assert spark_writes == ["_overwrite_partitions"] * (
+                len(arrows) - 1
+            )
+
+
 def test_replace_by_scope_large_partition_takes_the_spark_path(
     spark, tmp_path, monkeypatch
 ):

@@ -6,7 +6,9 @@ invariant after Catalog-startup recovery (_recover_dir) must hold: the
 destination is either fully-old or fully-new data — never missing when any
 committed version existed, never a mix — and no __tmp__/__new__/__old__
 debris survives. Pure-filesystem tests (no Spark): the protocol is plain
-os.rename, so the walk is deterministic.
+os.rename, so the walk is deterministic. The driver-side writes are then
+killed mid-write in a subprocess (os._exit at a chosen rename), the last
+of them inside a streaming job whose restart must converge.
 """
 
 from __future__ import annotations
@@ -273,6 +275,76 @@ def test_driver_scope_merge_killed_then_recovered(tmp_path, allow):
         e
         for d in (root, cat.path("t"))
         for e in os.listdir(d)
+        if "__tmp__" in e or "__new__" in e or "__old__" in e
+    ]
+    assert debris == []
+
+
+_KILLED_CREATE = """
+import os, sys
+sys.path.insert(0, {repo!r})
+from grepai_spark import storage, streaming
+from grepai_spark.session import get_spark
+from grepai_spark.synth import alias_dict_df
+
+real, renames = os.rename, [0]
+
+def rename(src, dst):
+    if renames[0] >= {allow}:
+        os._exit(3)  # killed: no cleanup, no exception handlers
+    renames[0] += 1
+    real(src, dst)
+
+write = storage.Catalog._write_partitions
+
+def killed_write(self, *args):
+    storage.os.rename = rename  # every partition is staged before a rename
+    write(self, *args)
+
+storage.Catalog._write_partitions = killed_write
+spark = get_spark("killed-create", master="local[1]", shuffle_partitions=2)
+streaming.incremental_kg_edges(
+    spark, {src!r}, {out!r}, {ck!r}, alias_dict_df(spark)
+)
+"""
+
+
+@pytest.mark.parametrize("allow", [0, 1])
+def test_stream_sink_creation_killed_then_resumed(
+    spark, tiny_transcripts, tmp_path, allow
+):
+    """The stream's first batch creates its sink on the driver
+    (Catalog._write_partitions). Killed after staging every bucket, or at
+    the commit rename of the first one, the restarted stream re-runs the
+    batch from its checkpoint and the sink equals kg_edges_df, with no
+    staging debris left."""
+    import subprocess
+    import sys
+
+    from grepai_spark import pipeline, streaming
+    from grepai_spark.storage import Catalog
+    from grepai_spark.synth import alias_dict_df
+
+    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
+    tiny_transcripts.coalesce(1).write.parquet(f"{src}/slice1")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = _KILLED_CREATE.format(
+        repo=repo, allow=allow, src=f"{src}/slice*", out=out, ck=ck
+    )
+    done = subprocess.run([sys.executable, "-c", code], check=False)
+    assert done.returncode == 3  # killed inside the driver write
+
+    d = alias_dict_df(spark)
+    streaming.incremental_kg_edges(spark, f"{src}/slice*", out, ck, d)
+    cat = Catalog(spark, out)
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "weight"]
+    got = cat.read(streaming.KG_EDGES_TABLE).select(*cols).collect()
+    want = pipeline.kg_edges_df(spark, tiny_transcripts, d).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    debris = [
+        e
+        for p in (out, cat.path(streaming.KG_EDGES_TABLE))
+        for e in os.listdir(p)
         if "__tmp__" in e or "__new__" in e or "__old__" in e
     ]
     assert debris == []

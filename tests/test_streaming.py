@@ -68,25 +68,35 @@ def test_streaming_drains_and_resumes(spark, tiny_transcripts, tmp_path):
 
 
 def test_streaming_merge_is_idempotent_on_redelivery(
-    spark, tiny_transcripts, tmp_path
+    spark, tiny_transcripts, tmp_path, regimes
 ):
     """Re-delivering the same slice through a FRESH checkpoint (at-least-once
-    delivery) must not duplicate edges — the MERGE key absorbs it."""
-    src = str(tmp_path / "src2")
-    out = str(tmp_path / "out2")
-    os.makedirs(src, exist_ok=True)
-    _write_slice(tiny_transcripts, f"{src}/slice1")
+    delivery) must not duplicate edges — the MERGE key absorbs it — with
+    the batch merged on the driver and in Spark."""
+    for regime in regimes():
+        src = str(tmp_path / regime / "src2")
+        out = str(tmp_path / regime / "out2")
+        os.makedirs(src, exist_ok=True)
+        _write_slice(tiny_transcripts, f"{src}/slice1")
 
-    _drain(spark, src, out, str(tmp_path / "ckA"))
-    _drain(spark, src, out, str(tmp_path / "ckB"))
-    keys = _calls(Catalog(spark, out))
-    assert len(keys) == len(set(keys))
-    assert set(keys) == _call_triples(tiny_transcripts)
+        _drain(spark, src, out, str(tmp_path / regime / "ckA"))
+        _drain(spark, src, out, str(tmp_path / regime / "ckB"))
+        keys = _calls(Catalog(spark, out))
+        assert len(keys) == len(set(keys))
+        assert set(keys) == _call_triples(tiny_transcripts)
 
 
-def test_streaming_kg_edges_match_batch(spark, tiny_transcripts, tmp_path):
+def test_streaming_kg_edges_match_batch(
+    spark, tiny_transcripts, tmp_path, regimes
+):
     """The fused streaming derivation must converge to EXACTLY the batch
-    flagship's edge set, across micro-batch splits and re-delivery."""
+    flagship's edge set, across micro-batch splits and re-delivery, with
+    the batch derived on the driver and in Spark."""
+    for regime in regimes():
+        _match_batch(spark, tiny_transcripts, tmp_path / regime)
+
+
+def _match_batch(spark, tiny_transcripts, tmp_path):
     from grepai_spark import pipeline
     from grepai_spark.synth import alias_dict_df
 
@@ -423,11 +433,11 @@ def test_daemon_trigger_reindexes_modified_turns(
 
 
 def test_same_batch_conflicting_redelivery_resolves_to_latest(
-    spark, tiny_transcripts, tmp_path
+    spark, tiny_transcripts, tmp_path, regimes
 ):
     """Both versions of a turn landing in ONE micro-batch must resolve to
-    the latest ts deterministically (streaming._latest_version), not race
-    two versions into the merge."""
+    the latest ts deterministically (streaming._latest_version and its
+    driver twin _latest_rows), not race two versions into the merge."""
     import datetime
 
     from pyspark.sql import functions as F
@@ -435,62 +445,68 @@ def test_same_batch_conflicting_redelivery_resolves_to_latest(
     from grepai_spark import pipeline
     from grepai_spark.synth import alias_dict_df
 
-    src = str(tmp_path / "csrc")
-    out = str(tmp_path / "cout")
-    ck = str(tmp_path / "cck")
-    os.makedirs(src, exist_ok=True)
-    d = alias_dict_df(spark)
+    for regime in regimes():
+        src = str(tmp_path / regime / "csrc")
+        out = str(tmp_path / regime / "cout")
+        ck = str(tmp_path / regime / "cck")
+        os.makedirs(src, exist_ok=True)
+        d = alias_dict_df(spark)
 
-    mod = spark.createDataFrame(
-        [("conv-a", 1, "assistant", "edited: call QueryParser", "",
-          datetime.datetime(2024, 1, 2))],
-        schema=tiny_transcripts.schema,
-    )
-    # one drain, both files available: maxFilesPerTrigger=4 puts the
-    # original and the modification in the same trigger
-    _write_slice(tiny_transcripts, f"{src}/slice1")
-    _write_slice(mod, f"{src}/slice2")
-    streaming.incremental_kg_edges(spark, f"{src}/slice*", out, ck, d)
+        mod = spark.createDataFrame(
+            [("conv-a", 1, "assistant", "edited: call QueryParser", "",
+              datetime.datetime(2024, 1, 2))],
+            schema=tiny_transcripts.schema,
+        )
+        # one drain, both files available: maxFilesPerTrigger=4 puts the
+        # original and the modification in the same trigger
+        _write_slice(tiny_transcripts, f"{src}/slice1")
+        _write_slice(mod, f"{src}/slice2")
+        streaming.incremental_kg_edges(spark, f"{src}/slice*", out, ck, d)
 
-    truth_t = tiny_transcripts.where(
-        ~((F.col("conv_id") == "conv-a") & (F.col("turn_idx") == 1))
-    ).unionByName(mod)
-    want = _edge_set(pipeline.kg_edges_df(spark, truth_t, d))
-    got = _edge_set(
-        Catalog(spark, out)
-        .read(streaming.KG_EDGES_TABLE)
-        .select("subj", "pred", "obj", "conv_id", "turn_idx")
-    )
-    assert got == want
+        truth_t = tiny_transcripts.where(
+            ~((F.col("conv_id") == "conv-a") & (F.col("turn_idx") == 1))
+        ).unionByName(mod)
+        want = _edge_set(pipeline.kg_edges_df(spark, truth_t, d))
+        got = _edge_set(
+            Catalog(spark, out)
+            .read(streaming.KG_EDGES_TABLE)
+            .select("subj", "pred", "obj", "conv_id", "turn_idx")
+        )
+        assert got == want
 
 
-def test_streaming_kg_edges_match_duckdb_oracle_at_sf(spark, tmp_path):
+def test_streaming_kg_edges_match_duckdb_oracle_at_sf(
+    spark, tmp_path, regimes
+):
     """W2 locked to the driver's truth (VERDICT r4 #7): the sf0.01 corpus
     replayed as micro-batches through incremental_kg_edges must converge to
     row-for-row the same edge set the batch kg_edges DuckDB oracle
     computes — the same cross-engine check the driver runs on the batch
-    query, applied to the streaming plane's merged table."""
+    query, applied to the streaming plane's merged table, with each batch
+    derived on the driver and in Spark."""
     import duckdb
 
     from grepai_spark import oracles
     from grepai_spark.synth import alias_dict_df, load_transcripts
 
     sf_dir = "/root/testdata/sf0.01"
-    src = str(tmp_path / "sfsrc")
-    out = str(tmp_path / "sfout")
-    ck = str(tmp_path / "sfck")
-    # replay the corpus as 6 files -> maxFilesPerTrigger=4 gives 2 batches
-    load_transcripts(spark, sf_dir).repartition(6).write.parquet(src)
-    streaming.incremental_kg_edges(
-        spark, src, out, ck, alias_dict_df(spark)
-    )
-    got = sorted(
-        (r["subj"], r["pred"], r["obj"], r["conv_id"], r["turn_idx"],
-         round(r["weight"], 6))
-        for r in Catalog(spark, out)
-        .read(streaming.KG_EDGES_TABLE)
-        .collect()
-    )
+    got = {}
+    for regime in regimes():
+        src = str(tmp_path / regime / "sfsrc")
+        out = str(tmp_path / regime / "sfout")
+        ck = str(tmp_path / regime / "sfck")
+        # replay the corpus as 6 files -> maxFilesPerTrigger=4 gives 2 batches
+        load_transcripts(spark, sf_dir).repartition(6).write.parquet(src)
+        streaming.incremental_kg_edges(
+            spark, src, out, ck, alias_dict_df(spark)
+        )
+        got[regime] = sorted(
+            (r["subj"], r["pred"], r["obj"], r["conv_id"], r["turn_idx"],
+             round(r["weight"], 6))
+            for r in Catalog(spark, out)
+            .read(streaming.KG_EDGES_TABLE)
+            .collect()
+        )
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'"
@@ -501,7 +517,7 @@ def test_streaming_kg_edges_match_duckdb_oracle_at_sf(spark, tmp_path):
             oracles.kg_edges_oracle()
         ).fetchall()
     )
-    assert got == want
+    assert got == {r: want for r in got}
 
 
 def test_stateful_stats_daemon_trigger(spark, tiny_transcripts, tmp_path):
@@ -561,13 +577,15 @@ def test_stateful_stats_daemon_trigger(spark, tiny_transcripts, tmp_path):
         q.stop()
 
 
-def test_stream_waves_run_three_jobs_and_keep_one_file_per_bucket(
-    spark, tmp_path
+def test_stream_waves_run_one_job_and_keep_one_file_per_bucket(
+    spark, tmp_path, monkeypatch
 ):
     """Waves that re-touch the same buckets (an edited first turn and a
-    new turn per conversation) each run at most 3 Spark jobs, counted by
-    the query's job group, and leave every sink bucket one parquet file;
-    the sink equals the batch kg_edges_df of the latest turns."""
+    new turn per conversation) each run at most 1 Spark job, counted by
+    the query's job group, the first (sink-creating) wave included, and
+    no Python UDF (the edge-detector UDF cannot be built); every sink
+    bucket is one parquet file, and the sink equals the batch
+    kg_edges_df of the latest turns."""
     import datetime
 
     from conftest import TINY_ROWS
@@ -581,6 +599,10 @@ def test_stream_waves_run_three_jobs_and_keep_one_file_per_bucket(
     sc = spark.sparkContext
     latest = {(r[0], r[1]): r for r in TINY_ROWS}
     convs = sorted({r[0] for r in TINY_ROWS})
+
+    def no_udf(amap):
+        raise AssertionError("a wave that fits built the edge-detector UDF")
+
     for wave in range(6):
         ts = datetime.datetime(2024, 2, 1) + datetime.timedelta(hours=wave)
         rows = list(latest.values()) if wave == 0 else [
@@ -595,14 +617,15 @@ def test_stream_waves_run_three_jobs_and_keep_one_file_per_bucket(
         _write_slice(
             spark.createDataFrame(rows, TRANSCRIPTS), f"{src}/slice{wave}"
         )
-        q = streaming.incremental_kg_edges(
-            spark, f"{src}/slice*", out, ck, d
-        )
+        with monkeypatch.context() as m:
+            m.setattr(extract, "make_edge_detector", no_udf)
+            q = streaming.incremental_kg_edges(
+                spark, f"{src}/slice*", out, ck, d
+            )
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
         assert len(q.recentProgress) == 1
-        if wave:  # the first batch creates the sink with a Spark write
-            assert len(jobs) <= 3, f"wave {wave}: {len(jobs)} jobs"
+        assert len(jobs) <= 1, f"wave {wave}: {len(jobs)} jobs"
 
     table_dir = os.path.join(out, streaming.KG_EDGES_TABLE)
     files = {
@@ -620,3 +643,81 @@ def test_stream_waves_run_three_jobs_and_keep_one_file_per_bucket(
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.select(*cols).collect())
     )
+
+
+def test_adversarial_micro_batch_matches_batch_in_both_regimes(
+    spark, tiny_transcripts, tmp_path, regimes, monkeypatch
+):
+    """One micro-batch of hostile rows: NULL and empty text and tool, a
+    non-ASCII character beside an alias, an alias inside a ``` fence,
+    versions of a turn with equal ts that differ only in text or tool
+    (strings ordered as UTF-8 bytes: U+1F600 sorts above U+FF5E, the
+    reverse of UTF-16 order), and versions with a NULL role. In both
+    regimes the sink equals kg_edges_df of the latest versions, and the
+    latest versions are Spark's _latest_version pick."""
+    import datetime
+
+    from grepai_spark import pipeline
+    from grepai_spark.schemas import TRANSCRIPTS
+    from grepai_spark.synth import alias_dict_df
+
+    t0 = datetime.datetime(2024, 3, 1)
+    t1 = t0 + datetime.timedelta(seconds=1)
+    one = [
+        ("adv-1", 0, "user", None, None, t0),
+        ("adv-1", 1, "user", "", "", t0),
+        ("adv-1", 2, "assistant", None, "payments.charge", t0),
+        ("adv-1", 3, "user", "", "auth.register", t0),
+        ("adv-1", 4, "user", "héllo—FetchData, éhash_join", None, t0),
+        ("adv-1", 5, "user", "```FetchData``` then MergeSort", "", t0),
+    ]
+    versions = [
+        # equal ts and role, text differs: the UTF-8 byte order decides
+        ("adv-2", 0, "user", "～ FetchData", None, t0),
+        ("adv-2", 0, "user", "😀 hash_join", None, t0),
+        # equal ts, role and text, tool differs: NULL < '' < a tool
+        ("adv-2", 1, "user", "run MergeSort", None, t0),
+        ("adv-2", 1, "user", "run MergeSort", "diagnostics.trace", t0),
+        ("adv-2", 1, "user", "run MergeSort", "", t0),
+        # a later ts wins over larger content
+        ("adv-2", 2, "user", "zz FetchData", "auth.register", t0),
+        ("adv-2", 2, "user", "aa QueryParser", None, t1),
+        # a NULL role is the lowest role; a NULL-role turn keeps NULL subj
+        ("adv-3", 0, None, "zz FetchData", "payments.charge", t0),
+        ("adv-3", 0, "tool", "nothing here", None, t0),
+        ("adv-3", 1, None, "QueryParser ok", "diagnostics.trace", t0),
+        # a redelivered tiny turn: its stale tool edge must go
+        ("conv-a", 1, "assistant", "now MergeSort", None, t1),
+    ]
+    latest = one + [versions[i] for i in (1, 3, 6, 8, 9, 10)]
+    batch = spark.createDataFrame(one + versions, TRANSCRIPTS)
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    assert sorted(
+        map(tuple, streaming._latest_version(batch).select(*cols).collect())
+    ) == sorted(latest)
+
+    spark_picks = []
+    real = streaming._latest_version
+    monkeypatch.setattr(
+        streaming, "_latest_version",
+        lambda b: spark_picks.append(b) or real(b),
+    )
+    truth = tiny_transcripts.where(
+        "NOT (conv_id = 'conv-a' AND turn_idx = 1)"
+    ).unionByName(spark.createDataFrame(latest, TRANSCRIPTS))
+    for regime in regimes():
+        spark_picks.clear()
+        src = str(tmp_path / regime / "src")
+        out = str(tmp_path / regime / "out")
+        ck = str(tmp_path / regime / "ck")
+        d = alias_dict_df(spark)
+        _write_slice(tiny_transcripts, f"{src}/slice1")
+        streaming.incremental_kg_edges(spark, f"{src}/slice*", out, ck, d)
+        _write_slice(batch, f"{src}/slice2")
+        streaming.incremental_kg_edges(spark, f"{src}/slice*", out, ck, d)
+        assert bool(spark_picks) == (regime == "distributed")
+        got = _edge_set(Catalog(spark, out).read(streaming.KG_EDGES_TABLE))
+        want = _edge_set(pipeline.kg_edges_df(spark, truth, d))
+        assert ("tool", "calls", "payments.charge", "adv-3", 0) not in want
+        assert (None, "calls", "diagnostics.trace", "adv-3", 1) in want
+        assert got == want
